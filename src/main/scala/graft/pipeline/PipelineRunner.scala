@@ -21,6 +21,22 @@ import org.apache.spark.sql.types.StructType
   * same single shuffle the reference performs (PrePartitionOperator).
   * All control-plane work (routing, schema merge, DDL) is O(#tables) on
   * the driver, never O(rows).
+  *
+  * Routed writes are held, not written at once — the reference's sink
+  * writer likewise buffers until a FlushEvent, which SchemaOperator emits
+  * before every DDL. A held write joins the most recent one when both
+  * target the same sink table with the same schema (`unionByName`), so a
+  * sink table that several source tables or DDL segments feed gets one
+  * repartition and one `sink.write` per schema epoch instead of one per
+  * (source table × segment) — on a copy-on-write sink every write costs a
+  * fixed set of Spark jobs whatever its size. Held writes flush in
+  * arrival order (1) before any derived schema change reaches the
+  * registry or sink, and (2) when the outermost [[deferWrites]] scope
+  * ends: the end of a [[processBatch]] call made on its own, or the end
+  * of a streaming micro-batch's table loop. Only adjacent writes merge and
+  * every schema change flushes first, so each sink sees the same sequence
+  * of schema changes and data, in fewer writes; inside a merged write,
+  * per-key resolution follows `__seq` (log order).
   */
 final class PipelineRunner(
     spark: SparkSession,
@@ -157,11 +173,9 @@ final class PipelineRunner(
               // against the least-common schema, never a second
               // CreateTable (SchemaCoordinator.deduceEvolvedSchemaChanges)
               val merged = SchemaMerging.leastCommonTableInfo(Seq(existing, transformed))
-              schemaDiff(sinkId, existing.schema, merged.schema)
-                .foreach(ev => registry.applyTo(ev)(sink.applySchemaChange))
+              schemaDiff(sinkId, existing.schema, merged.schema).foreach(applyToSink)
             case None =>
-              registry.applyTo(CreateTableEvent(sinkId, transformed))(
-                sink.applySchemaChange)
+              applyToSink(CreateTableEvent(sinkId, transformed))
           }
         }
       case other =>
@@ -212,7 +226,7 @@ final class PipelineRunner(
           val events =
             if (depCount(sinkId) > 1) mergedDiff(sinkId)
             else derived(sinkId)
-          events.foreach(ev => registry.applyTo(ev)(sink.applySchemaChange))
+          events.foreach(applyToSink)
         }
     }
   }
@@ -262,7 +276,7 @@ final class PipelineRunner(
       if (!routedTables(t) && !sinkSchemas.contains(t)) sinkSchemas(t) = tinfos(t)
     }
     sinkSchemas.foreach { case (sinkId, info) =>
-      registry.applyTo(CreateTableEvent(sinkId, info))(sink.applySchemaChange)
+      applyToSink(CreateTableEvent(sinkId, info))
     }
   }
 
@@ -349,7 +363,78 @@ final class PipelineRunner(
     finally restoreSessionZone()
   }
 
-  def processBatch(batch: SourceBatch): Unit = {
+  /** A routed write waiting for the flush barrier: the coerced changelog
+    * frame(s) for one sink table under one schema.
+    */
+  private final class HeldWrite(val sinkId: TableId, val info: TableInfo,
+      var frame: DataFrame)
+
+  private val held = scala.collection.mutable.ArrayBuffer.empty[HeldWrite]
+  private var deferDepth = 0
+
+  /** Run `body` with routed writes held until it returns, then flush them
+    * (class scaladoc, "Scale notes"). A nested scope joins the outer one;
+    * on failure the held writes are dropped — the batch replays whole.
+    */
+  private[graft] def deferWrites(body: => Unit): Unit = {
+    deferDepth += 1
+    try {
+      body
+      if (deferDepth == 1) flushWrites()
+    } finally {
+      deferDepth -= 1
+      if (deferDepth == 0) held.clear()
+    }
+  }
+
+  /** Every derived schema change reaches the registry and the sink
+    * through here, behind the held writes it must follow.
+    */
+  private def applyToSink(e: SchemaChangeEvent): Unit = {
+    flushWrites()
+    registry.applyTo(e)(sink.applySchemaChange)
+  }
+
+  private def hold(sinkId: TableId, frame: DataFrame, info: TableInfo): Unit =
+    held.lastOption match {
+      case Some(h) if h.sinkId == sinkId && h.info == info =>
+        h.frame = h.frame.unionByName(frame)
+      case _ => held += new HeldWrite(sinkId, info, frame)
+    }
+
+  private def flushWrites(): Unit = {
+    val writes = held.toList
+    held.clear()
+    writes.foreach(h => sink.write(h.sinkId, prePartition(h.sinkId, h.frame, h.info), h.info))
+  }
+
+  /** PrePartition analog (RegularPrePartitionOperator): hash-distribute
+    * per the configured strategy so each sink partition owns a disjoint
+    * key set (the SINK_DEFINED-only validation for key-declaring sinks
+    * already ran at construction, below the class body — compose time,
+    * like the reference).
+    */
+  private def prePartition(sinkId: TableId, coerced: DataFrame, info: TableInfo): DataFrame =
+    if (pipeline.parallelism <= 1) coerced
+    else pipeline.partitionStrategy match {
+      case PartitionStrategy.PrimaryKey if info.primaryKeys.nonEmpty =>
+        coerced.repartition(pipeline.parallelism, info.primaryKeys.map(col): _*)
+      case PartitionStrategy.TableIdHash =>
+        coerced.repartition(pipeline.parallelism, lit(sinkId.identifier))
+      case PartitionStrategy.SinkDefined(explicit) =>
+        // explicit keys from the pipeline def win; otherwise the sink's
+        // declared keys; otherwise the default provider (primary-key
+        // hashing — DefaultDataChangeEventHashFunctionProvider)
+        val keys = Some(explicit).filter(_.nonEmpty)
+          .orElse(sink.sinkDefinedPartitionKeys(sinkId, info).filter(_.nonEmpty))
+          .getOrElse(info.primaryKeys)
+        if (keys.nonEmpty)
+          coerced.repartition(pipeline.parallelism, keys.map(col): _*)
+        else coerced
+      case _ => coerced
+    }
+
+  def processBatch(batch: SourceBatch): Unit = deferWrites {
     batch.schemaChanges.foreach(handleSchemaChange)
     if (pipeline.batchMode && !batchCreatesEmitted && batch.data.nonEmpty) {
       emitMergedBatchCreates()
@@ -360,34 +445,7 @@ final class PipelineRunner(
       router.route(tableId).foreach { sinkId =>
         val info = registry.evolvedInfo(sinkId).getOrElse(
           throw new IllegalStateException(s"no CreateTable seen for $sinkId"))
-        val exploded = Changelog.explode(transformed)
-        val coerced = coerceExploded(exploded, info.schema)
-        // PrePartition analog (RegularPrePartitionOperator): hash-distribute
-        // per the configured strategy so each sink partition owns a
-        // disjoint key set (the SINK_DEFINED-only validation for
-        // key-declaring sinks already ran at construction, below the
-        // class body — compose time, like the reference)
-        val sinkKeys = sink.sinkDefinedPartitionKeys(sinkId, info)
-        val partitioned =
-          if (pipeline.parallelism <= 1) coerced
-          else pipeline.partitionStrategy match {
-            case PartitionStrategy.PrimaryKey if info.primaryKeys.nonEmpty =>
-              coerced.repartition(pipeline.parallelism, info.primaryKeys.map(col): _*)
-            case PartitionStrategy.TableIdHash =>
-              coerced.repartition(pipeline.parallelism, lit(sinkId.identifier))
-            case PartitionStrategy.SinkDefined(explicit) =>
-              // explicit keys from the pipeline def win; otherwise the
-              // sink's declared keys; otherwise the default provider
-              // (primary-key hashing — DefaultDataChangeEventHashFunctionProvider)
-              val keys = Some(explicit).filter(_.nonEmpty)
-                .orElse(sinkKeys.filter(_.nonEmpty))
-                .getOrElse(info.primaryKeys)
-              if (keys.nonEmpty)
-                coerced.repartition(pipeline.parallelism, keys.map(col): _*)
-              else coerced
-            case _ => coerced
-          }
-        sink.write(sinkId, partitioned, info)
+        hold(sinkId, coerceExploded(Changelog.explode(transformed), info.schema), info)
       }
     }
   }

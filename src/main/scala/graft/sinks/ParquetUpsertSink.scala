@@ -3,8 +3,10 @@ package graft.sinks
 import graft.cdc.Changelog
 import graft.model.{DropTableEvent, SchemaChangeEvent, TableId, TableInfo, TruncateTableEvent}
 import graft.schema.{SchemaMerging, SchemaRegistry}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 /** Parquet-table MERGE sink: maintains one hash-bucketed parquet directory
   * per table (`bucket=N/part-*.parquet`) and applies each changelog batch
@@ -18,7 +20,14 @@ import org.apache.spark.sql.functions._
   *    its keys touch, reads ONLY those buckets of current state
   *    (directory-level partition pruning), merges last-wins per PK, and
   *    swaps only those bucket directories. Rewrite work scales with the
-  *    touched fraction, not table size. Best for read-heavy tables.
+  *    touched fraction, not table size. Best for read-heavy tables. Each
+  *    write also pays a fixed set of Spark jobs (write-ahead, merge,
+  *    stage) whatever its size, so [[graft.pipeline.PipelineRunner]]
+  *    calls it once per sink table per schema epoch: a micro-batch's
+  *    routed writes are held and merged until the next schema change or
+  *    the end of the batch. An untouched bucket keeps the schema of the
+  *    write that last rewrote it; reads coerce every bucket onto the
+  *    current schema.
   *  - '''merge-on-read''' (`mergeOnRead = true`): a batch APPENDS its
   *    changelog rows as a delta file set — no read, no merge, no window;
   *    the cheapest possible ingest (the Paimon-LSM / Hudi-MOR profile).
@@ -295,10 +304,9 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
       if (touched.isEmpty) { tmpBatch.foreach(t => deleteRecursively(new java.io.File(t))); return }
 
       // read ONLY the touched buckets — partition pruning keeps untouched
-      // directories off the scan entirely
-      val cur = spark.read.parquet(p).where(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-      // existing rows rank below every batch change (seq -1)
-      val curCl = bucketOf(SchemaMerging.coerce(cur.drop(BucketCol), target))
+      // directories off the scan entirely; existing rows rank below every
+      // batch change (seq -1)
+      val curCl = bucketOf(readBase(p, touched, Some(target)))
         .withColumn(Changelog.OpCol, lit("+I"))
         .withColumn(Changelog.SeqCol, lit(-1L))
       val merged = Changelog.materialize(curCl.unionByName(staged), info.primaryKeys)
@@ -308,6 +316,49 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
       tmpBatch.foreach(t => deleteRecursively(new java.io.File(t)))
     }
   }
+
+  /** Current rows of the given base buckets, coerced onto `target`
+    * (default: the least-common schema of the buckets read). A merge
+    * rewrites only the buckets it touches, so after a widening — an INT
+    * shard and a BIGINT shard routed into one table — bucket files of
+    * different schemas sit side by side, and a plain read of the table
+    * (one file's schema) would fail on the others. Every bucket directory
+    * holds the output of one write, whose Spark schema is stamped in its
+    * parquet footers: buckets group by that schema (driver-side footer
+    * reads, no Spark job), each group is read with its own schema (no
+    * inference job) pruned to its buckets, then coerced — one scan per
+    * distinct schema.
+    */
+  private def readBase(p: String, buckets: Seq[Int],
+      target: Option[StructType] = None): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val groups = buckets.sorted
+      .flatMap(b => footerSchema(new java.io.File(p, s"$BucketCol=$b"), conf).map(_ -> b))
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._2.head)
+    lazy val to = target.getOrElse(SchemaMerging.leastCommonSchema(groups.map(_._1)))
+    groups.map { case (schema, bs) =>
+      val group = spark.read.schema(schema.add(BucketCol, IntegerType)).parquet(p)
+        .where(col(BucketCol).isin(bs.map(Integer.valueOf): _*))
+        .drop(BucketCol)
+      SchemaMerging.coerce(group, to)
+    }.reduceOption(_ unionByName _)
+      // every requested bucket is new to the base
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], to))
+  }
+
+  /** The Spark schema a bucket directory's write stamped into its parquet
+    * footer (None for a directory holding no parquet file).
+    */
+  private def footerSchema(bucketDir: java.io.File,
+      conf: org.apache.hadoop.conf.Configuration): Option[StructType] =
+    Option(bucketDir.listFiles()).toSeq.flatten.find(_.getName.endsWith(".parquet")).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+      try DataType.fromJson(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+      finally r.close()
+    }
 
   private def listBuckets(dir: String): Seq[Int] =
     Option(new java.io.File(dir).listFiles()).toSeq.flatten
@@ -423,7 +474,7 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
     if (dirs.isEmpty) {
-      spark.read.parquet(p).drop(BucketCol)
+      readBase(p, listBuckets(p))
     } else {
       val pks = readMeta(p).flatMap(_.get("pks"))
         .map(_.split(",").filter(_.nonEmpty).toSeq)
@@ -432,7 +483,7 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
       val all =
         if (!baseExists) deltas
         else {
-          val base = spark.read.parquet(p).drop(BucketCol)
+          val base = readBase(p, listBuckets(p))
             .withColumn(Changelog.OpCol, lit("+I"))
             .withColumn(Changelog.SeqCol, lit(-1L))
           // base written before a schema change lacks added columns (and

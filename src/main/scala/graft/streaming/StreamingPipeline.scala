@@ -69,6 +69,11 @@ final class StreamingPipeline(
     */
   private[graft] var persistedBatches = 0
 
+  /** Wire DDL statements skipped because they did not parse — driver-side
+    * counter beside the stderr line each skip prints.
+    */
+  private[graft] var skippedDdlStatements = 0
+
   /** Start a streaming query over debezium-JSON lines. The source table's
     * schema must be known (CDC JSON carries no types); the CreateTable
     * event is synthesized on the first batch — unless checkpointed schema
@@ -534,6 +539,7 @@ final class StreamingPipeline(
                 case _ => () // ALTER etc. for a never-created table: skip
               } catch {
                 case e: Exception =>
+                  skippedDdlStatements += 1
                   System.err.println(s"[graft] skipping unparseable DDL for " +
                     s"undeclared table ${r.getString(2)}: ${e.getMessage}")
               }
@@ -542,7 +548,12 @@ final class StreamingPipeline(
 
         val activeTables = tables ++ dynamicTables.toSeq
 
-        activeTables.foreach { case (tableId, info) =>
+        // One flush scope per micro-batch: routed writes are held across
+        // tables and segments and reach the sink at the next schema change
+        // or when the loop ends (PipelineRunner, "Scale notes"), so this
+        // phase is where the write jobs run — while `sequenced` is still
+        // persisted.
+        timed("decode+write")(runner.deferWrites(activeTables.foreach { case (tableId, info) =>
           // On a single-table stream every record is this table's; on a
           // multi-table topic, route by the materialized envelope table.
           // DDL naming no table at all is accepted only in single-table
@@ -568,10 +579,8 @@ final class StreamingPipeline(
             // added/renamed by earlier DDL in this very batch parse from this
             // row on
             val cur = upstream.evolvedInfo(tableId).getOrElse(info)
-            timed("decode+write") {
-              runner.processBatch(
-                SourceBatch(Nil, Seq(tableId -> decodeSegment(segment, cur.schema))))
-            }
+            runner.processBatch(
+              SourceBatch(Nil, Seq(tableId -> decodeSegment(segment, cur.schema))))
           }
 
           if (ddlRows.isEmpty) emit(tblData)
@@ -588,6 +597,7 @@ final class StreamingPipeline(
               val events =
                 try DdlParser.parse(r.getString(1), tableId, ddlTypes)
                 catch { case e: Exception =>
+                  skippedDdlStatements += 1
                   System.err.println(s"[graft] skipping unparseable DDL at seq $at: " +
                     s"${r.getString(1).take(200)} (${e.getMessage})")
                   Nil
@@ -599,7 +609,7 @@ final class StreamingPipeline(
             val tail = tblData.where(col(Changelog.SeqCol) > lower)
             if (!tail.isEmpty) emit(tail)
           }
-        }
+        }))
         if (!fastPath) sequenced.unpersist(false)
         timed("schema-persist") { persistSchemaPlanes(checkpointLocation) }
         ()

@@ -911,4 +911,43 @@ class PipelineSpec extends SparkSpec {
     assert(digitsById(5L) === null)
     assert(digitsById(6L) === 3.14)
   }
+
+  test("deferred writes merge only adjacent writes to the same sink table") {
+    // db.a routes to db.x AND db.y, db.b to db.x: a write to db.x joins
+    // the held one only while it is the most recent, so a fan-out write in
+    // between keeps the sink's line order (and per-sink write order)
+    val (a, b) = (TableId.parse("db.a"), TableId.parse("db.b"))
+    val (x, y) = (TableId.parse("db.x"), TableId.parse("db.y"))
+    val kv = info("id" -> LongType, "v" -> StringType)
+    val script = Seq(CreateTableEvent(a, kv), CreateTableEvent(b, kv),
+      DataChangeEvent.insert(a, Row(1L, "a1")),
+      DataChangeEvent.insert(b, Row(2L, "b1")),
+      DataChangeEvent.insert(a, Row(3L, "a2")),
+      FlushEvent(Nil),
+      DataChangeEvent.insert(b, Row(4L, "b2")),
+      DataChangeEvent.insert(a, Row(5L, "a3")))
+    val ref = new RefFormatSink
+    val writes = scala.collection.mutable.Buffer.empty[TableId]
+    val sink = new graft.sinks.DataSink {
+      override def applySchemaChange(e: SchemaChangeEvent): Unit = ref.applySchemaChange(e)
+      override def write(t: TableId, df: org.apache.spark.sql.DataFrame, i: TableInfo): Unit = {
+        writes += t; ref.write(t, df, i)
+      }
+    }
+    val pd = PipelineDef(SourceDef("values", Map.empty),
+      SinkDef("values", Map.empty), routes = Seq(
+        graft.route.RouteRule("db.a", "db.x"), graft.route.RouteRule("db.a", "db.y"),
+        graft.route.RouteRule("db.b", "db.x")))
+    new PipelineRunner(spark, pd, new ValuesSource(script), sink).run()
+    def ins(t: TableId, id: Long, v: String) =
+      EventRender.dataChange(t, Nil, Seq(id.toString, v), "INSERT")
+    assert(ref.lines.take(2).map(_.takeWhile(_ != ',')) ===
+      Seq("CreateTableEvent{tableId=db.x", "CreateTableEvent{tableId=db.y"))
+    assert(ref.lines.drop(2) === Seq(
+      // batch 1: a -> x, a -> y, b -> x; the y write separates the x writes
+      ins(x, 1, "a1"), ins(x, 3, "a2"), ins(y, 1, "a1"), ins(y, 3, "a2"), ins(x, 2, "b1"),
+      // batch 2: b -> x and a -> x are adjacent and merge; then a -> y
+      ins(x, 4, "b2"), ins(x, 5, "a3"), ins(y, 5, "a3")))
+    assert(writes === Seq(x, y, x, x, y))
+  }
 }

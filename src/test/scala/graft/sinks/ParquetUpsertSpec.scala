@@ -394,6 +394,43 @@ class ParquetUpsertSpec extends SparkSpec {
     assert(!new java.io.File(dir, "db/t").exists())
   }
 
+  test("COW widening: INT and BIGINT bucket files coexist after a partial rewrite") {
+    // an INT shard and a BIGINT shard route into one 4-bucket table: the
+    // INT bulk write fills every bucket, the widened write rewrites only
+    // the bucket of its key, so INT and BIGINT files sit side by side;
+    // the next merge and the read must widen the INT buckets
+    import graft.model.{CreateTableEvent, DataChangeEvent, FlushEvent}
+    import graft.pipeline.{PipelineDef, PipelineRunner, SinkDef, SourceDef}
+    import graft.sources.ValuesSource
+    import org.apache.spark.sql.Row
+    val dir = java.nio.file.Files.createTempDirectory("pqsink_widen").toFile
+    val sink = new ParquetUpsertSink(spark, dir.getAbsolutePath, numBuckets = 4)
+    val intShard = TableId.parse("db.orders_0")
+    val longShard = TableId.parse("db.orders_1")
+    def shard(qty: DataType) = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("qty", qty))),
+      primaryKeys = Seq("id"))
+    // a BIGINT-shard key outside bucket 0 (the sink buckets on
+    // pmod(hash(pk), n)), so the lowest bucket directory stays INT
+    val wideKey = spark.range(100, 200)
+      .where(pmod(hash(col("id")), lit(4)) =!= 0).head().longValue
+    val script = Seq(CreateTableEvent(intShard, shard(IntegerType))) ++
+      (1 to 40).map(i => DataChangeEvent.insert(intShard, Row(i.toLong, i))) ++ Seq(
+        CreateTableEvent(longShard, shard(LongType)),
+        DataChangeEvent.insert(longShard, Row(wideKey, 5000000000L)),
+        FlushEvent(Nil),
+        // small write: two keys, both tables, INT and BIGINT buckets
+        DataChangeEvent.update(intShard, Row(1L, 1), Row(1L, -1)),
+        DataChangeEvent.update(longShard, Row(wideKey, 5000000000L), Row(wideKey, 6000000000L)))
+    val pd = PipelineDef(SourceDef("values", Map.empty), SinkDef("parquet", Map.empty),
+      routes = Seq(graft.route.RouteRule("db.orders_\\.*", "dw.orders")))
+    new PipelineRunner(spark, pd, new ValuesSource(script), sink).run()
+    val out = sink.read(TableId.parse("dw.orders"))
+    assert(out.schema("qty").dataType === LongType)
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      ((2L to 40L).map(i => (i, i)) ++ Seq((1L, -1L), (wideKey, 6000000000L))).toSet)
+  }
+
   test("udf registry: lifecycle open runs once, eval callable from SQL") {
     object CountingUdf extends ScalarUdf1[String, Int] {
       var opened = 0

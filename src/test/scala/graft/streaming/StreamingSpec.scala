@@ -950,6 +950,95 @@ class StreamingSpec extends SparkSpec {
     assert(sink.results(tidB).toSet === Set("db.orders:10;150"))
   }
 
+  test("routed writes defer to the flush barrier: one COW write per sink table per schema epoch") {
+    // 3 canal shards merge into one copy-on-write table beside one
+    // pass-through table; batch 1 carries an ADD COLUMN on a shard
+    val dir = java.nio.file.Files.createTempDirectory("canal_defer").toFile
+    val feed = new java.io.File(dir, "feed"); feed.mkdirs()
+    val shards = (1 to 3).map(i => TableId.parse(s"app.orders_$i"))
+    val items = TableId.parse("app.items")
+    val orders = TableId.parse("dw.orders")
+    val orderInfo = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("qty", LongType))),
+      primaryKeys = Seq("id"))
+    val itemInfo = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("name", StringType))),
+      primaryKeys = Seq("id"))
+    def row(t: String, op: String, data: String, old: String = "null") =
+      s"""{"old":$old,"data":[$data],"type":"$op","database":"app","table":"$t","pkNames":["id"]}"""
+    def writeFeed(name: String, mtime: Long, lines: String*): Unit = {
+      val f = new java.io.File(feed, name)
+      java.nio.file.Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
+      f.setLastModified(mtime)
+    }
+    writeFeed("f1.json", 1000000L,
+      row("orders_3", "INSERT", """{"id":5,"qty":50}"""),
+      row("orders_1", "INSERT", """{"id":1,"qty":10}"""),
+      row("orders_2", "INSERT", """{"id":2,"qty":20}"""),
+      // the same key again, later in the log, from another shard: wins
+      row("orders_1", "INSERT", """{"id":5,"qty":51}"""),
+      row("items", "INSERT", """{"id":100,"name":"pen"}"""))
+    writeFeed("f2.json", 2000000L,
+      row("orders_1", "UPDATE", """{"id":1,"qty":11}""", """[{"id":1,"qty":10}]"""),
+      row("orders_2", "INSERT", """{"id":3,"qty":30}"""),
+      """{"isDdl":true,"sql":"ALTER TABLE orders_2 ADD COLUMN note VARCHAR(20)","database":"app","table":"orders_2"}""",
+      row("orders_2", "INSERT", """{"id":4,"qty":40,"note":"n4"}"""),
+      row("orders_3", "INSERT", """{"id":6,"qty":60}"""),
+      row("items", "UPDATE", """{"id":100,"name":"pencil"}""", """[{"id":100,"name":"pen"}]"""))
+
+    // write calls per (micro-batch id, sink table)
+    final class WriteCountingSink(val inner: graft.sinks.ParquetUpsertSink)
+        extends graft.sinks.DataSink {
+      val writes = scala.collection.mutable.Map.empty[(String, TableId), Int]
+      override def applySchemaChange(e: graft.model.SchemaChangeEvent): Unit =
+        inner.applySchemaChange(e)
+      override def write(tableId: TableId, exploded: org.apache.spark.sql.DataFrame,
+          info: TableInfo): Unit = {
+        val batchId = spark.sparkContext.getLocalProperty("streaming.sql.batchId")
+        writes((batchId, tableId)) = writes.getOrElse((batchId, tableId), 0) + 1
+        inner.write(tableId, exploded, info)
+      }
+    }
+    val sink = new WriteCountingSink(new graft.sinks.ParquetUpsertSink(
+      spark, new java.io.File(dir, "sink").getAbsolutePath, numBuckets = 4))
+    val sp = new StreamingPipeline(spark,
+      pd.copy(routes = Seq(graft.route.RouteRule("app.orders_\\.*", "dw.orders"))), sink)
+    val q = sp.startMultiFromCanalJson(
+      StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath, maxFilesPerTrigger = Some(1)),
+      shards.map(_ -> orderInfo) :+ (items -> itemInfo))
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty)
+    // batch 0: the three shards share one write; batch 1: the ADD COLUMN
+    // splits dw.orders into the writes before and after it
+    assert(sink.writes.toMap === Map(
+      ("0", orders) -> 1, ("0", items) -> 1,
+      ("1", orders) -> 2, ("1", items) -> 1))
+    val orderRows = sink.inner.read(orders).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("qty"), Option(r.getAs[String]("note"))))
+    assert(orderRows.toSet === Set((1L, 11L, None), (2L, 20L, None), (3L, 30L, None),
+      (4L, 40L, Some("n4")), (5L, 51L, None), (6L, 60L, None)))
+    assert(sink.inner.read(items).collect().map(r => (r.getLong(0), r.getString(1))).toSeq ===
+      Seq((100L, "pencil")))
+  }
+
+  test("unparseable wire DDL is skipped, counted once, and the stream keeps flowing") {
+    val dir = java.nio.file.Files.createTempDirectory("dbz_bad_ddl").toFile
+    val lines = Seq(
+      """{"before":null,"after":{"id":1,"v":"a"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""",
+      """{"source":{"db":"db","table":"users"},"ddl":"ALTER TABLE users ADD COLUMN age FROBTYPE(3)"}""",
+      """{"before":null,"after":{"id":2,"v":"b"},"op":"c","ts_ms":2,"source":{"db":"db","table":"users"}}""")
+    java.nio.file.Files.write(new java.io.File(dir, "feed.json").toPath,
+      lines.mkString("\n").getBytes("UTF-8"))
+    val sink = new ValuesDatabase
+    val sp = new StreamingPipeline(spark, pd, sink)
+    sp.startFromDebeziumJson(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), tid, tableInfo)
+      .awaitTermination(60000)
+    assert(sp.skippedDdlStatements === 1)
+    assert(sp.runner.registry.evolvedInfo(tid).get.fieldNames === Seq("id", "v"))
+    assert(sink.results(tid).toSet === Set("db.users:1;a", "db.users:2;b"))
+  }
+
   test("registry state snapshot/restore roundtrip") {
     import graft.model._
     import graft.schema.SchemaRegistry
