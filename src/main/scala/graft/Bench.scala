@@ -397,10 +397,8 @@ object Bench {
       val pipelineStream = new graft.streaming.StreamingPipeline(spark, pd, sink)
       val feed = graft.streaming.StreamingPipeline.fileJsonStream(
         spark, feedDir.getAbsolutePath, Some(perTrigger))
-      val q =
-        if (tableCount <= 1) pipelineStream.startFromDebeziumJson(feed, tids.head, info)
-        else pipelineStream.startMultiFromDebeziumJson(
-          feed, tids.map(_ -> info), order = order)
+      val q = pipelineStream.start(feed, graft.cdc.WireFormat.Debezium(),
+        tids.map(_ -> info), order = if (tableCount <= 1) None else order)
       val finished = q.awaitTermination(600000)
       if (!finished) { q.stop(); return StreamResult(-1L, -1L, 0, -1L) }
       tids.foreach(sink.compact(_, info)) // no-op for COW; folds deltas if MOR

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.cdc.{CanalJson, Changelog, DebeziumJson}
+import graft.cdc.{CanalJson, Changelog, DebeziumJson, WireFormat}
 import graft.model.{SchemaChangeEvent, TableId, TableInfo}
 import graft.route.Selectors
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -71,16 +71,15 @@ final class KafkaSink(
     writer: KafkaRecordWriter,
     options: Map[String, String] = Map.empty) extends DataSink {
 
-  private val valueFormat = options.getOrElse("value.format", "debezium-json")
-  require(Seq("debezium-json", "canal-json").contains(valueFormat),
-    s"unsupported value.format: $valueFormat")
+  private val valueFormat = WireFormat.parse(options.get("value.format"), Map.empty)
+  require(valueFormat != WireFormat.Mongo, s"unsupported value.format: ${valueFormat.name}")
   /** KafkaDataSinkOptions.java:105 `debezium-json.include-schema.enabled`:
     * wrap each record as {"schema":...,"payload":...} with the Connect
     * schema block (debezium-json format only).
     */
   private val includeSchema =
     options.get("debezium-json.include-schema.enabled").exists(_.toBoolean)
-  require(!includeSchema || valueFormat == "debezium-json",
+  require(!includeSchema || valueFormat.isInstanceOf[WireFormat.Debezium],
     "debezium-json.include-schema.enabled requires value.format=debezium-json")
   private val partitionStrategy = options.getOrElse("partition.strategy", "all-to-zero")
   require(Seq("all-to-zero", "hash-by-key").contains(partitionStrategy),
@@ -174,7 +173,7 @@ final class KafkaSink(
     val paired = Changelog.pair(exploded, payload).withColumn("__key", keyExpr)
     val db = tableId.namespace.orElse(tableId.schemaName).getOrElse("")
     val valued = valueFormat match {
-      case "canal-json" =>
+      case WireFormat.Canal =>
         CanalJson.encode(paired, db, tableId.table, info.primaryKeys,
           passthrough = Seq(Changelog.SeqCol, "__key"), referenceWire = true)
       case _ if includeSchema =>

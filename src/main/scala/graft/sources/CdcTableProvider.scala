@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.cdc.{Changelog, DdlParser, DebeziumJson}
+import graft.cdc.{Changelog, DdlParser, WireFormat}
 import graft.model.{CreateTableEvent, TableId}
 import org.apache.spark.sql.SQLContext
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -30,7 +30,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * The batch scan goes through the `V1Scan` bridge so decoding stays the
-  * same declarative `DebeziumJson.decode` → `Changelog.explode`
+  * same declarative `WireFormat.decode` → `Changelog.explode`
   * projection every other front end uses (one codegen'd JSON parse per
   * record — no hand-rolled row reader to drift out of sync), and
   * Catalyst still prunes/pushes over the resulting plan.
@@ -42,7 +42,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Options: `path` (directory of JSON-lines files), `schema.ddl`
   * (CREATE TABLE statement — CDC JSON carries no types), optional
-  * `dialect` for the DDL's type spellings, and `scan.startup.*`:
+  * `dialect` for the DDL's type spellings, `format` and the debezium
+  * consume options ([[graft.cdc.WireFormat.parse]]), and
+  * `scan.startup.*`:
   *
   *  - `scan.startup.mode=specific-offset` with `.file`+`.pos` filters by
   *    the envelope's OWN binlog coordinates (`source.file`/`source.pos`,
@@ -52,8 +54,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - `.pos` alone filters by the feed position `__seq` (the scalar fast
   *    path); `.gtid-set` alone is rejected — testing per-event GTID
   *    containment needs server state this batch relation does not have;
-  *  - `scan.startup.mode=timestamp` filters by the envelope
-  *    `source.ts_ms`/`ts_ms`;
+  *  - `scan.startup.mode=timestamp` filters by the envelope's event time
+  *    ([[graft.cdc.WireFormat.eventTime]]: debezium `source.ts_ms`, then
+  *    `ts_ms`; mongo `clusterTime`; canal has none and is rejected);
   *  - `initial`/`earliest-offset` read everything; `snapshot`/
   *    `latest-offset` are stream concepts and rejected here.
   */
@@ -97,34 +100,23 @@ object CdcTableProvider {
       StructField(Changelog.OpCol, StringType) :+
       StructField(Changelog.SeqCol, LongType, nullable = false))
 
-  /** Wire format of the feed (`format` option): the three envelope
-    * families the codecs cover. Defaults to debezium-json.
+  /** Wire format of the feed: the `format` option (default debezium-json)
+    * plus the debezium consume options, validated by [[WireFormat.parse]]
+    * exactly as the CLI's file sources are. The map's keys are lower-case,
+    * so option names match case-insensitively.
     */
-  private[sources] def wireFormat(options: CaseInsensitiveStringMap): String =
-    Option(options.get("format")).getOrElse("debezium-json") match {
-      case f @ ("debezium-json" | "canal-json" | "mongo-json") => f
-      case other => throw new IllegalArgumentException(
-        s"graft-cdc format must be debezium-json | canal-json | mongo-json, got: $other")
-    }
-
-  /** Debezium consume modes, mirrored from the CLI/YAML front end
-    * (graft.tools.Cli): `debezium-json.schema-include` accepts Connect
-    * schema-wrapped records ({"schema":..,"payload":..}), and
-    * `debezium-json.connect-wire.enabled` reads temporal payloads in
-    * Debezium's Connect wire forms (epoch int64 micros/millis, epoch-day
-    * int32, ISO ZonedTimestamp strings) — what a real Debezium producer
-    * emits. Both are debezium-json-only options.
-    */
-  private[sources] def debeziumConsumeOpts(
-      options: CaseInsensitiveStringMap): (Boolean, Boolean) = {
-    val si = Option(options.get("debezium-json.schema-include")).exists(_.toBoolean)
-    val cw = Option(options.get("debezium-json.connect-wire.enabled")).exists(_.toBoolean)
-    if ((si || cw) && wireFormat(options) != "debezium-json")
-      throw new IllegalArgumentException(
-        "debezium-json.schema-include / debezium-json.connect-wire.enabled " +
-          s"apply to format debezium-json only, not ${wireFormat(options)}")
-    (si, cw)
+  private[sources] def wireFormat(options: CaseInsensitiveStringMap): WireFormat = {
+    import scala.jdk.CollectionConverters._
+    WireFormat.parse(Option(options.get("format")), options.asScala.toMap)
   }
+
+  /** The envelope's event time for `scan.startup.mode=timestamp` — one
+    * definition for the batch relation and the stream.
+    */
+  private def eventTimeOf(format: WireFormat): org.apache.spark.sql.Column =
+    format.eventTime(org.apache.spark.sql.functions.col("value")).getOrElse(
+      throw new IllegalArgumentException(s"${format.name} envelopes carry no event " +
+        "timestamp this codec decodes; use scalar pos startup"))
 
   /** Apply `scan.startup.*` as a predicate over the raw (value, __seq)
     * frame, before any decode — codegen'd `get_json_object` probes, no
@@ -142,30 +134,20 @@ object CdcTableProvider {
       case StartupMode.Initial | StartupMode.Earliest => json
       case StartupMode.SpecificOffset(pos) =>
         json.where(col(Changelog.SeqCol) >= pos)
-      case StartupMode.AtBinlogOffset(o) =>
-        if (format != "debezium-json")
-          throw new IllegalArgumentException(
-            s"binlog coordinates are a debezium concept; $format feeds resume " +
-              "by scalar pos (or a mongo resume token via StreamingPipeline)")
-        if (o.file.isEmpty)
-          throw new IllegalArgumentException("graft-cdc specific-offset " +
-            "needs scan.startup.specific-offset.file + .pos (gtid-set-only " +
-            "resume needs per-event GTID state a batch relation does not have)")
-        json.where(Offsets.binlogAtOrAfter(
-          get_json_object(col("value"), "$.source.file"),
-          get_json_object(col("value"), "$.source.pos").cast(LongType), o))
-      case StartupMode.AtTimestamp(ts) => format match {
-        case "debezium-json" =>
-          json.where(coalesce(
-            get_json_object(col("value"), "$.source.ts_ms"),
-            get_json_object(col("value"), "$.ts_ms")).cast(LongType) >= ts)
-        case "mongo-json" =>
-          json.where(
-            get_json_object(col("value"), "$.clusterTime").cast(LongType) >= ts)
-        case _ => throw new IllegalArgumentException(
-          "canal-json envelopes carry no event timestamp this codec decodes; " +
-            "use scalar pos startup")
+      case StartupMode.AtBinlogOffset(o) => format match {
+        case dbz: WireFormat.Debezium =>
+          if (o.file.isEmpty)
+            throw new IllegalArgumentException("graft-cdc specific-offset " +
+              "needs scan.startup.specific-offset.file + .pos (gtid-set-only " +
+              "resume needs per-event GTID state a batch relation does not have)")
+          json.where(Offsets.binlogAtOrAfter(
+            dbz.field(col("value"), "source.file"),
+            dbz.field(col("value"), "source.pos").cast(LongType), o))
+        case other => throw new IllegalArgumentException(
+          s"binlog coordinates are a debezium concept; ${other.name} feeds resume " +
+            "by scalar pos (or a mongo resume token via StreamingPipeline)")
       }
+      case StartupMode.AtTimestamp(ts) => json.where(eventTimeOf(format) >= ts)
       case other => throw new IllegalArgumentException(
         s"graft-cdc batch relation does not support scan.startup.mode for $other " +
           "(snapshot/latest-offset are stream concepts)")
@@ -192,7 +174,8 @@ object CdcTableProvider {
         override def build(): Scan = new V1Scan {
           override def readSchema(): StructType = fullSchema
           override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-            new CdcMicroBatchStream(path, payload, options)
+            new CdcMicroBatchStream(path, payload, options,
+              org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
           override def toV1TableScan[T <: BaseRelation with TableScan](
               context: SQLContext): T =
             new BaseRelation with TableScan {
@@ -212,16 +195,7 @@ object CdcTableProvider {
                 // batch feed.
                 val session = context.sparkSession
                 val sc = session.sparkContext
-                val hp = new org.apache.hadoop.fs.Path(path)
-                val fs = hp.getFileSystem(sc.hadoopConfiguration)
-                val files =
-                  if (fs.getFileStatus(hp).isDirectory)
-                    fs.listStatus(hp).filter(_.isFile)
-                      .map(_.getPath)
-                      .filterNot(_.getName.startsWith("_"))
-                      .filterNot(_.getName.startsWith("."))
-                      .map(_.toString).sorted
-                  else Array(path)
+                val files = listFeedFiles(path, session.sessionState.newHadoopConf())
                 val lines = sc.textFile(files.mkString(","))
                   .zipWithIndex()
                   .map { case (line, idx) =>
@@ -232,23 +206,9 @@ object CdcTableProvider {
                   StructField(Changelog.SeqCol, LongType, nullable = false))))
                 // one deterministic seq per line, shared by an update's
                 // -U/+U pair (they explode from one envelope)
-                val filtered = startupFiltered(json, options)
-                // validates the debezium-only consume options per format
-                val (si, cw) = debeziumConsumeOpts(options)
-                val paired = wireFormat(options) match {
-                  case "debezium-json" =>
-                    DebeziumJson.decode(filtered, "value", payload,
-                      seqCol = Some(Changelog.SeqCol),
-                      connectWire = cw, schemaEnvelope = si)
-                      .drop("__table").drop(Changelog.MetaCol)
-                  case "canal-json" =>
-                    graft.cdc.CanalJson.decode(filtered, "value", payload,
-                      seqCol = Some(Changelog.SeqCol)).drop("__table")
-                  case "mongo-json" =>
-                    graft.cdc.MongoChangeStreamJson.decode(filtered, "value",
-                      payload, seqCol = Some(Changelog.SeqCol))
-                      .drop("__db", "__table", "__resume_token")
-                }
+                val paired = wireFormat(options)
+                  .decode(startupFiltered(json, options), payload, Some(Changelog.SeqCol))
+                  .drop(Changelog.MetaCol)
                 Changelog.explode(paired).rdd
               }
             }.asInstanceOf[T]
@@ -260,11 +220,13 @@ object CdcTableProvider {
   /** List a feed directory's data files in name order — the feed's event
     * order contract (files append with later-sorting names, rows ordered
     * within a file). Shared by the batch scan's ordering and the stream's
-    * file-granular offsets.
+    * file-granular offsets, both on the driver with the session's Hadoop
+    * conf.
     */
-  private def listFeedFiles(path: String): Seq[String] = {
+  private def listFeedFiles(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = hp.getFileSystem(conf)
     if (fs.getFileStatus(hp).isDirectory)
       fs.listStatus(hp).filter(_.isFile)
         .map(_.getPath)
@@ -290,14 +252,16 @@ object CdcTableProvider {
     * Startup modes: `initial`/`earliest-offset` read the whole feed;
     * `latest-offset` starts past the files present at query start;
     * `specific-offset.pos` skips rows below the given `__seq`;
-    * `timestamp` skips rows whose envelope `ts_ms` predates the cutoff.
+    * `timestamp` skips rows whose event time (the batch relation's
+    * [[WireFormat.eventTime]]) predates the cutoff.
     * Structured binlog coordinates need the batch relation's raw-JSON
     * predicates or [[graft.streaming.StreamingPipeline]].
     */
   private final class CdcMicroBatchStream(
       path: String,
       payload: StructType,
-      options: CaseInsensitiveStringMap)
+      options: CaseInsensitiveStringMap,
+      hadoopConf: org.apache.hadoop.conf.Configuration)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
     import scala.jdk.CollectionConverters._
 
@@ -305,20 +269,20 @@ object CdcTableProvider {
     // maxFilesPerTrigger paces batches below it (FileStreamSource's knobs)
     @volatile private var availableNowTarget: Option[Int] = None
     override def prepareForTriggerAvailableNow(): Unit =
-      availableNowTarget = Some(listFeedFiles(path).size)
+      availableNowTarget = Some(listFeedFiles(path, hadoopConf).size)
     override def getDefaultReadLimit: ReadLimit =
       Option(options.get("maxFilesPerTrigger"))
         .map(n => ReadLimit.maxFiles(n.toInt)).getOrElse(ReadLimit.allAvailable())
     override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-      val ceiling = availableNowTarget.fold(listFeedFiles(path).size)(
-        math.min(listFeedFiles(path).size, _))
+      val ceiling = availableNowTarget.fold(listFeedFiles(path, hadoopConf).size)(
+        math.min(listFeedFiles(path, hadoopConf).size, _))
       limit match {
         case mf: ReadMaxFiles =>
           FilesOffset(math.min(ceiling, start.asInstanceOf[FilesOffset].n + mf.maxFiles()))
         case _ => FilesOffset(ceiling)
       }
     }
-    override def reportLatestOffset(): Offset = FilesOffset(listFeedFiles(path).size)
+    override def reportLatestOffset(): Offset = FilesOffset(listFeedFiles(path, hadoopConf).size)
 
     private val format = wireFormat(options)
     private val (startLatest, minSeq, minTs) =
@@ -328,9 +292,7 @@ object CdcTableProvider {
         case StartupMode.Latest => (true, Long.MinValue, Long.MinValue)
         case StartupMode.SpecificOffset(pos) => (false, pos, Long.MinValue)
         case StartupMode.AtTimestamp(ts) =>
-          if (format == "canal-json") throw new IllegalArgumentException(
-            "canal-json envelopes carry no event timestamp this codec decodes; " +
-              "use scalar pos startup")
+          eventTimeOf(format) // rejects formats without an event time
           (false, Long.MinValue, ts)
         case other => throw new IllegalArgumentException(
           s"graft-cdc stream does not support $other — structured binlog " +
@@ -339,8 +301,8 @@ object CdcTableProvider {
       }
 
     override def initialOffset(): Offset =
-      FilesOffset(if (startLatest) listFeedFiles(path).size else 0)
-    override def latestOffset(): Offset = FilesOffset(listFeedFiles(path).size)
+      FilesOffset(if (startLatest) listFeedFiles(path, hadoopConf).size else 0)
+    override def latestOffset(): Offset = FilesOffset(listFeedFiles(path, hadoopConf).size)
     override def deserializeOffset(json: String): Offset =
       FilesOffset("""\d+""".r.findFirstIn(json).getOrElse(
         throw new IllegalArgumentException(s"bad graft-cdc offset: $json")).toInt)
@@ -348,15 +310,13 @@ object CdcTableProvider {
     override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
       val s = start.asInstanceOf[FilesOffset].n
       val e = end.asInstanceOf[FilesOffset].n
-      val fs = listFeedFiles(path)
+      val fs = listFeedFiles(path, hadoopConf)
       (s until math.min(e, fs.size))
         .map(i => CdcFilePartition(fs(i), i, minSeq, minTs): InputPartition).toArray
     }
 
-    override def createReaderFactory(): PartitionReaderFactory = {
-      val (si, cw) = debeziumConsumeOpts(options)
-      new CdcReaderFactory(payload, format, si, cw)
-    }
+    override def createReaderFactory(): PartitionReaderFactory =
+      new CdcReaderFactory(payload, format)
     override def commit(end: Offset): Unit = ()
     override def stop(): Unit = ()
   }
@@ -365,18 +325,12 @@ object CdcTableProvider {
       file: String, fileIdx: Int, minSeq: Long, minTs: Long) extends InputPartition
 
   /** One reader per feed file: parse each JSON line with the same
-    * catalyst Jackson machinery `from_json` uses, then explode the
-    * envelope to changelog rows exactly like the batch relation's
-    * `decode` → `Changelog.explode` pipeline for the feed's wire format —
-    * an image row is emitted only when that image exists, unknown/null
-    * ops decode as REPLACE (so schema-change envelopes, which carry no
-    * images, vanish), updates yield their -U/+U pair sharing one `__seq`,
-    * canal multi-row messages explode positionally against `old`, and
-    * mongo delete-raced updates (null post-image) drop. Stream == batch
-    * parity is pinned by CdcTableProviderSpec for every format.
+    * catalyst Jackson machinery `from_json` uses, then hand the envelope
+    * to the format's [[WireFormat.RowDecoder]] — the row-level twin of the
+    * batch relation's `decode` → `Changelog.explode` pipeline. Stream ==
+    * batch parity is pinned by CdcTableProviderSpec for every format.
     */
-  private final class CdcReaderFactory(payload: StructType, format: String,
-      schemaInclude: Boolean, connectWire: Boolean)
+  private final class CdcReaderFactory(payload: StructType, format: WireFormat)
       extends PartitionReaderFactory {
     override def createReader(p: InputPartition)
         : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
@@ -385,18 +339,8 @@ object CdcTableProvider {
       import org.apache.spark.unsafe.types.UTF8String
       val fp = p.asInstanceOf[CdcFilePartition]
       new PartitionReader[InternalRow] {
-        private val parser = new org.apache.spark.sql.graft.JsonLineParser(format match {
-          case "debezium-json" =>
-            DebeziumJson.parseSchema(payload, connectWire, schemaInclude)
-          case "canal-json" => graft.cdc.CanalJson.envelopeSchema(payload)
-          case "mongo-json" => graft.cdc.MongoChangeStreamJson.envelopeSchema(payload)
-        })
-        // wire→storage image projection (epoch ints → graft temporal
-        // encodings), shared semantics with DebeziumJson.decode's
-        // unwireSide — None when nothing needs converting
-        private val unwire =
-          if (connectWire) graft.cdc.ConnectSchemaJson.wireRowConverter(payload)
-          else None
+        private val decoder = format.rowDecoder(payload)
+        private val parser = new org.apache.spark.sql.graft.JsonLineParser(decoder.schema)
         private val reader = {
           val hp = new org.apache.hadoop.fs.Path(fp.file)
           val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
@@ -406,7 +350,7 @@ object CdcTableProvider {
         private var lineNo = -1L
         private val pending = scala.collection.mutable.Queue.empty[InternalRow]
 
-        private def out(tag: String, image: InternalRow, seq: Long): Unit = {
+        private val out: (String, InternalRow, Long) => Unit = (tag, image, seq) => {
           val row = new GenericInternalRow(payload.length + 2)
           var i = 0
           while (i < payload.length) {
@@ -419,73 +363,6 @@ object CdcTableProvider {
           pending += row
         }
 
-        // debezium: before(0), after(1), op(2), ts_ms(3), source(4)
-        // [, payload(5) under schema-include — a Connect-wrapped record
-        // carries the real envelope there; flat records coexist]
-        private def emitDebezium(raw: InternalRow, seq: Long): Unit = {
-          val env =
-            if (schemaInclude && !raw.isNullAt(5)) raw.getStruct(5, 5) else raw
-          if (fp.minTs != Long.MinValue &&
-            (env.isNullAt(3) || env.getLong(3) < fp.minTs)) return
-          val op = if (env.isNullAt(2)) null else env.getUTF8String(2).toString
-          def img(i: Int): InternalRow =
-            if (env.isNullAt(i)) null
-            else {
-              val image = env.getStruct(i, payload.length)
-              unwire.map(_(image)).getOrElse(image)
-            }
-          op match {
-            case "c" | "r" => if (img(1) != null) out("+I", img(1), seq)
-            case "u" =>
-              if (img(0) != null) out("-U", img(0), seq)
-              if (img(1) != null) out("+U", img(1), seq)
-            case "d" => if (img(0) != null) out("-D", img(0), seq)
-            case _ => if (img(1) != null) out("+R", img(1), seq)
-          }
-        }
-
-        // canal: old(0), data(1), type(2), database(3), table(4), pkNames(5)
-        private def emitCanal(env: InternalRow, seq: Long): Unit = {
-          if (env.isNullAt(1)) return
-          val data = env.getArray(1)
-          val old = if (env.isNullAt(0)) null else env.getArray(0)
-          val tpe = if (env.isNullAt(2)) null else env.getUTF8String(2).toString
-          var i = 0
-          while (i < data.numElements()) {
-            if (!data.isNullAt(i)) {
-              val row = data.getStruct(i, payload.length)
-              tpe match {
-                case "INSERT" => out("+I", row, seq)
-                case "DELETE" => out("-D", row, seq) // canal DELETEs carry before in data
-                case "UPDATE" =>
-                  if (old != null && i < old.numElements() && !old.isNullAt(i))
-                    out("-U", old.getStruct(i, payload.length), seq)
-                  out("+U", row, seq)
-                case _ => out("+R", row, seq)
-              }
-            }
-            i += 1
-          }
-        }
-
-        // mongo: _id(0), operationType(1), clusterTime(2), fullDocument(3),
-        // documentKey(4), ns(5)
-        private def emitMongo(env: InternalRow, seq: Long): Unit = {
-          if (fp.minTs != Long.MinValue &&
-            (env.isNullAt(2) || env.getLong(2) < fp.minTs)) return
-          val op = if (env.isNullAt(1)) null else env.getUTF8String(1).toString
-          def img(i: Int): InternalRow =
-            if (env.isNullAt(i)) null else env.getStruct(i, payload.length)
-          op match {
-            case "insert" => if (img(3) != null) out("+I", img(3), seq)
-            case "update" | "replace" =>
-              // delete-raced lookup: no post-image to apply — drop
-              if (img(3) != null) out("+R", img(3), seq)
-            case "delete" => if (img(4) != null) out("-D", img(4), seq)
-            case _ => () // invalidate/drop/rename collection signals
-          }
-        }
-
         override def next(): Boolean = {
           while (pending.isEmpty) {
             val line = reader.readLine()
@@ -493,13 +370,7 @@ object CdcTableProvider {
             lineNo += 1
             val seq = (fp.fileIdx.toLong << 33) | lineNo
             if (seq >= fp.minSeq)
-              parser.parse(line).foreach { env =>
-                format match {
-                  case "debezium-json" => emitDebezium(env, seq)
-                  case "canal-json" => emitCanal(env, seq)
-                  case "mongo-json" => emitMongo(env, seq)
-                }
-              }
+              parser.parse(line).foreach(decoder.emit(_, seq, fp.minTs, out))
           }
           true
         }

@@ -1,20 +1,21 @@
 package graft.streaming
 
-import graft.cdc.{CanalJson, Changelog, DdlParser, DebeziumJson, MongoChangeStreamJson}
+import graft.cdc.{Changelog, DdlParser, DebeziumJson, WireFormat}
 import graft.model.{CreateTableEvent, TableId, TableInfo}
 import graft.pipeline.{PipelineDef, PipelineRunner}
 import graft.sinks.DataSink
 import graft.sources.SourceBatch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming front end: a streaming DataFrame of CDC-JSON
-  * envelopes (debezium or canal — the two wire formats of the reference's
-  * Kafka pipeline source) drives the [[PipelineRunner]] through
-  * `foreachBatch` — the micro-batch boundary is the flush/DDL barrier
-  * (the reference needs an explicit FlushEvent + coordinator RPC for
-  * this; SchemaOperator.java:161-199).
+  * envelopes in one of the three [[WireFormat]]s — debezium and canal
+  * (the reference Kafka pipeline source's two formats) or MongoDB change
+  * streams — drives the [[PipelineRunner]] through `foreachBatch`, entered
+  * by [[start]] (declared schemas) or the two `*Inferred` methods
+  * (schema-less debezium topics). The micro-batch boundary is the
+  * flush/DDL barrier (the reference needs an explicit FlushEvent +
+  * coordinator RPC for this; SchemaOperator.java:161-199).
   *
   * Offsets and sink state ride on Spark's checkpoint mechanism: with a
   * `checkpointLocation` the stream resumes exactly where it stopped, and
@@ -74,25 +75,41 @@ final class StreamingPipeline(
     */
   private[graft] var skippedDdlStatements = 0
 
-  /** Start a streaming query over debezium-JSON lines. The source table's
-    * schema must be known (CDC JSON carries no types); the CreateTable
+  /** Start a streaming query over `format` envelopes carrying `tables`
+    * (one or many — the reference's Kafka pipeline source and the MySQL
+    * source multiplex every captured table onto one feed). The tables'
+    * schemas must be known (CDC JSON carries no types); each CreateTable
     * event is synthesized on the first batch — unless checkpointed schema
     * state was restored (a re-Create would reset sink-side evolution).
+    * With several tables (or newly-added-table capture) each record routes
+    * by its envelope's table — debezium `source.table`, canal `table`,
+    * mongo `ns.coll` — and every table keeps its own upstream schema plane
+    * and its own DDL segmentation, so an ALTER TABLE on one table never
+    * re-decodes or blocks the others. Mongo feeds have no DDL channel.
     *
-    * `order`, on every front end here: an optional DETERMINISTIC log-order
-    * expression over the stream's columns — a pure function of each row's
-    * own content that is unique per record and monotone in log order per
-    * key within a micro-batch, fitting in 43 bits (e.g. the Kafka
-    * `offset` column on a keyed topic, a binlog position field the
-    * envelope carries, or any unique event timestamp/id). When supplied,
-    * `__seq` becomes `epoch<<43 | order` — identical under ANY
-    * recomputation, task retry, or repeated evaluation — which lets
-    * DDL-free batches skip the per-batch persist on multi-table topics
-    * and >1-sink fan-outs too (see the fast-path note in
-    * [[startFromJsonLines]]).
+    * `order`: an optional DETERMINISTIC log-order expression over the
+    * stream's columns — a pure function of each row's own content that is
+    * unique per record and monotone in log order per key within a
+    * micro-batch, fitting in 43 bits (e.g. the Kafka `offset` column on a
+    * keyed topic, a binlog position field the envelope carries, or any
+    * unique event timestamp/id). When supplied, `__seq` becomes
+    * `epoch<<43 | order` — identical under ANY recomputation, task retry,
+    * or repeated evaluation — which lets DDL-free batches skip the
+    * per-batch persist on multi-table topics and >1-sink fan-outs too
+    * (see the fast-path note in the batch loop below).
     */
-  def startFromDebeziumJson(
+  def start(
       jsonStream: DataFrame, // one string column `value`
+      format: WireFormat,
+      tables: Seq[(TableId, TableInfo)],
+      checkpointLocation: Option[String] = None,
+      trigger: Trigger = Trigger.AvailableNow(),
+      order: Option[Column] = None): StreamingQuery =
+    runBatches(jsonStream, checkpointLocation, trigger)(declaredBatch(format, tables, order))
+
+  /** [[start]] over one debezium-JSON table. */
+  def startFromDebeziumJson(
+      jsonStream: DataFrame,
       tableId: TableId,
       info: TableInfo,
       checkpointLocation: Option[String] = None,
@@ -100,106 +117,17 @@ final class StreamingPipeline(
       schemaInclude: Boolean = false, // Connect {"schema":..,"payload":..} wrapping
       connectWire: Boolean = false, // epoch-int temporals
       order: Option[Column] = None): StreamingQuery =
-    startFromJsonLines(jsonStream, Seq(tableId -> info), checkpointLocation, trigger, order) {
-      (segment, schema) =>
-        DebeziumJson.decode(segment, "value", schema, seqCol = Some(Changelog.SeqCol),
-          connectWire = connectWire, schemaEnvelope = schemaInclude)
-          .drop("__table")
-    }
+    start(jsonStream, WireFormat.Debezium(schemaInclude, connectWire), Seq(tableId -> info),
+      checkpointLocation, trigger, order)
 
-  /** Same front end over canal-JSON lines (multi-row messages explode,
-    * `isDdl` envelopes drive schema evolution).
-    */
-  def startFromCanalJson(
-      jsonStream: DataFrame,
-      tableId: TableId,
-      info: TableInfo,
-      checkpointLocation: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow(),
-      order: Option[Column] = None): StreamingQuery =
-    startFromJsonLines(jsonStream, Seq(tableId -> info), checkpointLocation, trigger, order) {
-      (segment, schema) =>
-        CanalJson.decode(segment, "value", schema, seqCol = Some(Changelog.SeqCol))
-          .drop("__table")
-    }
-
-  /** Multi-table topic: one debezium-JSON stream carrying several tables
-    * (the reference's Kafka pipeline source and the MySQL source both
-    * multiplex every captured table onto one feed). Each record routes by
-    * its envelope's `source.table`; every table keeps its own upstream
-    * schema plane and its own DDL segmentation, so an ALTER TABLE on one
-    * table never re-decodes or blocks the others.
-    */
-  def startMultiFromDebeziumJson(
-      jsonStream: DataFrame,
-      tables: Seq[(TableId, TableInfo)],
-      checkpointLocation: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow(),
-      schemaInclude: Boolean = false,
-      connectWire: Boolean = false,
-      order: Option[Column] = None): StreamingQuery =
-    startFromJsonLines(jsonStream, tables, checkpointLocation, trigger, order) {
-      (segment, schema) =>
-        DebeziumJson.decode(segment, "value", schema, seqCol = Some(Changelog.SeqCol),
-          connectWire = connectWire, schemaEnvelope = schemaInclude)
-          .drop("__table")
-    }
-
-  /** Multi-table canal-JSON topic: same routing/DDL-segmentation loop as
-    * the debezium variant (canal names its table at the top-level
-    * `table` key, which the shared routing probe already reads; `isDdl`
-    * envelopes drive that table's schema plane only).
-    */
+  /** [[start]] over a canal-JSON topic. */
   def startMultiFromCanalJson(
       jsonStream: DataFrame,
       tables: Seq[(TableId, TableInfo)],
       checkpointLocation: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow(),
       order: Option[Column] = None): StreamingQuery =
-    startFromJsonLines(jsonStream, tables, checkpointLocation, trigger, order) {
-      (segment, schema) =>
-        CanalJson.decode(segment, "value", schema, seqCol = Some(Changelog.SeqCol))
-          .drop("__table")
-    }
-
-  /** Front end over MongoDB change-stream envelope JSON
-    * ([[MongoChangeStreamJson]]): no before images (update/replace decode
-    * to +R), no DDL channel — collection-level signals (drop/invalidate/
-    * rename) and delete-raced update lookups drop inside the decoder.
-    * The declared schema plays the role the reference's MongoDB connector
-    * gives its deserialization row type.
-    */
-  def startFromMongoJson(
-      jsonStream: DataFrame,
-      tableId: TableId,
-      info: TableInfo,
-      checkpointLocation: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow(),
-      order: Option[Column] = None): StreamingQuery =
-    startFromJsonLines(jsonStream, Seq(tableId -> info), checkpointLocation, trigger, order) {
-      (segment, schema) =>
-        MongoChangeStreamJson.decode(segment, "value", schema,
-          seqCol = Some(Changelog.SeqCol))
-          .drop("__db", "__table", "__resume_token")
-    }
-
-  /** Multi-collection change stream (MongoDB `watch()` over a whole
-    * database multiplexes every collection onto one feed): records route
-    * by the envelope's `ns.coll`/`ns.db` through the same materialized
-    * routing key as the debezium/canal multi-table fronts.
-    */
-  def startMultiFromMongoJson(
-      jsonStream: DataFrame,
-      tables: Seq[(TableId, TableInfo)],
-      checkpointLocation: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow(),
-      order: Option[Column] = None): StreamingQuery =
-    startFromJsonLines(jsonStream, tables, checkpointLocation, trigger, order) {
-      (segment, schema) =>
-        MongoChangeStreamJson.decode(segment, "value", schema,
-          seqCol = Some(Changelog.SeqCol))
-          .drop("__db", "__table", "__resume_token")
-    }
+    start(jsonStream, WireFormat.Canal, tables, checkpointLocation, trigger, order)
 
   /** Schema-less topic: no declared schema and no DDL channel (the
     * reference's Kafka pipeline source in JSON mode infers schemas
@@ -216,21 +144,14 @@ final class StreamingPipeline(
       tableId: TableId,
       primaryKeys: Seq[String],
       checkpointLocation: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    restoreSchemaPlanes(checkpointLocation)
-    val writer = jsonStream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        val sequenced = batch.toDF()
-          .withColumn(Changelog.SeqCol, StreamingPipeline.seqColumn(epochId))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        inferAndApply(tableId, primaryKeys, sequenced)
-        sequenced.unpersist(false)
-        persistSchemaPlanes(checkpointLocation)
-        ()
-      }
-    checkpointLocation.fold(writer)(cp => writer.option("checkpointLocation", cp)).start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    runBatches(jsonStream, checkpointLocation, trigger) { (batch, epochId) =>
+      val sequenced = batch
+        .withColumn(Changelog.SeqCol, StreamingPipeline.seqColumn(epochId))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      inferAndApply(tableId, primaryKeys, sequenced)
+      sequenced.unpersist(false)
+    }
 
   /** Multi-table schema-less topic: every table on the feed materializes
     * (inherently newly-added-table capture — there is no declared list),
@@ -249,42 +170,35 @@ final class StreamingPipeline(
       jsonStream: DataFrame,
       primaryKeysOf: Map[String, Seq[String]],
       checkpointLocation: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    restoreSchemaPlanes(checkpointLocation)
-    val writer = jsonStream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        import org.apache.spark.sql.functions._
-        val sequenced = StreamingPipeline.withRoutingKey(batch.toDF())
-          .withColumn(Changelog.SeqCol, StreamingPipeline.seqColumn(epochId))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // O(#tables observed this batch) driver rows, never O(rows)
-        val tbls = sequenced
-          .where(col(StreamingPipeline.RoutingCol).isNotNull)
-          .select(col(StreamingPipeline.RoutingCol), col(StreamingPipeline.RoutingDbCol))
-          .distinct().collect()
-          .map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1)
-        tbls.foreach { case (name, db) =>
-          val tid = db.map(d => TableId.schemaTable(d, name))
-            .getOrElse(TableId.tableOnly(name))
-          // slice EXACTLY this (table, db) pair — db1.users and db2.users
-          // are distinct tables and must not see each other's rows
-          val slice = sequenced.where(
-            col(StreamingPipeline.RoutingCol) === name &&
-              db.map(col(StreamingPipeline.RoutingDbCol) === _)
-                .getOrElse(col(StreamingPipeline.RoutingDbCol).isNull))
-          // primary keys resolve by full id first ("db1.users"), bare
-          // table name as the single-db fallback
-          val pks = primaryKeysOf.getOrElse(tid.identifier,
-            primaryKeysOf.getOrElse(name, Nil))
-          inferAndApply(tid, pks, slice)
-        }
-        sequenced.unpersist(false)
-        persistSchemaPlanes(checkpointLocation)
-        ()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    runBatches(jsonStream, checkpointLocation, trigger) { (batch, epochId) =>
+      import org.apache.spark.sql.functions._
+      val sequenced = StreamingPipeline.withRoutingKey(batch)
+        .withColumn(Changelog.SeqCol, StreamingPipeline.seqColumn(epochId))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // O(#tables observed this batch) driver rows, never O(rows)
+      val tbls = sequenced
+        .where(col(StreamingPipeline.RoutingCol).isNotNull)
+        .select(col(StreamingPipeline.RoutingCol), col(StreamingPipeline.RoutingDbCol))
+        .distinct().collect()
+        .map(r => (r.getString(0), Option(r.getString(1)))).sortBy(_._1)
+      tbls.foreach { case (name, db) =>
+        val tid = db.map(d => TableId.schemaTable(d, name))
+          .getOrElse(TableId.tableOnly(name))
+        // slice EXACTLY this (table, db) pair — db1.users and db2.users
+        // are distinct tables and must not see each other's rows
+        val slice = sequenced.where(
+          col(StreamingPipeline.RoutingCol) === name &&
+            db.map(col(StreamingPipeline.RoutingDbCol) === _)
+              .getOrElse(col(StreamingPipeline.RoutingDbCol).isNull))
+        // primary keys resolve by full id first ("db1.users"), bare
+        // table name as the single-db fallback
+        val pks = primaryKeysOf.getOrElse(tid.identifier,
+          primaryKeysOf.getOrElse(name, Nil))
+        inferAndApply(tid, pks, slice)
       }
-    checkpointLocation.fold(writer)(cp => writer.option("checkpointLocation", cp)).start()
-  }
+      sequenced.unpersist(false)
+    }
 
   /** One table's slice of a schema-less batch: infer the payload schema,
     * widen the upstream plane through the merging lattice (CreateTable on
@@ -330,8 +244,7 @@ final class StreamingPipeline(
     }
     upstream.evolvedInfo(tableId).foreach { cur =>
       runner.processBatch(SourceBatch(Nil, Seq(tableId ->
-        DebeziumJson.decode(tblSlice, "value", cur.schema,
-          seqCol = Some(Changelog.SeqCol)).drop("__table"))))
+        WireFormat.Debezium().decode(tblSlice, cur.schema, Some(Changelog.SeqCol)))))
     }
   }
 
@@ -370,18 +283,46 @@ final class StreamingPipeline(
     persist(StreamingPipeline.UpstreamStateFile, upstream.snapshotState)
   }
 
-  /** The shared micro-batch loop: sequence, split out DDL envelopes,
-    * decode data segments with the schema valid at their log position,
-    * checkpoint both schema planes.
+  /** Per-phase wall clock inside the micro-batch, printed when
+    * SPARK_GRAFT_STREAM_PROFILE=1 — the breakdown that locates the
+    * steady-state eps bound (driver control plane vs decode+write).
     */
-  private def startFromJsonLines(
-      jsonStream: DataFrame,
-      tables: Seq[(TableId, TableInfo)],
-      checkpointLocation: Option[String],
-      trigger: Trigger,
-      order: Option[Column] = None)(
-      decodeSegment: (DataFrame, StructType) => DataFrame): StreamingQuery = {
+  private val profile = sys.env.get("SPARK_GRAFT_STREAM_PROFILE").contains("1")
+  private def timed[T](name: String)(f: => T): T =
+    if (!profile) f
+    else {
+      val t0 = System.nanoTime(); val r = f
+      System.err.println(
+        f"[stream-prof] $name%-14s ${(System.nanoTime() - t0) / 1e6}%6.1f ms")
+      r
+    }
+
+  /** Every entry point's query: restore both schema planes, build the
+    * per-batch body (after the restore — it may read restored state), run
+    * it on each micro-batch and checkpoint both planes after it.
+    */
+  private def runBatches(jsonStream: DataFrame, checkpointLocation: Option[String],
+      trigger: Trigger)(perBatch: => (DataFrame, Long) => Unit): StreamingQuery = {
     restoreSchemaPlanes(checkpointLocation)
+    val body = perBatch
+    val writer = jsonStream.writeStream
+      .trigger(trigger)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+        body(batch.toDF(), epochId)
+        timed("schema-persist") { persistSchemaPlanes(checkpointLocation) }
+        ()
+      }
+    checkpointLocation.fold(writer)(cp => writer.option("checkpointLocation", cp)).start()
+  }
+
+  /** The declared-schema micro-batch body: sequence, split out DDL
+    * envelopes, decode data segments with the schema valid at their log
+    * position.
+    */
+  private def declaredBatch(
+      format: WireFormat,
+      tables: Seq[(TableId, TableInfo)],
+      order: Option[Column]): (DataFrame, Long) => Unit = {
     // a multi-table topic routes by the envelope table; declaring one
     // table with newly-added capture on still needs routing (undeclared
     // tables' rows must not decode as the declared table's)
@@ -395,226 +336,210 @@ final class StreamingPipeline(
     val created = scala.collection.mutable.Set[TableId](
       (tables.map(_._1) ++ dynamicTables.keys)
         .filter(runner.registry.evolvedInfo(_).isDefined): _*)
-    // per-phase wall clock inside the micro-batch, printed when
-    // SPARK_GRAFT_STREAM_PROFILE=1 — the breakdown that locates the
-    // steady-state eps bound (driver control plane vs decode+write)
-    val prof = sys.env.get("SPARK_GRAFT_STREAM_PROFILE").contains("1")
-    def timed[T](name: String)(f: => T): T =
-      if (!prof) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[stream-prof] $name%-14s ${(System.nanoTime() - t0) / 1e6}%6.1f ms")
-        r
-      }
-    val writer = jsonStream.writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        import org.apache.spark.sql.functions._
-        // Seq-column stability. With a caller-supplied `order` expression
-        // __seq is a pure projection of each row's own content
-        // (epoch<<43 | order) — every evaluation, on every task attempt,
-        // after any recomputation or shuffle fetch failure, produces the
-        // SAME value for the same record: deterministic by construction.
-        // Without `order`, __seq falls back to
-        // monotonically_increasing_id, which is only stable if the batch
-        // is NOT recomputed between jobs (a repartitioned or
-        // non-order-stable upstream would renumber rows and tear segment
-        // boundaries or per-key ordering). Two ways to hold that: persist
-        // the frame before any action (the general path below), or
-        // arrange that exactly ONE action ever evaluates __seq — the
-        // mono-id fast path's condition (single table, single routed
-        // sink, no DDL → one decode+write job; the probe prunes __seq).
-        // Even then, a single evaluation is only self-consistent when no
-        // partial recompute can interleave attempts with different
-        // numberings: with pipeline.parallelism > 1 the write job
-        // contains a repartition shuffle, and a fetch-failure-driven map
-        // recompute of a NON-order-stable source could mix numberings
-        // across attempts. Replayable micro-batch sources (Kafka, files)
-        // re-read in a stable order, making mono-id effectively
-        // deterministic per evaluation — the mono-id fast path assumes
-        // that; supply `order` to drop the assumption entirely.
-        //
-        // Routing key: on a multi-table topic the envelope's table name
-        // materializes ONCE into the persisted frame (`__tbl`), so the
-        // per-table filters below are cached-column string equalities —
-        // the JSON probe runs one pass over the data, not once per
-        // declared table (500 captured tables would otherwise pay 500
-        // JSON probes per record).
-        val sequencedBase = batch.toDF()
-          .withColumn(Changelog.SeqCol, order
-            .map(StreamingPipeline.deterministicSeqColumn(epochId, _))
-            .getOrElse(StreamingPipeline.seqColumn(epochId)))
-          .withColumn("__ddl", DebeziumJson.ddlOf(col("value")))
-        val stamped = (if (multi) StreamingPipeline.withRoutingKey(sequencedBase)
-          else sequencedBase)
-        // Measured r15 (local[32], 25k-row batches): repartitioning the
-        // batch up to defaultParallelism does NOT help — decode+write is
-        // bound by fixed per-job/commit overhead at this batch size, and
-        // the extra round-robin shuffle + small write files cost more
-        // than 8x task parallelism buys. Parallelism stays the source's
-        // (a real deployment sizes it via topic partitions).
-        //
-        // Steady-state fast path (measured r15, extended to multi-table
-        // r16): a DDL-free batch — the overwhelmingly common case —
-        // never cuts segments, so the cached copy buys little: skip the
-        // persist and let each consuming action re-read the source
-        // (page-cache hot). Sound under either seq regime: a
-        // deterministic `order` makes every re-evaluation identical (so
-        // any number of routing filters / fan-out writes agree on
-        // __seq), while the mono-id regime needs exactly one consuming
-        // action — single table, fan-out 1 (see the stability comment
-        // above). The probe is the contains()-guarded __ddl scan with an
-        // isEmpty early exit, so data batches pay substring scans, never
-        // JSON parses. Any DDL present falls back to the persist-first
-        // path: segmentation runs several isEmpty actions per table over
-        // the same frame, where the cached copy earns its cost.
-        val oneAction = !multi && tables.size == 1 &&
-          runner.routeFanOut(tables.head._1) == 1
-        // Each consuming action of the UNPERSISTED frame re-reads the
-        // source and re-runs the decode (and, multi-table, the routing
-        // JSON probe): R routed actions cost R decode passes where the
-        // persist path costs 1 decode + cache build + R cached filters.
-        // Measured at 4 tables the unpersisted passes still win (88-99k
-        // vs ~66k ev/s), but the trade inverts with table count — a
-        // 200-table whole-database topic would pay 200 probe passes per
-        // batch — so the deterministic-order fast path is capped at a
-        // bounded action fan-out and persists beyond it.
-        // wire-captured tables (dynamicTables) consume actions too — a
-        // whole-database topic that grew 200 captured tables must fall
-        // back to persist even though only 1 table was declared
-        val consumingActions =
-          (tables.iterator.map(_._1) ++ dynamicTables.keysIterator)
-            .toSet.iterator.map(runner.routeFanOut).sum
-        val fastPath = (oneAction || (order.isDefined &&
-            consumingActions <= StreamingPipeline.FastPathMaxActions)) &&
-          timed("ddl-probe")(stamped.where(col("__ddl").isNotNull).isEmpty)
-        val sequenced =
-          if (fastPath) stamped
-          else {
-            persistedBatches += 1
-            stamped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          }
-
-        // Control plane: schema-change envelopes are rare, so collecting
-        // just their (seq, statement, table, db) tuples is O(#DDL) driver
-        // work, never O(rows) — the reference likewise routes history
-        // records through the driver-side coordinator. Data decodes per
-        // segment BETWEEN DDL positions with the schema valid at that
-        // point, so an ALTER TABLE mid-batch applies exactly where the
-        // log says it does (the micro-batch boundary alone is no longer
-        // the only DDL barrier).
-        val allDdl = if (fastPath) Array.empty[org.apache.spark.sql.Row]
-        else timed("cache+ddl") {
-          sequenced.where(col("__ddl").isNotNull)
-            .select(col(Changelog.SeqCol), col("__ddl"),
-              (if (multi) col(StreamingPipeline.RoutingCol)
-               else DebeziumJson.ddlTableOf(col("value"))).as("__tbl"),
-              coalesce(
-                get_json_object(col("value"), "$.source.db"),
-                get_json_object(col("value"), "$.database")).as("__db"))
-            .collect()
-            .sortBy(_.getLong(0))
+    (batch, epochId) => {
+      import org.apache.spark.sql.functions._
+      // Seq-column stability. With a caller-supplied `order` expression
+      // __seq is a pure projection of each row's own content
+      // (epoch<<43 | order) — every evaluation, on every task attempt,
+      // after any recomputation or shuffle fetch failure, produces the
+      // SAME value for the same record: deterministic by construction.
+      // Without `order`, __seq falls back to
+      // monotonically_increasing_id, which is only stable if the batch
+      // is NOT recomputed between jobs (a repartitioned or
+      // non-order-stable upstream would renumber rows and tear segment
+      // boundaries or per-key ordering). Two ways to hold that: persist
+      // the frame before any action (the general path below), or
+      // arrange that exactly ONE action ever evaluates __seq — the
+      // mono-id fast path's condition (single table, single routed
+      // sink, no DDL → one decode+write job; the probe prunes __seq).
+      // Even then, a single evaluation is only self-consistent when no
+      // partial recompute can interleave attempts with different
+      // numberings: with pipeline.parallelism > 1 the write job
+      // contains a repartition shuffle, and a fetch-failure-driven map
+      // recompute of a NON-order-stable source could mix numberings
+      // across attempts. Replayable micro-batch sources (Kafka, files)
+      // re-read in a stable order, making mono-id effectively
+      // deterministic per evaluation — the mono-id fast path assumes
+      // that; supply `order` to drop the assumption entirely.
+      //
+      // Routing key: on a multi-table topic the envelope's table name
+      // materializes ONCE into the persisted frame (`__tbl`), so the
+      // per-table filters below are cached-column string equalities —
+      // the JSON probe runs one pass over the data, not once per
+      // declared table (500 captured tables would otherwise pay 500
+      // JSON probes per record).
+      val sequencedBase = batch
+        .withColumn(Changelog.SeqCol, order
+          .map(StreamingPipeline.deterministicSeqColumn(epochId, _))
+          .getOrElse(StreamingPipeline.seqColumn(epochId)))
+        .withColumn("__ddl", DebeziumJson.ddlOf(col("value")))
+      val stamped = (if (multi) StreamingPipeline.withRoutingKey(sequencedBase)
+        else sequencedBase)
+      // Measured r15 (local[32], 25k-row batches): repartitioning the
+      // batch up to defaultParallelism does NOT help — decode+write is
+      // bound by fixed per-job/commit overhead at this batch size, and
+      // the extra round-robin shuffle + small write files cost more
+      // than 8x task parallelism buys. Parallelism stays the source's
+      // (a real deployment sizes it via topic partitions).
+      //
+      // Steady-state fast path (measured r15, extended to multi-table
+      // r16): a DDL-free batch — the overwhelmingly common case —
+      // never cuts segments, so the cached copy buys little: skip the
+      // persist and let each consuming action re-read the source
+      // (page-cache hot). Sound under either seq regime: a
+      // deterministic `order` makes every re-evaluation identical (so
+      // any number of routing filters / fan-out writes agree on
+      // __seq), while the mono-id regime needs exactly one consuming
+      // action — single table, fan-out 1 (see the stability comment
+      // above). The probe is the contains()-guarded __ddl scan with an
+      // isEmpty early exit, so data batches pay substring scans, never
+      // JSON parses. Any DDL present falls back to the persist-first
+      // path: segmentation runs several isEmpty actions per table over
+      // the same frame, where the cached copy earns its cost.
+      val oneAction = !multi && tables.size == 1 &&
+        runner.routeFanOut(tables.head._1) == 1
+      // Each consuming action of the UNPERSISTED frame re-reads the
+      // source and re-runs the decode (and, multi-table, the routing
+      // JSON probe): R routed actions cost R decode passes where the
+      // persist path costs 1 decode + cache build + R cached filters.
+      // Measured at 4 tables the unpersisted passes still win (88-99k
+      // vs ~66k ev/s), but the trade inverts with table count — a
+      // 200-table whole-database topic would pay 200 probe passes per
+      // batch — so the deterministic-order fast path is capped at a
+      // bounded action fan-out and persists beyond it.
+      // wire-captured tables (dynamicTables) consume actions too — a
+      // whole-database topic that grew 200 captured tables must fall
+      // back to persist even though only 1 table was declared
+      val consumingActions =
+        (tables.iterator.map(_._1) ++ dynamicTables.keysIterator)
+          .toSet.iterator.map(runner.routeFanOut).sum
+      val fastPath = (oneAction || (order.isDefined &&
+          consumingActions <= StreamingPipeline.FastPathMaxActions)) &&
+        timed("ddl-probe")(stamped.where(col("__ddl").isNotNull).isEmpty)
+      val sequenced =
+        if (fastPath) stamped
+        else {
+          persistedBatches += 1
+          stamped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         }
-        val data = sequenced.where(col("__ddl").isNull)
 
-        // Newly-added-table capture: a wire CREATE TABLE naming an
-        // undeclared table registers it for this and later batches. The
-        // CREATE itself applies at its log position through the per-table
-        // DDL loop below (it is THE creation event — no synthesis).
-        if (multi && newlyAddedCapture) {
-          val knownIds = tables.map(_._1) ++ dynamicTables.keys
-          allDdl.iterator
-            .filter(r => !r.isNullAt(2) && !knownIds.exists(k =>
-              StreamingPipeline.idMatches(k, r.getString(2),
-                Option(r.getString(3)))))
-            .foreach { r =>
-              val tid = Option(r.getString(3))
-                .map(db => TableId.schemaTable(db, r.getString(2)))
-                .getOrElse(TableId.tableOnly(r.getString(2)))
-              try DdlParser.parse(r.getString(1), tid, ddlTypes) match {
-                case Seq(CreateTableEvent(_, info)) =>
-                  dynamicTables(tid) = info
-                  created += tid // the wire CREATE creates it, below
-                case _ => () // ALTER etc. for a never-created table: skip
-              } catch {
-                case e: Exception =>
-                  skippedDdlStatements += 1
-                  System.err.println(s"[graft] skipping unparseable DDL for " +
-                    s"undeclared table ${r.getString(2)}: ${e.getMessage}")
+      // Control plane: schema-change envelopes are rare, so collecting
+      // just their (seq, statement, table, db) tuples is O(#DDL) driver
+      // work, never O(rows) — the reference likewise routes history
+      // records through the driver-side coordinator. Data decodes per
+      // segment BETWEEN DDL positions with the schema valid at that
+      // point, so an ALTER TABLE mid-batch applies exactly where the
+      // log says it does (the micro-batch boundary alone is no longer
+      // the only DDL barrier).
+      val allDdl = if (fastPath) Array.empty[org.apache.spark.sql.Row]
+      else timed("cache+ddl") {
+        sequenced.where(col("__ddl").isNotNull)
+          .select(col(Changelog.SeqCol), col("__ddl"),
+            (if (multi) col(StreamingPipeline.RoutingCol)
+             else DebeziumJson.ddlTableOf(col("value"))).as("__tbl"),
+            coalesce(
+              get_json_object(col("value"), "$.source.db"),
+              get_json_object(col("value"), "$.database")).as("__db"))
+          .collect()
+          .sortBy(_.getLong(0))
+      }
+      val data = sequenced.where(col("__ddl").isNull)
+
+      // Newly-added-table capture: a wire CREATE TABLE naming an
+      // undeclared table registers it for this and later batches. The
+      // CREATE itself applies at its log position through the per-table
+      // DDL loop below (it is THE creation event — no synthesis).
+      if (multi && newlyAddedCapture) {
+        val knownIds = tables.map(_._1) ++ dynamicTables.keys
+        allDdl.iterator
+          .filter(r => !r.isNullAt(2) && !knownIds.exists(k =>
+            StreamingPipeline.idMatches(k, r.getString(2),
+              Option(r.getString(3)))))
+          .foreach { r =>
+            val tid = Option(r.getString(3))
+              .map(db => TableId.schemaTable(db, r.getString(2)))
+              .getOrElse(TableId.tableOnly(r.getString(2)))
+            try DdlParser.parse(r.getString(1), tid, ddlTypes) match {
+              case Seq(CreateTableEvent(_, info)) =>
+                dynamicTables(tid) = info
+                created += tid // the wire CREATE creates it, below
+              case _ => () // ALTER etc. for a never-created table: skip
+            } catch {
+              case e: Exception =>
+                skippedDdlStatements += 1
+                System.err.println(s"[graft] skipping unparseable DDL for " +
+                  s"undeclared table ${r.getString(2)}: ${e.getMessage}")
+            }
+          }
+      }
+
+      val activeTables = tables ++ dynamicTables.toSeq
+
+      // One flush scope per micro-batch: routed writes are held across
+      // tables and segments and reach the sink at the next schema change
+      // or when the loop ends (PipelineRunner, "Scale notes"), so this
+      // phase is where the write jobs run — while `sequenced` is still
+      // persisted.
+      timed("decode+write")(runner.deferWrites(activeTables.foreach { case (tableId, info) =>
+        // On a single-table stream every record is this table's; on a
+        // multi-table topic, route by the materialized envelope table.
+        // DDL naming no table at all is accepted only in single-table
+        // mode (ambiguous on a shared topic).
+        val tblData =
+          if (multi) StreamingPipeline.routeByTableId(data, tableId)
+          else data
+        val ddlRows = allDdl.filter { r =>
+          val matches = !r.isNullAt(2) && StreamingPipeline.idMatches(
+            tableId, r.getString(2), Option(r.getString(3)))
+          if (multi) matches else r.isNullAt(2) || matches
+        }
+
+        if (!created.contains(tableId)) {
+          created += tableId
+          upstream.apply(CreateTableEvent(tableId, info))
+          runner.processBatch(SourceBatch(Seq(CreateTableEvent(tableId, info)), Nil))
+        }
+
+        def emit(segment: DataFrame): Unit = {
+          // decode with the CURRENT upstream schema (what the database is
+          // sending now — NOT the runner's transformed sink plane): columns
+          // added/renamed by earlier DDL in this very batch parse from this
+          // row on
+          val cur = upstream.evolvedInfo(tableId).getOrElse(info)
+          runner.processBatch(
+            SourceBatch(Nil, Seq(tableId ->
+              format.decode(segment, cur.schema, Some(Changelog.SeqCol)))))
+        }
+
+        if (ddlRows.isEmpty) emit(tblData)
+        else {
+          var lower = Long.MinValue
+          ddlRows.foreach { r =>
+            val at = r.getLong(0)
+            val segment = tblData.where(
+              col(Changelog.SeqCol) > lower && col(Changelog.SeqCol) < at)
+            if (!segment.isEmpty) emit(segment)
+            // an unparseable statement must not kill the stream — log and
+            // keep consuming (the reference's history replay does the same
+            // for statements it cannot interpret)
+            val events =
+              try DdlParser.parse(r.getString(1), tableId, ddlTypes)
+              catch { case e: Exception =>
+                skippedDdlStatements += 1
+                System.err.println(s"[graft] skipping unparseable DDL at seq $at: " +
+                  s"${r.getString(1).take(200)} (${e.getMessage})")
+                Nil
               }
-            }
+            events.foreach(upstream.apply)
+            runner.processBatch(SourceBatch(events, Nil))
+            lower = at
+          }
+          val tail = tblData.where(col(Changelog.SeqCol) > lower)
+          if (!tail.isEmpty) emit(tail)
         }
-
-        val activeTables = tables ++ dynamicTables.toSeq
-
-        // One flush scope per micro-batch: routed writes are held across
-        // tables and segments and reach the sink at the next schema change
-        // or when the loop ends (PipelineRunner, "Scale notes"), so this
-        // phase is where the write jobs run — while `sequenced` is still
-        // persisted.
-        timed("decode+write")(runner.deferWrites(activeTables.foreach { case (tableId, info) =>
-          // On a single-table stream every record is this table's; on a
-          // multi-table topic, route by the materialized envelope table.
-          // DDL naming no table at all is accepted only in single-table
-          // mode (ambiguous on a shared topic).
-          val tblData =
-            if (multi) StreamingPipeline.routeByTableId(data, tableId)
-            else data
-          val ddlRows = allDdl.filter { r =>
-            val matches = !r.isNullAt(2) && StreamingPipeline.idMatches(
-              tableId, r.getString(2), Option(r.getString(3)))
-            if (multi) matches else r.isNullAt(2) || matches
-          }
-
-          if (!created.contains(tableId)) {
-            created += tableId
-            upstream.apply(CreateTableEvent(tableId, info))
-            runner.processBatch(SourceBatch(Seq(CreateTableEvent(tableId, info)), Nil))
-          }
-
-          def emit(segment: DataFrame): Unit = {
-            // decode with the CURRENT upstream schema (what the database is
-            // sending now — NOT the runner's transformed sink plane): columns
-            // added/renamed by earlier DDL in this very batch parse from this
-            // row on
-            val cur = upstream.evolvedInfo(tableId).getOrElse(info)
-            runner.processBatch(
-              SourceBatch(Nil, Seq(tableId -> decodeSegment(segment, cur.schema))))
-          }
-
-          if (ddlRows.isEmpty) emit(tblData)
-          else {
-            var lower = Long.MinValue
-            ddlRows.foreach { r =>
-              val at = r.getLong(0)
-              val segment = tblData.where(
-                col(Changelog.SeqCol) > lower && col(Changelog.SeqCol) < at)
-              if (!segment.isEmpty) emit(segment)
-              // an unparseable statement must not kill the stream — log and
-              // keep consuming (the reference's history replay does the same
-              // for statements it cannot interpret)
-              val events =
-                try DdlParser.parse(r.getString(1), tableId, ddlTypes)
-                catch { case e: Exception =>
-                  skippedDdlStatements += 1
-                  System.err.println(s"[graft] skipping unparseable DDL at seq $at: " +
-                    s"${r.getString(1).take(200)} (${e.getMessage})")
-                  Nil
-                }
-              events.foreach(upstream.apply)
-              runner.processBatch(SourceBatch(events, Nil))
-              lower = at
-            }
-            val tail = tblData.where(col(Changelog.SeqCol) > lower)
-            if (!tail.isEmpty) emit(tail)
-          }
-        }))
-        if (!fastPath) sequenced.unpersist(false)
-        timed("schema-persist") { persistSchemaPlanes(checkpointLocation) }
-        ()
-      }
-    checkpointLocation.fold(writer)(cp => writer.option("checkpointLocation", cp)).start()
+      }))
+      if (!fastPath) sequenced.unpersist(false)
+    }
   }
 }
 
@@ -664,14 +589,10 @@ object StreamingPipeline {
         get_json_object(col("value"), "$.ns.db")))
   }
 
-  /** Route a persisted batch to one table's rows: a plain string
-    * equality on the cached routing column — NO per-table JSON probe
-    * (the probe already ran, once, in [[withRoutingKey]]).
-    */
-  def routeByTable(data: DataFrame, table: String): DataFrame =
-    data.where(org.apache.spark.sql.functions.col(RoutingCol) === table)
-
-  /** Route by the FULL table id: table-name equality plus, when the id
+  /** Route a persisted batch to one table's rows by the FULL table id —
+    * a plain string equality on the cached routing column, NO per-table
+    * JSON probe (the probe already ran, once, in [[withRoutingKey]]):
+    * table-name equality plus, when the id
     * is db-qualified, a database match on the cached db column. Records
     * carrying no database are accepted (a feed without `source.db`
     * cannot be db-disambiguated — same leniency as the reference's
@@ -750,7 +671,7 @@ object StreamingPipeline {
     // the steady-state shape a real deployment has (and what the stream
     // bench measures since r6)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.load(dir).withColumnRenamed("value", "value")
+    reader.load(dir)
   }
 
   /** Name of the natural-order column emitted by [[fileJsonStreamOrdered]]
@@ -890,8 +811,8 @@ object StreamingPipeline {
     * files, ≤4M lines per file; overflow or an un-numbered file name
     * raises (ansi cast / explicit check) instead of misordering. Blank
     * lines are dropped AFTER numbering, so their removal never renumbers
-    * later records. Pass `order = Some(col(FileOrderCol))` to the
-    * `startFrom*` front ends — the CLI file topics do this by default,
+    * later records. Pass `order = Some(col(FileOrderCol))` to
+    * [[StreamingPipeline.start]] — the CLI file topics do this by default,
     * after [[validateFileTopicOrder]] (uniqueness, numbering, and the
     * wholetext size bound fail at CONFIG time, not mid-stream).
     *

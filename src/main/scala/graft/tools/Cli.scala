@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Sessions
-import graft.cdc.DdlParser
+import graft.cdc.{DdlParser, WireFormat}
 import graft.model.{CreateTableEvent, TableId}
 import graft.pipeline._
 import graft.sinks._
@@ -18,12 +18,20 @@ import org.apache.spark.sql.SparkSession
   * sbt "runMain graft.tools.Cli /path/to/pipeline.yaml"
   * }}}
   *
-  * Source types:
-  *  - `debezium-file`: debezium-JSON lines (data + DDL envelopes) under
-  *    `path`; `table` names the pipeline table id; `schema.ddl` declares
-  *    the initial schema as a CREATE TABLE statement (CDC JSON carries no
-  *    types — the reference reads the same from the database's history);
-  *    optional `checkpoint` resumes from prior state.
+  * Source types — a file topic of one [[WireFormat]] each:
+  *  - `debezium-file`: debezium-JSON lines (data + DDL envelopes);
+  *    `debezium-json.schema-include` and
+  *    `debezium-json.connect-wire.enabled` apply here only;
+  *  - `canal-file`: canal-JSON lines (multi-row messages, `isDdl`
+  *    envelopes);
+  *  - `mongo-file`: MongoDB change-stream documents (no DDL channel).
+  *
+  * All three read `path`; `table` names the pipeline table id and
+  * `schema.ddl` declares the initial schema as a CREATE TABLE statement
+  * (CDC JSON carries no types — the reference reads the same from the
+  * database's history), or `tables: db.a, db.b` names several tables on
+  * one topic with `schema.ddl.<table>` each; `order.*` sets the log order
+  * and optional `checkpoint` resumes from prior state.
   *
   * Sink types: `values` (materialized rows print to stdout — the test
   * sink), `parquet` (lakehouse MERGE sink at `path`), `kafka`
@@ -52,132 +60,96 @@ object Cli {
     */
   def run(spark: SparkSession, yaml: String): Seq[String] = {
     val pd = YamlPipelineParser.parse(yaml)
-    val (sink, report) = buildSink(spark, pd)
-    pd.source.kind match {
-      case kind @ ("debezium-file" | "canal-file" | "mongo-file") =>
-        val path = pd.source.options.getOrElse("path",
-          throw new IllegalArgumentException(s"source.path is required for $kind"))
-        def schemaOf(tid: TableId, key: String) = {
-          val ddl = pd.source.options.getOrElse(key,
-            throw new IllegalArgumentException(
-              s"source.$key (CREATE TABLE ...) is required for $kind"))
-          DdlParser.parse(ddl, tid) match {
-            case Seq(CreateTableEvent(_, i)) => i
-            case other => throw new IllegalArgumentException(
-              s"$key must be a single CREATE TABLE statement, parsed: $other")
-          }
-        }
-        val sp = new StreamingPipeline(spark, pd, sink)
-        // Deterministic log order by DEFAULT: a file topic carries a
-        // natural stable order (segment number from the file name + line
-        // index within the file), so __seq is a pure projection and the
-        // fast path's mono-id order-stability assumption never applies.
-        // `order.expr` overrides with a source-field expression over the
-        // raw `value` (e.g. a binlog position); `order.mode: none` drops
-        // to the legacy unordered stream (un-numbered file names).
-        // MIGRATION (r17): the default changed from unordered to `file`.
-        // Configs whose file names carry no usable segment number now
-        // fail at startup (loudly, with a remedy), and the wholetext
-        // read holds one whole segment per task — pre-r17 deployments
-        // that relied on the unordered stream must set
-        // `order.mode: none` explicitly (or fix their segment naming).
-        val orderExpr = pd.source.options.get("order.expr")
-        val orderMode = pd.source.options.getOrElse("order.mode",
-          if (orderExpr.isDefined) "expr" else "file")
-        val (stream, order) = orderMode match {
-          case "none" =>
-            (StreamingPipeline.fileJsonStream(spark, path), None)
-          case "expr" =>
-            (StreamingPipeline.fileJsonStream(spark, path),
-              Some(org.apache.spark.sql.functions.expr(orderExpr.getOrElse(
-                throw new IllegalArgumentException(
-                  "order.mode=expr requires order.expr")))))
-          case "file" =>
-            val seqRegex = pd.source.options.getOrElse("order.file.regex",
-              StreamingPipeline.FileSeqRegex)
-            // fail at CONFIG time with a remedy, not mid-stream: every
-            // file numbered (< 2^21), numbers unique, segments
-            // wholetext-sized (bound overridable for large-heap
-            // deployments via order.file.max-bytes)
-            StreamingPipeline.validateFileTopicOrder(path, seqRegex,
-              maxFileBytes = pd.source.options.get("order.file.max-bytes")
-                .map(_.toLong).getOrElse(512L << 20),
-              // the session's Hadoop conf so remote topics (hdfs://,
-              // s3a://) resolve with the user's filesystem settings
-              hadoopConf = spark.sessionState.newHadoopConf())
-            (StreamingPipeline.fileJsonStreamOrdered(spark, path,
-                seqRegex = seqRegex),
-              Some(org.apache.spark.sql.functions.col(
-                StreamingPipeline.FileOrderCol)))
-          case other => throw new IllegalArgumentException(
-            s"order.mode must be file|expr|none: $other")
-        }
-        val checkpoint = pd.source.options.get("checkpoint")
-        // `tables: db.a, db.b` (one topic, many tables — per-table
-        // schemas under schema.ddl.<table>) or single `table:` + schema.ddl
-        val q = pd.source.options.get("tables") match {
-          case Some(list) =>
-            val pairs = list.split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { t =>
-              val tid = TableId.parse(t)
-              // full-id key first (db1.users and db2.users must not share
-              // one schema), bare table name as a back-compat fallback
-              val fullKey = s"schema.ddl.${tid.identifier}"
-              val key = if (pd.source.options.contains(fullKey)) fullKey
-                        else s"schema.ddl.${tid.table}"
-              tid -> schemaOf(tid, key)
-            }
-            kind match {
-              case "canal-file" =>
-                sp.startMultiFromCanalJson(stream, pairs, checkpointLocation = checkpoint,
-                  order = order)
-              case "mongo-file" =>
-                sp.startMultiFromMongoJson(stream, pairs, checkpointLocation = checkpoint,
-                  order = order)
-              case _ =>
-                sp.startMultiFromDebeziumJson(stream, pairs, checkpointLocation = checkpoint,
-                  schemaInclude = schemaInclude(pd), connectWire = connectWire(pd),
-                  order = order)
-            }
-          case None =>
-            val tid = TableId.parse(pd.source.options.getOrElse("table",
-              throw new IllegalArgumentException(
-                s"source.table (or source.tables) is required for $kind")))
-            val tinfo = schemaOf(tid, "schema.ddl")
-            kind match {
-              case "canal-file" =>
-                sp.startFromCanalJson(stream, tid, tinfo, checkpointLocation = checkpoint,
-                  order = order)
-              case "mongo-file" =>
-                sp.startFromMongoJson(stream, tid, tinfo, checkpointLocation = checkpoint,
-                  order = order)
-              case _ =>
-                sp.startFromDebeziumJson(stream, tid, tinfo, checkpointLocation = checkpoint,
-                  schemaInclude = schemaInclude(pd), connectWire = connectWire(pd),
-                  order = order)
-            }
-        }
-        q.awaitTermination()
-        s"pipeline '${pd.name}': processed $path into ${pd.sink.kind} sink" +: report()
+    val kind = pd.source.kind
+    val format = kind match {
+      case "debezium-file" | "canal-file" | "mongo-file" =>
+        WireFormat.parse(Some(kind.stripSuffix("-file") + "-json"), pd.source.options)
       case other => throw new IllegalArgumentException(
         s"source.type $other is not runnable from the CLI " +
           "(values is programmatic; DB connectors need live transports)")
     }
+    val (sink, report) = buildSink(spark, pd)
+    val path = pd.source.options.getOrElse("path",
+      throw new IllegalArgumentException(s"source.path is required for $kind"))
+    def schemaOf(tid: TableId, key: String) = {
+      val ddl = pd.source.options.getOrElse(key,
+        throw new IllegalArgumentException(
+          s"source.$key (CREATE TABLE ...) is required for $kind"))
+      DdlParser.parse(ddl, tid) match {
+        case Seq(CreateTableEvent(_, i)) => i
+        case other => throw new IllegalArgumentException(
+          s"$key must be a single CREATE TABLE statement, parsed: $other")
+      }
+    }
+    val sp = new StreamingPipeline(spark, pd, sink)
+    // Deterministic log order by DEFAULT: a file topic carries a
+    // natural stable order (segment number from the file name + line
+    // index within the file), so __seq is a pure projection and the
+    // fast path's mono-id order-stability assumption never applies.
+    // `order.expr` overrides with a source-field expression over the
+    // raw `value` (e.g. a binlog position); `order.mode: none` drops
+    // to the legacy unordered stream (un-numbered file names).
+    // MIGRATION (r17): the default changed from unordered to `file`.
+    // Configs whose file names carry no usable segment number now
+    // fail at startup (loudly, with a remedy), and the wholetext
+    // read holds one whole segment per task — pre-r17 deployments
+    // that relied on the unordered stream must set
+    // `order.mode: none` explicitly (or fix their segment naming).
+    val orderExpr = pd.source.options.get("order.expr")
+    val orderMode = pd.source.options.getOrElse("order.mode",
+      if (orderExpr.isDefined) "expr" else "file")
+    val (stream, order) = orderMode match {
+      case "none" =>
+        (StreamingPipeline.fileJsonStream(spark, path), None)
+      case "expr" =>
+        (StreamingPipeline.fileJsonStream(spark, path),
+          Some(org.apache.spark.sql.functions.expr(orderExpr.getOrElse(
+            throw new IllegalArgumentException(
+              "order.mode=expr requires order.expr")))))
+      case "file" =>
+        val seqRegex = pd.source.options.getOrElse("order.file.regex",
+          StreamingPipeline.FileSeqRegex)
+        // fail at CONFIG time with a remedy, not mid-stream: every
+        // file numbered (< 2^21), numbers unique, segments
+        // wholetext-sized (bound overridable for large-heap
+        // deployments via order.file.max-bytes)
+        StreamingPipeline.validateFileTopicOrder(path, seqRegex,
+          maxFileBytes = pd.source.options.get("order.file.max-bytes")
+            .map(_.toLong).getOrElse(512L << 20),
+          // the session's Hadoop conf so remote topics (hdfs://,
+          // s3a://) resolve with the user's filesystem settings
+          hadoopConf = spark.sessionState.newHadoopConf())
+        (StreamingPipeline.fileJsonStreamOrdered(spark, path,
+            seqRegex = seqRegex),
+          Some(org.apache.spark.sql.functions.col(
+            StreamingPipeline.FileOrderCol)))
+      case other => throw new IllegalArgumentException(
+        s"order.mode must be file|expr|none: $other")
+    }
+    val checkpoint = pd.source.options.get("checkpoint")
+    // `tables: db.a, db.b` (one topic, many tables — per-table
+    // schemas under schema.ddl.<table>) or single `table:` + schema.ddl
+    val tables = pd.source.options.get("tables") match {
+      case Some(list) =>
+        list.split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { t =>
+          val tid = TableId.parse(t)
+          // full-id key first (db1.users and db2.users must not share
+          // one schema), bare table name as a back-compat fallback
+          val fullKey = s"schema.ddl.${tid.identifier}"
+          val key = if (pd.source.options.contains(fullKey)) fullKey
+                    else s"schema.ddl.${tid.table}"
+          tid -> schemaOf(tid, key)
+        }
+      case None =>
+        val tid = TableId.parse(pd.source.options.getOrElse("table",
+          throw new IllegalArgumentException(
+            s"source.table (or source.tables) is required for $kind")))
+        Seq(tid -> schemaOf(tid, "schema.ddl"))
+    }
+    sp.start(stream, format, tables, checkpointLocation = checkpoint, order = order)
+      .awaitTermination()
+    s"pipeline '${pd.name}': processed $path into ${pd.sink.kind} sink" +: report()
   }
-
-  /** Flink's debezium-json consuming option `debezium-json.schema-include`:
-    * the topic's records ride Connect schema-wrapped
-    * (`{"schema":..,"payload":..}`, schemas.enable=true producers).
-    */
-  private def schemaInclude(pd: PipelineDef): Boolean =
-    pd.source.options.get("debezium-json.schema-include").exists(_.toBoolean)
-
-  /** graft extension `debezium-json.connect-wire.enabled`: temporal
-    * payloads arrive in Debezium's Connect wire forms (epoch int64
-    * micros/millis, epoch-day int32) rather than stringified — what a
-    * real Debezium producer emits.
-    */
-  private def connectWire(pd: PipelineDef): Boolean =
-    pd.source.options.get("debezium-json.connect-wire.enabled").exists(_.toBoolean)
 
   private def buildSink(spark: SparkSession, pd: PipelineDef): (DataSink, () => Seq[String]) =
     pd.sink.kind match {

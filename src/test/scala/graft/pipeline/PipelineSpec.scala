@@ -579,6 +579,24 @@ class PipelineSpec extends SparkSpec {
     assert(out.tail.toSet === Set("db.t:1;11", "db.t:2;20"))
   }
 
+  test("CLI rejects debezium-only consume options on a canal-file source") {
+    val dir = java.nio.file.Files.createTempDirectory("cli_canal_opts").toFile
+    val yaml =
+      s"""source:
+         |  type: canal-file
+         |  path: ${dir.getAbsolutePath}
+         |  table: db.t
+         |  schema.ddl: "CREATE TABLE t (id BIGINT PRIMARY KEY, v INT)"
+         |  debezium-json.schema-include: true
+         |sink: { type: values }
+         |pipeline:
+         |  name: cli_canal_opts
+         |""".stripMargin
+    val ex = intercept[IllegalArgumentException](graft.tools.Cli.run(spark, yaml))
+    // the graft-cdc provider's message: one validation serves both
+    assert(ex.getMessage.contains("apply to format debezium-json only, not canal-json"))
+  }
+
   test("CLI mongo-file source: change-stream envelopes route per collection") {
     val dir = java.nio.file.Files.createTempDirectory("cli_mongo").toFile
     val feed = new java.io.File(dir, "feed"); feed.mkdirs()

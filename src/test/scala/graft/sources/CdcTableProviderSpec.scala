@@ -129,6 +129,17 @@ class CdcTableProviderSpec extends SparkSpec {
     // at-or-after (bin.000010, 900): keeps p900 + the rolled file; drops
     // p500 and the length-shorter (older) bin.9 despite its higher pos
     assert(ids === Set(3L, 4L))
+    // Connect-wrapped records carry their coordinates inside `payload`
+    val wrapped = spark.read.format("graft-cdc")
+      .option("path", writeFeed(binlogFeed.map(l =>
+        s"""{"schema":{"type":"struct"},"payload":$l}""")))
+      .option("schema.ddl", "CREATE TABLE users (id BIGINT PRIMARY KEY, v VARCHAR(32))")
+      .option("debezium-json.schema-include", "true")
+      .option("scan.startup.mode", "specific-offset")
+      .option("scan.startup.specific-offset.file", "bin.000010")
+      .option("scan.startup.specific-offset.pos", "900")
+      .load().select("id").collect().map(_.getLong(0)).toSet
+    assert(wrapped === Set(3L, 4L))
   }
 
   test("scan.startup scalar pos filters by feed position; timestamp by ts_ms") {
@@ -142,6 +153,38 @@ class CdcTableProviderSpec extends SparkSpec {
       "scan.startup.timestamp-millis" -> "30")
       .select("id").collect().map(_.getLong(0)).toSet
     assert(byTs === Set(3L, 4L))
+  }
+
+  test("timestamp startup: stream and batch both read source.ts_ms first, inside a Connect payload too") {
+    // source.ts_ms (binlog event time) and ts_ms (processing time) disagree
+    // on every record; two records ride Connect-wrapped. Cutoff 500: the
+    // event time decides, wherever the envelope carries it.
+    def flat(id: Int, srcTs: Option[Long], ts: Long) =
+      s"""{"before":null,"after":{"id":$id,"v":"x"},"op":"c","ts_ms":$ts,""" +
+        s""""source":{"db":"db","table":"users"${srcTs.fold("")(t => s""","ts_ms":$t""")}}}"""
+    def wrapped(id: Int, srcTs: Long, ts: Long) =
+      s"""{"schema":{"type":"struct"},"payload":${flat(id, Some(srcTs), ts)}}"""
+    val path = writeFeed(Seq(
+      flat(1, Some(100L), 900L), // event time before the cutoff
+      flat(2, Some(600L), 50L),
+      wrapped(3, 200L, 700L), // event time before the cutoff
+      wrapped(4, 800L, 10L),
+      flat(5, None, 550L))) // no source.ts_ms: the envelope ts_ms serves
+    val opts = Map(
+      "path" -> path,
+      "schema.ddl" -> "CREATE TABLE users (id BIGINT PRIMARY KEY, v VARCHAR(32))",
+      "debezium-json.schema-include" -> "true",
+      "scan.startup.mode" -> "timestamp",
+      "scan.startup.timestamp-millis" -> "500")
+    val batch = spark.read.format("graft-cdc").options(opts).load()
+      .select("id").collect().map(_.getLong(0)).toSet
+    val q = spark.readStream.format("graft-cdc").options(opts).load()
+      .writeStream.format("memory").queryName("cdc_ts_out")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    val stream = spark.table("cdc_ts_out").select("id").collect().map(_.getLong(0)).toSet
+    assert(batch === Set(2L, 4L, 5L))
+    assert(stream === batch)
   }
 
   test("gtid-set-only startup is rejected; stream-only modes are rejected") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.cdc.WireFormat
 import graft.model.{TableId, TableInfo}
 import graft.pipeline.{PipelineDef, PipelineRunner, SinkDef, SourceDef}
 import graft.sinks.ValuesDatabase
@@ -301,8 +302,8 @@ class StreamingSpec extends SparkSpec {
 
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath),
+    val q = sp.start(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo, tidB -> infoB))
     q.awaitTermination(60000)
     // users evolved; orders untouched by the users DDL
@@ -329,8 +330,8 @@ class StreamingSpec extends SparkSpec {
 
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath),
+    val q = sp.start(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid1 -> tableInfo, tid2 -> tableInfo))
     q.awaitTermination(60000)
     assert(sp.runner.registry.evolvedInfo(tid1).get.fieldNames === Seq("id", "v", "age"))
@@ -382,8 +383,8 @@ class StreamingSpec extends SparkSpec {
       SinkDef("values", Map.empty))
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pdCapture, sink)
-    val q = sp.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath),
+    val q = sp.start(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo))
     q.awaitTermination(60000)
     val pid = TableId.parse("db.products")
@@ -412,8 +413,8 @@ class StreamingSpec extends SparkSpec {
       """{"source":{"db":"db","table":"products"},"ddl":"CREATE TABLE products (id BIGINT PRIMARY KEY, name VARCHAR(20))"}""",
       """{"before":null,"after":{"id":100,"name":"widget"},"op":"c","ts_ms":2,"source":{"db":"db","table":"products"}}"""))
     val sink1 = new ValuesDatabase
-    val q1 = new StreamingPipeline(spark, pdCapture, sink1).startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath),
+    val q1 = new StreamingPipeline(spark, pdCapture, sink1).start(
+      StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo), checkpointLocation = Some(cp))
     q1.awaitTermination(60000)
     assert(sink1.results(pid) === Seq("db.products:100;widget"))
@@ -425,8 +426,8 @@ class StreamingSpec extends SparkSpec {
       """{"before":{"id":100,"name":"widget"},"after":{"id":100,"name":"gadget"},"op":"u","ts_ms":3,"source":{"db":"db","table":"products"}}"""))
     val sink2 = new ValuesDatabase
     val sp2 = new StreamingPipeline(spark, pdCapture, sink2)
-    val q2 = sp2.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath),
+    val q2 = sp2.start(
+      StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo), checkpointLocation = Some(cp))
     q2.awaitTermination(60000)
     assert(sp2.dynamicTables.keySet === Set(pid))
@@ -448,8 +449,8 @@ class StreamingSpec extends SparkSpec {
       lines.mkString("\n").getBytes("UTF-8"))
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath),
+    val q = sp.start(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo, tidB -> infoB))
     q.awaitTermination(60000)
     assert(sp.dynamicTables.isEmpty)
@@ -472,8 +473,8 @@ class StreamingSpec extends SparkSpec {
     val keyed = StreamingPipeline.withRoutingKey(batch)
     // one probe in the keyed frame itself (the single pass)...
     assert(keyed.queryExecution.optimizedPlan.toString.contains("get_json_object"))
-    val routed = StreamingPipeline.routeByTable(
-      keyed.persist(), "users")
+    val routed = StreamingPipeline.routeByTableId(
+      keyed.persist(), TableId.tableOnly("users"))
     // ...and NONE in the per-table route above the cache boundary: the
     // filter must be an attribute equality over the InMemoryRelation
     // (whose displayed child plan is provenance — the probe that ran once
@@ -509,8 +510,8 @@ class StreamingSpec extends SparkSpec {
       lines.mkString("\n").getBytes("UTF-8"))
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath),
+    val q = sp.start(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo, tidB -> infoB),
       order = Some(get_json_object(col("value"), "$.ts_ms").cast("long")))
     q.awaitTermination(60000)
@@ -559,8 +560,8 @@ class StreamingSpec extends SparkSpec {
       lines.mkString("\n").getBytes("UTF-8"))
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath),
+    val q = sp.start(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo),
       order = Some(get_json_object(col("value"), "$.ts_ms").cast("long")))
     q.awaitTermination(60000)
@@ -604,8 +605,8 @@ class StreamingSpec extends SparkSpec {
       ).mkString("\n").getBytes("UTF-8"))
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startMultiFromDebeziumJson(
-      StreamingPipeline.fileJsonStreamOrdered(spark, dir.getAbsolutePath),
+    val q = sp.start(
+      StreamingPipeline.fileJsonStreamOrdered(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo, tidB -> infoB),
       order = Some(col(StreamingPipeline.FileOrderCol)))
     q.awaitTermination(60000)
@@ -915,8 +916,9 @@ class StreamingSpec extends SparkSpec {
 
     val sink = new ValuesDatabase
     val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startFromCanalJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), tid, tableInfo)
+    val q = sp.start(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Canal,
+      Seq(tid -> tableInfo))
     q.awaitTermination(60000)
     assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
     assert(sink.results(tid).toSet === Set("db.users:1;a2;11"))
