@@ -6,7 +6,7 @@ import graft.schema.{SchemaMerging, SchemaRegistry}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Parquet-table MERGE sink: maintains one hash-bucketed parquet directory
   * per table (`bucket=N/part-*.parquet`) and applies each changelog batch
@@ -33,6 +33,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   *    the cheapest possible ingest (the Paimon-LSM / Hudi-MOR profile).
   *    [[read]] merges base ∪ deltas last-wins on the fly; [[compact]]
   *    folds the deltas into the bucketed base via the same COW merge.
+  *    A read's Spark jobs do not grow with the pending deltas: one
+  *    driver-side footer read per delta set, then one scan per distinct
+  *    delta schema and the merge.
   *
   * The bucket count and primary keys are pinned in a marker file at table
   * creation so key→bucket assignment and read-time merging stay stable
@@ -185,19 +188,14 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
     val p = path(tableId)
     val dirs = deltaDirs(p)
     if (dirs.isEmpty) return
-    // coerce the widened deltas onto the table's CURRENT schema (the
-    // compaction target) — a column the registry added but no delta
-    // carried still null-fills
-    val deltas = SchemaMerging.coerce(
-      readDeltasWidened(dirs),
-      org.apache.spark.sql.types.StructType(info.schema.fields.toSeq :+
-        org.apache.spark.sql.types.StructField(Changelog.OpCol,
-          org.apache.spark.sql.types.StringType) :+
-        org.apache.spark.sql.types.StructField(Changelog.SeqCol,
-          org.apache.spark.sql.types.LongType)))
+    // coerce the deltas onto the table's CURRENT schema (the compaction
+    // target) — a column the registry added but no delta carried still
+    // null-fills
+    val target = StructType(info.schema.fields.toSeq :+
+      StructField(Changelog.OpCol, StringType) :+ StructField(Changelog.SeqCol, LongType))
     // deltas are already on disk: the touched-set probe re-reads cheap
     // parquet, not the upstream pipeline — skip the write-ahead
-    cowApply(p, deltas, info, writeAhead = false)
+    readDeltas(dirs, Some(target)).foreach(cowApply(p, _, info, writeAhead = false))
     dirs.foreach(deleteRecursively)
     pendingRowsCache(p) = 0L
     baseRowsCache -= p
@@ -235,8 +233,7 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
 
   /** Pending COMMITTED delta sets: a dir without its _SUCCESS marker is a
     * crashed write whose batch replays via the checkpoint — readers and
-    * compaction must not see its partial rows (and an empty partial dir
-    * would fail the parquet schema read outright).
+    * compaction must not see its partial rows.
     */
   private def deltaDirs(p: String): Seq[java.io.File] =
     Option(deltaRoot(p).listFiles()).toSeq.flatten
@@ -244,17 +241,25 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
         new java.io.File(d, "_SUCCESS").isFile)
       .sortBy(_.getName)
 
-  /** Read pending deltas union-widened: deltas written before a schema
-    * change carry the old shape, so each delta dir coerces onto the
-    * least-common schema (old rows null-fill added columns) instead of a
-    * single multi-dir read that would silently take one file's schema.
-    * One cheap footer read per delta dir, driver-side; the data-plane
-    * coercions are pure projections.
+  /** Pending delta rows coerced onto `target` (default: the least-common
+    * schema of the deltas read), so deltas written before a schema change
+    * null-fill the columns added since and widen to the later types. Each
+    * delta dir holds the output of one write: the dirs group by their
+    * footer schema ([[schemaGroups]]: one footer read per delta dir,
+    * driver-side), and each group is read with one scan given that schema
+    * (no inference job), then coerced — one scan per distinct schema,
+    * whatever the number of deltas. Up to Spark's parallel partition
+    * discovery threshold (32 paths) a scan lists its files on the driver;
+    * beyond it, with one listing job. None when no delta holds a parquet
+    * file.
     */
-  private def readDeltasWidened(dirs: Seq[java.io.File]): DataFrame = {
-    val frames = dirs.map(d => spark.read.parquet(d.getAbsolutePath))
-    val target = SchemaMerging.leastCommonSchema(frames.map(_.schema))
-    frames.map(SchemaMerging.coerce(_, target)).reduce(_ unionByName _)
+  private def readDeltas(dirs: Seq[java.io.File],
+      target: Option[StructType]): Option[DataFrame] = {
+    val groups = schemaGroups(dirs)(identity)
+    lazy val to = target.getOrElse(SchemaMerging.leastCommonSchema(groups.map(_._1)))
+    groups.map { case (schema, ds) =>
+      SchemaMerging.coerce(spark.read.schema(schema).parquet(ds.map(_.getAbsolutePath): _*), to)
+    }.reduceOption(_ unionByName _)
   }
 
   /** Bucket-granular copy-on-write merge of one changelog batch. */
@@ -322,19 +327,14 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
     * rewrites only the buckets it touches, so after a widening — an INT
     * shard and a BIGINT shard routed into one table — bucket files of
     * different schemas sit side by side, and a plain read of the table
-    * (one file's schema) would fail on the others. Every bucket directory
-    * holds the output of one write, whose Spark schema is stamped in its
-    * parquet footers: buckets group by that schema (driver-side footer
-    * reads, no Spark job), each group is read with its own schema (no
-    * inference job) pruned to its buckets, then coerced — one scan per
-    * distinct schema.
+    * (one file's schema) would fail on the others. Buckets group by their
+    * footer schema ([[schemaGroups]]), each group is read with its own
+    * schema (no inference job) pruned to its buckets, then coerced — one
+    * scan per distinct schema.
     */
   private def readBase(p: String, buckets: Seq[Int],
       target: Option[StructType] = None): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val groups = buckets.sorted
-      .flatMap(b => footerSchema(new java.io.File(p, s"$BucketCol=$b"), conf).map(_ -> b))
-      .groupMap(_._1)(_._2).toSeq.sortBy(_._2.head)
+    val groups = schemaGroups(buckets.sorted)(b => new java.io.File(p, s"$BucketCol=$b"))
     lazy val to = target.getOrElse(SchemaMerging.leastCommonSchema(groups.map(_._1)))
     groups.map { case (schema, bs) =>
       val group = spark.read.schema(schema.add(BucketCol, IntegerType)).parquet(p)
@@ -346,12 +346,24 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
       .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], to))
   }
 
-  /** The Spark schema a bucket directory's write stamped into its parquet
-    * footer (None for a directory holding no parquet file).
+  /** `keys` grouped by the Spark schema stamped in the parquet footers of
+    * their directories (`dirOf`), groups in first-key order. Every bucket
+    * or delta directory holds the output of one write, so one footer per
+    * directory, read driver-side with no Spark job, stands for all its
+    * files. A directory holding no parquet file joins no group.
     */
-  private def footerSchema(bucketDir: java.io.File,
+  private def schemaGroups[K](keys: Seq[K])(dirOf: K => java.io.File): Seq[(StructType, Seq[K])] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val stamped = keys.flatMap(k => footerSchema(dirOf(k), conf).map(_ -> k))
+    stamped.map(_._1).distinct.map(s => s -> stamped.collect { case (`s`, k) => k })
+  }
+
+  /** The Spark schema a directory's write stamped into its parquet footer
+    * (None for a directory holding no parquet file).
+    */
+  private def footerSchema(dir: java.io.File,
       conf: org.apache.hadoop.conf.Configuration): Option[StructType] =
-    Option(bucketDir.listFiles()).toSeq.flatten.find(_.getName.endsWith(".parquet")).map { f =>
+    Option(dir.listFiles()).toSeq.flatten.find(_.getName.endsWith(".parquet")).map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
@@ -461,38 +473,34 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
     // marker is the commit point); an uncommitted staging is left for
     // the writer to discard
     recover(p, discardUncommitted = false)
-    val dirs = deltaDirs(p)
     val baseExists = Option(new java.io.File(p).listFiles())
       .exists(_.exists(_.getName.startsWith(s"$BucketCol=")))
-    if (!baseExists && dirs.isEmpty) {
-      // truncated (or never-written) table: empty frame with the
-      // registry's schema, so downstream reads keep working
-      val schema = registry.flatMap(_.evolvedInfo(tableId)).map(_.schema)
-        .getOrElse(throw new IllegalStateException(
-          s"$tableId has no data and no registered schema"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    if (dirs.isEmpty) {
-      readBase(p, listBuckets(p))
-    } else {
-      val pks = readMeta(p).flatMap(_.get("pks"))
-        .map(_.split(",").filter(_.nonEmpty).toSeq)
-        .getOrElse(throw new IllegalStateException(s"no pk marker for $tableId"))
-      val deltas = readDeltasWidened(dirs)
-      val all =
-        if (!baseExists) deltas
-        else {
-          val base = readBase(p, listBuckets(p))
-            .withColumn(Changelog.OpCol, lit("+I"))
-            .withColumn(Changelog.SeqCol, lit(-1L))
-          // base written before a schema change lacks added columns (and
-          // vice versa after compaction) — widen both sides
-          val target = SchemaMerging.leastCommonSchema(Seq(base.schema, deltas.schema))
-          SchemaMerging.coerce(base, target)
-            .unionByName(SchemaMerging.coerce(deltas, target))
-        }
-      Changelog.materialize(all, pks)
+    readDeltas(deltaDirs(p), target = None) match {
+      case None if !baseExists =>
+        // truncated (or never-written) table: empty frame with the
+        // registry's schema, so downstream reads keep working
+        val schema = registry.flatMap(_.evolvedInfo(tableId)).map(_.schema)
+          .getOrElse(throw new IllegalStateException(
+            s"$tableId has no data and no registered schema"))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      case None => readBase(p, listBuckets(p))
+      case Some(deltas) =>
+        val pks = readMeta(p).flatMap(_.get("pks"))
+          .map(_.split(",").filter(_.nonEmpty).toSeq)
+          .getOrElse(throw new IllegalStateException(s"no pk marker for $tableId"))
+        val all =
+          if (!baseExists) deltas
+          else {
+            val base = readBase(p, listBuckets(p))
+              .withColumn(Changelog.OpCol, lit("+I"))
+              .withColumn(Changelog.SeqCol, lit(-1L))
+            // base written before a schema change lacks added columns (and
+            // vice versa after compaction) — widen both sides
+            val target = SchemaMerging.leastCommonSchema(Seq(base.schema, deltas.schema))
+            SchemaMerging.coerce(base, target)
+              .unionByName(SchemaMerging.coerce(deltas, target))
+          }
+        Changelog.materialize(all, pks)
     }
   }
 }

@@ -52,7 +52,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    file-length → name → pos order ([[Offsets.binlogAtOrAfter]]) — a
   *    plain predicate over the raw JSON, applied BEFORE decode;
   *  - `.pos` alone filters by the feed position `__seq` (the scalar fast
-  *    path); `.gtid-set` alone is rejected — testing per-event GTID
+  *    path; `__seq` is defined once, on `FeedLines`);
+  *    `.gtid-set` alone is rejected — testing per-event GTID
   *    containment needs server state this batch relation does not have;
   *  - `scan.startup.mode=timestamp` filters by the envelope's event time
   *    ([[graft.cdc.WireFormat.eventTime]]: debezium `source.ts_ms`, then
@@ -182,24 +183,17 @@ object CdcTableProvider {
               override def sqlContext: SQLContext = context
               override def schema: StructType = fullSchema
               override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-                // Feed order is (file name ascending, line offset within
-                // file) — NOT the DataFrame text scan's partition order,
-                // which bin-packs files by SIZE (largest first), so a
-                // monotonically_increasing_id over it would misorder
-                // events across files and latest-wins materialization
-                // would pick wrong winners. textFile keeps Hadoop split
-                // order (paths in the order given, offsets ascending
-                // within each file), so zipWithIndex yields the true feed
-                // position. zipWithIndex costs one extra partition-count
-                // job — the price of a total order over a multi-file
-                // batch feed.
+                // one partition per feed file, numbered as the stream
+                // numbers it (see FeedLines)
                 val session = context.sparkSession
-                val sc = session.sparkContext
                 val files = listFeedFiles(path, session.sessionState.newHadoopConf())
-                val lines = sc.textFile(files.mkString(","))
-                  .zipWithIndex()
-                  .map { case (line, idx) =>
-                    org.apache.spark.sql.Row(line, idx)
+                val lines = session.sparkContext
+                  .parallelize(files.zipWithIndex, math.max(files.size, 1))
+                  .flatMap { case (file, fileIdx) =>
+                    val ls = new FeedLines(file, fileIdx)
+                    org.apache.spark.TaskContext.get()
+                      .addTaskCompletionListener[Unit](_ => ls.close())
+                    ls.map { case (line, seq) => org.apache.spark.sql.Row(line, seq) }
                   }
                 val json = session.createDataFrame(lines, StructType(Seq(
                   StructField("value", StringType),
@@ -236,6 +230,38 @@ object CdcTableProvider {
     else Seq(path)
   }
 
+  /** The lines of the `fileIdx`-th file of [[listFeedFiles]], each with
+    * its feed position `__seq = (fileIdx << 33) | lineNo` (`lineNo`
+    * 0-based within the file): totally ordered in feed order, stable
+    * across retries and restarts, and the same on the batch relation and
+    * the stream, which both read through this. Scalar
+    * `scan.startup.specific-offset.pos` keeps the rows with
+    * `__seq >= pos`; on a single-file feed that is the 0-based line
+    * number. A file whose suffix names a Hadoop compression codec
+    * (`.gz`, `.bz2`, ...) is decompressed, as Spark's text source does.
+    */
+  private final class FeedLines(file: String, fileIdx: Int)
+      extends Iterator[(String, Long)] with java.io.Closeable {
+    private val in = {
+      val hp = new org.apache.hadoop.fs.Path(file)
+      val conf = new org.apache.hadoop.conf.Configuration()
+      val raw = hp.getFileSystem(conf).open(hp)
+      val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(hp)
+      new java.io.BufferedReader(new java.io.InputStreamReader(
+        if (codec == null) raw else codec.createInputStream(raw), "UTF-8"))
+    }
+    private var line = in.readLine()
+    private var lineNo = 0L
+    override def hasNext: Boolean = line != null
+    override def next(): (String, Long) = {
+      val out = (line, (fileIdx.toLong << 33) | lineNo)
+      line = in.readLine()
+      lineNo += 1
+      out
+    }
+    override def close(): Unit = in.close()
+  }
+
   private final case class FilesOffset(n: Int) extends Offset {
     override def json(): String = s"""{"files":$n}"""
   }
@@ -245,9 +271,8 @@ object CdcTableProvider {
     * ChangelogMode.all()). Offsets are file-granular over the name-sorted
     * feed directory (Spark's own FileStreamSource model): an offset is
     * the count of files consumed, so checkpoint resume replays from the
-    * first unconsumed file. `__seq` is `(fileIdx << 33) | lineNo` —
-    * totally ordered like the batch relation's zipWithIndex, stable
-    * across retries and restarts.
+    * first unconsumed file. `__seq` is the batch relation's
+    * (`FeedLines`).
     *
     * Startup modes: `initial`/`earliest-offset` read the whole feed;
     * `latest-offset` starts past the files present at query start;
@@ -341,13 +366,7 @@ object CdcTableProvider {
       new PartitionReader[InternalRow] {
         private val decoder = format.rowDecoder(payload)
         private val parser = new org.apache.spark.sql.graft.JsonLineParser(decoder.schema)
-        private val reader = {
-          val hp = new org.apache.hadoop.fs.Path(fp.file)
-          val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          new java.io.BufferedReader(
-            new java.io.InputStreamReader(fs.open(hp), "UTF-8"))
-        }
-        private var lineNo = -1L
+        private val lines = new FeedLines(fp.file, fp.fileIdx)
         private val pending = scala.collection.mutable.Queue.empty[InternalRow]
 
         private val out: (String, InternalRow, Long) => Unit = (tag, image, seq) => {
@@ -365,17 +384,15 @@ object CdcTableProvider {
 
         override def next(): Boolean = {
           while (pending.isEmpty) {
-            val line = reader.readLine()
-            if (line == null) return false
-            lineNo += 1
-            val seq = (fp.fileIdx.toLong << 33) | lineNo
+            if (!lines.hasNext) return false
+            val (line, seq) = lines.next()
             if (seq >= fp.minSeq)
               parser.parse(line).foreach(decoder.emit(_, seq, fp.minTs, out))
           }
           true
         }
         override def get(): InternalRow = pending.dequeue()
-        override def close(): Unit = reader.close()
+        override def close(): Unit = lines.close()
       }
     }
   }

@@ -369,6 +369,95 @@ class ParquetUpsertSpec extends SparkSpec {
       (1L, "a2", Some(11)), (2L, "b2", Some(22)), (3L, "c", Some(33))))
   }
 
+  test("merge-on-read: planning a read runs no Spark job, whatever the pending deltas") {
+    // the deltas group by footer schema and each group is one scan given
+    // its schema, so building the read infers nothing: no job per delta
+    val dir = java.nio.file.Files.createTempDirectory("pqsink_mor_jobs").toFile
+    val sink = new ParquetUpsertSink(spark, dir.getAbsolutePath,
+      numBuckets = 4, mergeOnRead = true)
+    val tid = TableId.parse("db.j")
+    val narrow = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
+      primaryKeys = Seq("id"))
+    val wide = TableInfo(narrow.schema.add(StructField("n", IntegerType)),
+      primaryKeys = Seq("id"))
+    def narrowRows(rows: (Long, String, String, Long)*) =
+      rows.toDF("id", "v", Changelog.OpCol, Changelog.SeqCol)
+    def wideRows(rows: (Long, String, Int, String, Long)*) =
+      rows.toDF("id", "v", "n", Changelog.OpCol, Changelog.SeqCol)
+    sink.write(tid, narrowRows((1L, "a", "+I", 1L), (2L, "b", "+I", 2L)), narrow)
+    sink.compact(tid, narrow) // the base
+    sink.write(tid, narrowRows((1L, "a1", "+U", 3L)), narrow)
+    sink.write(tid, narrowRows((3L, "c", "+I", 4L)), narrow)
+    sink.write(tid, wideRows((4L, "d", 40, "+I", 5L)), wide)
+    sink.write(tid, narrowRows((2L, "b", "-D", 6L)), narrow)
+    sink.write(tid, wideRows((1L, "a2", 10, "+U", 7L)), wide)
+    // a crashed write: data files, no _SUCCESS — readers must skip it
+    val partial = new java.io.File(dir, "db/j__delta/delta-00005")
+    wideRows((5L, "e", 50, "+I", 8L)).write.parquet(partial.getAbsolutePath)
+    assert(new java.io.File(partial, "_SUCCESS").delete())
+
+    val sc = spark.sparkContext
+    val group = "mor-read-plan"
+    sc.setJobGroup(group, "build a merge-on-read read")
+    val df = try sink.read(tid) finally sc.clearJobGroup()
+    // the status tracker follows the listener bus, which delivers events
+    // in order: once a later job is visible, any job the read ran is too
+    val barrier = group + "-barrier"
+    sc.setJobGroup(barrier, "listener bus barrier")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(barrier).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(barrier).nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "building the merge-on-read read ran Spark jobs")
+
+    val rows = df.collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[String]("v"), Option(r.getAs[Integer]("n")).map(_.toInt)))
+    assert(rows.toSet === Set((1L, "a2", Some(10)), (3L, "c", None), (4L, "d", Some(40))))
+  }
+
+  test("merge-on-read: INT and BIGINT deltas and an added column read, compact and read again") {
+    // base in the oldest schema; `n` is INT in an early delta and BIGINT in
+    // a later one; the last delta adds `tag`
+    val dir = java.nio.file.Files.createTempDirectory("pqsink_mor_mixed").toFile
+    val sink = new ParquetUpsertSink(spark, dir.getAbsolutePath,
+      numBuckets = 4, mergeOnRead = true)
+    val tid = TableId.parse("db.w")
+    def info(n: DataType, extra: StructField*) = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("n", n),
+        StructField("v", StringType)) ++ extra),
+      primaryKeys = Seq("id"))
+    val v1 = info(IntegerType)
+    val v2 = info(LongType)
+    val v3 = info(LongType, StructField("tag", StringType))
+    sink.write(tid, Seq((1L, 1, "a", "+I", 1L), (2L, 2, "b", "+I", 2L))
+      .toDF("id", "n", "v", Changelog.OpCol, Changelog.SeqCol), v1)
+    sink.compact(tid, v1)
+    sink.write(tid, Seq((3L, 3, "c", "+I", 3L))
+      .toDF("id", "n", "v", Changelog.OpCol, Changelog.SeqCol), v1)
+    sink.write(tid, Seq((1L, 5000000000L, "a2", "+U", 4L))
+      .toDF("id", "n", "v", Changelog.OpCol, Changelog.SeqCol), v2)
+    sink.write(tid, Seq(
+      (4L, 4L, "d", Option("x"), "+I", 5L),
+      (2L, 2L, "b", Option.empty[String], "-D", 6L))
+      .toDF("id", "n", "v", "tag", Changelog.OpCol, Changelog.SeqCol), v3)
+
+    val expected = Set(
+      (1L, 5000000000L, "a2", None), (3L, 3L, "c", None), (4L, 4L, "d", Some("x")))
+    def state() = {
+      val df = sink.read(tid)
+      assert(df.schema("n").dataType === LongType)
+      df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("n"),
+        r.getAs[String]("v"), Option(r.getAs[String]("tag")))).toSet
+    }
+    assert(state() === expected)
+    sink.compact(tid, v3)
+    assert(new java.io.File(dir, "db/w__delta").listFiles().isEmpty)
+    assert(state() === expected)
+  }
+
   test("truncate clears data but keeps the table writable; drop removes it") {
     import graft.model.{CreateTableEvent, DropTableEvent, TruncateTableEvent}
     val dir = java.nio.file.Files.createTempDirectory("pqsink_trunc").toFile

@@ -155,6 +155,33 @@ class CdcTableProviderSpec extends SparkSpec {
     assert(byTs === Set(3L, 4L))
   }
 
+  test("multi-file feed: scalar pos selects the same rows on batch and stream") {
+    // __seq is (fileIdx << 33) | lineNo on both faces: pos 3 is past the
+    // first file's two lines and before every line of the second file
+    val dir = java.nio.file.Files.createTempDirectory("cdc_dsv2_pos").toFile
+    def create(id: Int) =
+      s"""{"before":null,"after":{"id":$id,"v":"x"},"op":"c","ts_ms":$id,"source":{"db":"db","table":"users"}}"""
+    def write(name: String, ids: Int*): Unit =
+      java.nio.file.Files.write(new java.io.File(dir, name).toPath,
+        ids.map(create).mkString("\n").getBytes("UTF-8"))
+    write("part-000.json", 1, 2)
+    write("part-001.json", 3, 4, 5)
+    val opts = Map(
+      "path" -> dir.getAbsolutePath,
+      "schema.ddl" -> "CREATE TABLE users (id BIGINT PRIMARY KEY, v VARCHAR(32))",
+      "scan.startup.mode" -> "specific-offset",
+      "scan.startup.specific-offset.pos" -> "3")
+    val batch = spark.read.format("graft-cdc").options(opts).load()
+      .select("id").collect().map(_.getLong(0)).toSet
+    val q = spark.readStream.format("graft-cdc").options(opts).load()
+      .writeStream.format("memory").queryName("cdc_pos_out")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    val stream = spark.table("cdc_pos_out").select("id").collect().map(_.getLong(0)).toSet
+    assert(batch === Set(3L, 4L, 5L))
+    assert(stream === batch)
+  }
+
   test("timestamp startup: stream and batch both read source.ts_ms first, inside a Connect payload too") {
     // source.ts_ms (binlog event time) and ts_ms (processing time) disagree
     // on every record; two records ride Connect-wrapped. Cutoff 500: the
