@@ -62,18 +62,12 @@ object Bench {
     // codec + GC luck); the committed artifact IS the authoritative
     // record, so it carries BOTH measured totals and the per-query min —
     // a regression is only real if it shows in both runs
-    def measuredPass(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try consume(fn, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    val run1 = measuredPass()
+    def measuredPass(): Pass =
+      timedPass(SparkEntry.queries.keys.toSeq)(name =>
+        consume(SparkEntry.queries(name), sfDir))
+    val pass1 = measuredPass()
     logCodeCache("after-pass1")
-    val run2 = measuredPass().toMap
+    val pass2 = measuredPass()
     logCodeCache("after-pass2")
     // r19 cache hygiene: after BOTH measured passes (pass-2 cells keep
     // their warm-cache semantics — unchanged since r8), release the 104
@@ -81,21 +75,27 @@ object Bench {
     // run with a clean storage pool, and log the held set so unbounded
     // growth across a long session is visible in every artifact.
     logAndClearCaches(spark, "after-pass2")
-    val mins = run1.map { case (k, v) => k -> math.min(v, run2(k)) }
+    // a query that threw in either pass is no cell: it is listed under
+    // "failed" and the bench exits non-zero after writing its line
+    val failed = (pass1.failed ++ pass2.failed).distinct.sorted
+    val run2 = pass2.seconds.toMap
+    val cells = pass1.seconds.filterNot { case (k, _) => failed.contains(k) }
+    val mins = cells.map { case (k, v) => k -> math.min(v, run2(k)) }
     // SHORT query keys (qNN — the prefix before the first underscore, all
     // unique) at 2 decimals: the driver stores only the output TAIL, and
     // full names at 75+ queries pushed the one-line JSON past its window
     // in r8 ("parsed": null, first queries sliced). Key->name mapping is
     // SparkEntry.queries; protocol prose lives in NOTES.md, not here.
-    val prefixes = mins.map(_._1.split("_")(0))
-    require(prefixes.distinct.size == mins.size,
+    val prefixes = SparkEntry.queries.keys.toSeq.map(shortKey)
+    require(prefixes.distinct.size == prefixes.size,
       s"duplicate qNN bench-key prefix would silently collapse JSON entries: " +
         prefixes.groupBy(identity).collect { case (p, g) if g.size > 1 => p }.mkString(","))
-    val qs = mins.map { case (k, v) => "\"" + k.split("_")(0) + "\":" + f"$v%.2f" }
+    val qs = mins.map { case (k, v) => "\"" + shortKey(k) + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
+    val failedJson = failed.map(k => "\"" + shortKey(k) + "\"").mkString("[", ",", "]")
     val total = mins.map(_._2).sum
-    val t1 = run1.map(_._2).sum
-    val t2 = run2.valuesIterator.sum
+    val t1 = cells.map(_._2).sum
+    val t2 = cells.map { case (k, _) => run2(k) }.sum
     // the stream phase is 2-run too: the sf0.001 warm pass (tiny 250-row
     // batches) does not push the hot decode/merge loops past the C2
     // compile threshold, so the first measured run still ramps through
@@ -120,6 +120,7 @@ object Bench {
     println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec",""" +
       s""""run_totals":[${f"$t1%.2f"},${f"$t2%.2f"}],""" +
       s""""total_min_run":${f"${math.min(t1, t2)}%.2f"},"queries":$qs,""" +
+      s""""failed":$failedJson,""" +
       s""""stream_events_per_s":${st.eps},"stream_steady_eps":${st.steadyEps},""" +
       s""""stream_runs_eps":[${stA.eps},${stB.eps}],""" +
       s""""stream_batches":${st.batches},""" +
@@ -134,7 +135,33 @@ object Bench {
       s""""note":"q keys=qNN ids (names in SparkEntry.queries); value=sum of per-query min of 2 passes; total_min_run=best single pass; stream/ingest=best of 2; protocol in NOTES.md",""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** One measured pass: wall seconds of each query that ran, in name
+    * order, and the names of those that threw.
+    */
+  final case class Pass(seconds: Seq[(String, Double)], failed: Seq[String])
+
+  /** Time `run` over `names` in name order. A query that throws goes to
+    * `failed`, never into `seconds`: its elapsed time would read as a
+    * fast query.
+    */
+  private[graft] def timedPass(names: Seq[String])(run: String => Unit): Pass = {
+    val outcomes = names.sorted.map { name =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { run(name); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+      (name, (System.nanoTime() - t0) / 1e9, ok)
+    }
+    Pass(outcomes.collect { case (n, secs, true) => n -> secs },
+      outcomes.collect { case (n, _, false) => n })
+  }
+
+  /** The JSON key of a query: its qNN prefix. */
+  private def shortKey(name: String): String = name.split("_")(0)
 
   /** Machine-state calibration: wall seconds for a fixed, deterministic,
     * single-thread integer-mixing spin (500M xorshift-multiply rounds —

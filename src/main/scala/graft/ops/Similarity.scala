@@ -106,26 +106,27 @@ object Similarity {
       eigenvalues: Array[Double])
 
   /** One-pass PCA fit: the d×d Gram matrix and the mean accumulate in a
-    * single `treeAggregate` over fixed-size arrays (the MLlib
-    * RowMatrix shape — this is the one place an RDD fold is the honest
-    * kernel: n×d² exploded rows through a shuffle would be astronomically
-    * worse at scale, while per-partition array accumulation moves d²+d
-    * values per partition), then the driver runs an O(d³) Jacobi
-    * eigensolver on the d×d covariance — control-plane work, d is 64-1024
-    * for embedding stores, never data-sized.
+    * single `treeAggregate` over fixed-size arrays (the MLlib RowMatrix
+    * shape, and the same fold as the Lloyd rounds of [[lloydRound]]:
+    * per-partition array accumulation moves d²+d values per partition,
+    * where n×d² exploded rows through a shuffle would be astronomically
+    * worse at scale), then the driver runs an O(d³) Jacobi eigensolver on
+    * the d×d covariance — control-plane work, d is 64-1024 for embedding
+    * stores, never data-sized.
     *
-    * BIT-REPRODUCIBLE under any partitioning (r16, same trick as
-    * [[trainIvfCentroids]]'s fixed-point Lloyd): every accumulated term —
-    * each component `x_i` and each product `x_i·x_j` — is quantized to
-    * the 2⁻²⁴ grid (`floor(v·2²⁴ + 0.5)`) and summed as a Long; integer
-    * addition is associative, so partition/combine order cannot move the
-    * sums. Means and second moments are then ONE IEEE division each of
-    * exactly-represented integers, the covariance/Jacobi pipeline is
-    * deterministic driver-side arithmetic over those — the whole rotation
-    * (and everything trained on rotated vectors, e.g. OPQ-lite codebooks)
-    * is a pure function of the data. Quantizing products (not factors)
-    * keeps the grid error ≤ 2⁻²⁵ per term; the driver-side require guards
-    * the 2⁵³ exactness window.
+    * BIT-REPRODUCIBLE under any partitioning (r16, same trick as the
+    * fixed-point Lloyd): every accumulated term — each component `x_i`
+    * and each product `x_i·x_j` — goes through [[FixedPoint.quantize]]
+    * (the 2⁻²⁴ grid, NaN/Inf rejected with the dimension named) and is
+    * summed as a Long; integer addition is associative, so
+    * partition/combine order cannot move the sums. Means and second
+    * moments are then ONE IEEE division each of exactly-represented
+    * integers, the covariance/Jacobi pipeline is deterministic
+    * driver-side arithmetic over those — the whole rotation (and
+    * everything trained on rotated vectors, e.g. OPQ-lite codebooks) is a
+    * pure function of the data. Quantizing products (not factors) keeps
+    * the grid error ≤ 2⁻²⁵ per term; the driver-side require guards the
+    * 2⁵³ exactness window.
     */
   def pcaFit(df: DataFrame, vecCol: String, k: Int): PcaModel = {
     val first = df.select(col(vecCol)).where(col(vecCol).isNotNull).head()
@@ -135,49 +136,40 @@ object Similarity {
     // fixed-point Longs on the 2^-24 grid
     val tri = d * (d + 1) / 2
     val zero = new Array[Long](1 + d + tri)
-    val scale = 16777216.0d // 2^24, the LloydScale grid
-    def q(x: Double): Long = math.floor(x * scale + 0.5d).toLong
     def seqOp(acc: Array[Long], v: Seq[Double]): Array[Long] = {
       require(v.size == d,
         s"ragged embedding dimension: expected $d (from the first row), got ${v.size}")
       acc(0) += 1
+      // every component first, so a NaN/Inf fails naming its own dim
+      // rather than the dim of an earlier factor in a product
       var i = 0
+      while (i < d) { acc(1 + i) += FixedPoint.quantize(v(i), i); i += 1 }
       var t = 1 + d
+      i = 0
       while (i < d) {
         val vi = v(i)
-        // the quantizer maps NaN/Inf to 0 silently (floor(NaN)+toLong);
-        // a Double accumulator would have propagated NaN loudly — keep
-        // that failure mode loud rather than training a skewed rotation
-        require(!vi.isNaN && !vi.isInfinite,
-          s"non-finite embedding component at dim $i")
-        acc(1 + i) += q(vi)
         var j = i
-        while (j < d) { acc(t) += q(vi * v(j)); t += 1; j += 1 }
+        while (j < d) { acc(t) += FixedPoint.quantize(vi * v(j), i); t += 1; j += 1 }
         i += 1
       }
       acc
     }
-    def combOp(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
     val acc = df.select(col(vecCol).cast("array<double>"))
       .where(col(vecCol).isNotNull)
       .rdd.map(_.getSeq[Double](0))
-      .treeAggregate(zero)(seqOp, combOp)
+      .treeAggregate(zero)(seqOp, FixedPoint.addInto)
     acc.foreach(s => require(math.abs(s) < (1L << 53),
       s"PCA fixed-point sum $s exceeds the 2^53 double-exactness window; " +
         "raise the quantization grid for this corpus"))
     val n = acc(0).toDouble
     require(n > 1, s"PCA needs more than one vector, got $n")
-    val means = Array.tabulate(d)(i => acc(1 + i).toDouble / (n * scale))
+    val means = Array.tabulate(d)(i => acc(1 + i).toDouble / (n * FixedPoint.Scale))
     // covariance (population): E[x xT] - mean meanT, symmetrized from the
     // upper triangle
     val cov = Array.ofDim[Double](d, d)
     var t = 1 + d
     for (i <- 0 until d; j <- i until d) {
-      val c = acc(t).toDouble / (n * scale) - means(i) * means(j)
+      val c = acc(t).toDouble / (n * FixedPoint.Scale) - means(i) * means(j)
       cov(i)(j) = c; cov(j)(i) = c
       t += 1
     }
@@ -592,71 +584,103 @@ object Similarity {
   def nearestCentroids(vec: Column, centroids: Array[(Int, Array[Double])], n: Int): Column =
     graft.functions.expressions.NativeVectorFunctions.nearestCentroids(vec, centroids, n)
 
-  /** Fixed-point scale for [[trainIvfCentroids]]'s Lloyd accumulation:
-    * components are quantized to the 2⁻²⁴ grid before summing.
+  /** One fixed-point Lloyd round over `m` codebooks of `k` entries of
+    * `sd` components each — PQ's subspaces, or IVF as m = 1 with the
+    * centroid index as the code. `codes` is the caller's assignment
+    * projection of `__v` under `books` ([[nearestCentroids]] or
+    * [[PqCodesExpr]]: the one place the argmin and its strict-`<` tie
+    * rule live). Every non-null vector folds into one `[n, Σq(x_0..x_sd-1)]`
+    * Long cell per (subspace, code) in a single `treeAggregate`: one job,
+    * no row leaves its task, each task ships one m×k×(sd+1) array (on
+    * many partitions the tree level combines those arrays, never rows) —
+    * the same fold as [[pcaFit]]'s Gram.
+    *
+    * Long addition is associative, so the sums are identical under any
+    * partitioning. Each new component is then ONE IEEE division
+    * `s / (n·2²⁴)` of exactly-represented integers on the driver — the
+    * same double on every engine. The require guards the |s| < 2⁵³
+    * exactness window (≈ 5·10⁸ rows per cell at |x| ≤ 16 — past it, raise
+    * the grid, don't drop the guard). A cell no vector chose keeps its
+    * entry.
     */
-  private val LloydScale = 16777216.0d // 2^24
+  private def lloydRound(vecs: DataFrame, codes: Column,
+      books: Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
+    val m = books.length
+    val k = books(0).length
+    val sd = books(0)(0).length
+    val cell = 1 + sd
+    def seqOp(acc: Array[Long], row: org.apache.spark.sql.catalyst.InternalRow): Array[Long] = {
+      val v = row.getArray(0)
+      require(v.numElements() == m * sd,
+        s"ragged embedding dimension: expected ${m * sd}, got ${v.numElements()}")
+      val c = row.getArray(1)
+      var j = 0
+      while (j < m) {
+        var t = (j * k + c.getInt(j)) * cell
+        acc(t) += 1
+        var i = j * sd
+        while (i < (j + 1) * sd) {
+          t += 1; acc(t) += FixedPoint.quantize(v.getDouble(i), i); i += 1
+        }
+        j += 1
+      }
+      acc
+    }
+    val sums = vecs.where(col("__v").isNotNull).select(col("__v"), codes)
+      .queryExecution.toRdd
+      .treeAggregate(new Array[Long](m * k * cell))(seqOp, FixedPoint.addInto)
+    Array.tabulate(m, k) { (j, c) =>
+      val t = (j * k + c) * cell
+      val n = sums(t)
+      if (n == 0) books(j)(c)
+      else Array.tabulate(sd) { i =>
+        val s = sums(t + 1 + i)
+        require(math.abs(s) < (1L << 53),
+          s"Lloyd fixed-point sum $s exceeds the 2^53 double-exactness " +
+            "window; raise the quantization grid for this corpus")
+        s.toDouble / (n.toDouble * FixedPoint.Scale)
+      }
+    }
+  }
 
   /** Deterministic k-means-lite centroids for IVF: init = the `nlist`
-    * vectors with the smallest ids, then `iters` Lloyd rounds computed as
-    * DataFrame jobs. Assignment is the [[nearestCentroid]] projection (no
-    * crossJoin/window); the mean update runs dim per-element sum
-    * aggregates in ONE hash agg whose map-side partials reduce each task
-    * to ≤ nlist×(dim+1) values before the shuffle, so shuffle volume is
-    * O(tasks×nlist×dim) — independent of corpus size. The driver only
-    * ever holds the centroid table — O(nlist×dim) — never corpus rows.
+    * vectors with the smallest ids, then `iters` rounds of [[lloydRound]]
+    * with m = 1 over the persisted vector projection. Assignment is the
+    * [[nearestCentroids]] projection (ties to the smaller id); the mean
+    * update is one `treeAggregate` of fixed-point Long cells, so training
+    * runs 1 + `iters` jobs and never shuffles a row, and the driver only
+    * ever holds the O(nlist×dim) centroid table — never corpus rows.
     *
-    * BIT-REPRODUCIBLE under any partitioning (r15, verdict #4): the mean
-    * update accumulates in FIXED POINT — each component is quantized to
-    * the 2⁻²⁴ grid (`floor(x·2²⁴ + 0.5)`, exact in double for |x| < 2²⁵)
-    * and summed as a Long, and integer addition is associative, so the
-    * per-cluster sums are identical whatever order Spark's hash agg
-    * combines partials in. The new centroid component is then ONE IEEE
-    * division `sF / (n·2²⁴)` of exactly-represented integers — the same
-    * double on every engine, which is what lets the TRAINED q33 gate
-    * exist (DuckDB folds the identical update; r14 had to pin iters=0
-    * because double-sum training was accumulation-order dependent).
-    * Quantization costs 2⁻²⁵ per component per round — noise against
-    * k-means' own convergence tolerance. The driver-side require guards
-    * the |sum| < 2⁵³ exactness window (≈ 5·10⁸ rows per cluster at
-    * |x| ≤ 16 — past it, raise the grid, don't drop the guard).
+    * BIT-REPRODUCIBLE under any partitioning (r15, verdict #4): the
+    * fixed-point sums cannot depend on combine order, and each centroid
+    * component is one IEEE division — which is what lets the TRAINED q33
+    * gate exist (DuckDB folds the identical update; r14 had to pin
+    * iters=0 because double-sum training was accumulation-order
+    * dependent). Quantization costs 2⁻²⁵ per component per round — noise
+    * against k-means' own convergence tolerance. Null vectors train
+    * nothing; NaN/Inf components and ragged dimensions fail loudly.
     */
   def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int = 3): Array[(Int, Array[Double])] = {
-    // the vector projection feeds every Lloyd round: persist it once
-    // (standard k-means practice; spills to disk if it outgrows memory)
-    val vecs = corpus.select(col(vecCol).cast("array<double>").as("__v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var centroids: Array[(Int, Array[Double])] =
-        corpus.orderBy(col(idCol)).limit(nlist)
-          .select(col(vecCol).cast("array<double>")).collect()
-          .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
-      val dim = centroids.headOption.map(_._2.length).getOrElse(0)
-      for (_ <- 0 until iters) {
-        val sums = (0 until dim).map(i =>
-          sum(floor(col("__v")(i) * LloydScale + 0.5d)).as(s"__s$i"))
-        val updated = vecs
-          .withColumn("__cid", nearestCentroid(col("__v"), centroids))
-          .groupBy(col("__cid"))
-          .agg(count(lit(1)).as("__n"), sums: _*)
-          .collect()
-          .map { r =>
-            val n = r.getLong(1)
-            r.getInt(0) -> Array.tabulate(dim) { i =>
-              val s = r.getLong(i + 2)
-              require(math.abs(s) < (1L << 53),
-                s"Lloyd fixed-point sum $s exceeds the 2^53 double-exactness " +
-                  "window; raise the quantization grid for this corpus")
-              s.toDouble / (n.toDouble * LloydScale)
-            }
-          }.toMap
-        centroids = centroids.map { case (cid, old) =>
-          (cid, updated.getOrElse(cid, old))
+    var centroids: Array[(Int, Array[Double])] =
+      corpus.orderBy(col(idCol)).limit(nlist)
+        .select(col(vecCol).cast("array<double>")).collect()
+        .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
+    if (iters > 0 && centroids.nonEmpty) {
+      // the vector projection feeds every Lloyd round: persist it once
+      // (standard k-means practice; spills to disk if it outgrows memory)
+      val vecs = corpus.select(col(vecCol).cast("array<double>").as("__v"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        for (_ <- 0 until iters) {
+          // centroid ids are their indices, so the id IS the m = 1 code
+          val book = lloydRound(vecs, nearestCentroids(col("__v"), centroids, 1),
+            Array(centroids.map(_._2)))(0)
+          centroids = book.zipWithIndex.map(_.swap)
         }
-      }
-      centroids
-    } finally { vecs.unpersist(false); () }
+      } finally { vecs.unpersist(false); () }
+    }
+    centroids
   }
 
   /** IVF approximate top-k: corpus partitioned into `nlist` inverted lists
@@ -712,18 +736,15 @@ object Similarity {
     * the memory story IVF alone cannot tell: a 64-float vector becomes m
     * small ints (m=4: 16 bytes → 4 codes), with k_sub^m effective cells.
     *
-    * Training mirrors [[trainIvfCentroids]] exactly — init = slices of
-    * the `ksub` smallest-id vectors, Lloyd mean updates accumulated in
-    * FIXED POINT (floor(x·2²⁴ + 0.5) Long sums, order-independent, one
-    * IEEE division per component, 2⁵³ exactness guard, empty clusters
-    * keep their entry) — so trained codebooks are bit-reproducible under
-    * any partitioning and an external engine folding the same update
-    * derives them bit-for-bit (the q89 gate). All m subspaces train in
-    * the SAME jobs: one [[PqCodesExpr]] projection assigns every
-    * subspace, one generator explodes (subspace, code, subvector) rows,
-    * one map-side-combined hash agg sums them — per round the shuffle is
-    * O(tasks × m × ksub × (dim/m + 1)), independent of corpus size, and
-    * the driver only ever holds the m×ksub×(dim/m) codebook table.
+    * Training is [[trainIvfCentroids]]' Lloyd per subspace — init =
+    * slices of the `ksub` smallest-id vectors, then `iters` rounds of
+    * [[lloydRound]] — so trained codebooks are bit-reproducible under any
+    * partitioning and an external engine folding the same update derives
+    * them bit-for-bit (the q89 gate). All m subspaces train in the SAME
+    * job per round: one [[PqCodesExpr]] projection assigns every
+    * subspace and one `treeAggregate` sums the m×ksub fixed-point cells,
+    * so training runs 1 + `iters` jobs and never shuffles a row, and the
+    * driver only ever holds the m×ksub×(dim/m) codebook table.
     */
   def trainPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, iters: Int = 3): Array[Array[Array[Double]]] = {
@@ -742,36 +763,10 @@ object Similarity {
       val vecs = corpus.select(col(vecCol).cast("array<double>").as("__v"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        for (_ <- 0 until iters) {
-          val subRows = (0 until m).map(j => struct(
-            lit(j).as("s"),
-            element_at(col("__codes"), j + 1).as("c"),
-            slice(col("__v"), j * sd + 1, sd).as("sv")))
-          val sums = (0 until sd).map(i =>
-            sum(floor(col("e.sv")(i) * LloydScale + 0.5d)).as(s"__s$i"))
-          val updated = vecs
-            .withColumn("__codes",
-              graft.functions.expressions.NativeVectorFunctions.pqCodes(col("__v"), books))
-            // explode-through-a-generator: forces ONE evaluation of the
-            // m-subspace assignment per row (NOTES: projection collapse
-            // re-evaluates per consumer otherwise)
-            .select(explode(array(subRows: _*)).as("e"))
-            .groupBy(col("e.s"), col("e.c"))
-            .agg(count(lit(1)).as("__n"), sums: _*)
-            .collect()
-            .map { r =>
-              val n = r.getLong(2)
-              (r.getInt(0), r.getInt(1)) -> Array.tabulate(sd) { i =>
-                val s = r.getLong(i + 3)
-                require(math.abs(s) < (1L << 53),
-                  s"PQ Lloyd fixed-point sum $s exceeds the 2^53 " +
-                    "double-exactness window; raise the quantization grid")
-                s.toDouble / (n.toDouble * LloydScale)
-              }
-            }.toMap
-          books = Array.tabulate(m)(j => Array.tabulate(ksub)(c =>
-            updated.getOrElse((j, c), books(j)(c))))
-        }
+        for (_ <- 0 until iters)
+          books = lloydRound(vecs,
+            graft.functions.expressions.NativeVectorFunctions.pqCodes(col("__v"), books),
+            books)
       } finally { vecs.unpersist(false); () }
     }
     books
@@ -1411,5 +1406,32 @@ object Similarity {
       .withColumn("cos", cosine(col("v_a"), col("v_b")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 9).as("cos"))
+  }
+}
+
+/** The fixed-point arithmetic of [[Similarity]]'s bit-reproducible folds
+  * (the Lloyd rounds and the PCA Gram). Top-level, so the fold closures
+  * call it statically rather than capturing the `Similarity` module.
+  */
+private[ops] object FixedPoint {
+
+  /** The grid: values are quantized to 2⁻²⁴ before they are summed as Longs. */
+  val Scale = 16777216.0d // 2^24
+
+  /** `x` on the grid, `floor(x·2²⁴ + 0.5)` — the one quantizer of the
+    * folds. NaN and Inf fail loudly, naming the embedding dimension:
+    * `floor(NaN).toLong` is 0, so they would otherwise train a silently
+    * skewed model.
+    */
+  def quantize(x: Double, dim: Int): Long = {
+    require(!x.isNaN && !x.isInfinite, s"non-finite embedding component at dim $dim")
+    math.floor(x * Scale + 0.5d).toLong
+  }
+
+  /** Element-wise `a += b`: the combine step of the folds. */
+  def addInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
   }
 }

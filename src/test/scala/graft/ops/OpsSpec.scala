@@ -1419,6 +1419,113 @@ class OpsSpec extends SparkSpec {
     assert(bookBits(Array(a(1))) === bookBits(Array(sliced)))
   }
 
+  // the 200×16 sin corpus of the ivf/pq partition-invariance pins
+  private def sinVecs = (0 until 200).map(i =>
+    (i.toLong, Array.tabulate(16)(j => (math.sin(i * 31 + j * 7) * 3).toFloat)))
+    .toDF("vec_id", "embedding")
+
+  /** SHA-256 over the raw IEEE bits of a trained table, in table order. */
+  private def bitsDigest(bits: Seq[Long]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    bits.foreach { b => buf.clear(); buf.putLong(b); md.update(buf.array()) }
+    md.digest().map("%02x".format(_)).mkString
+  }
+  private def flatCentroidBits(c: Array[(Int, Array[Double])]): Seq[Long] =
+    centroidBits(c).flatMap { case (cid, v) => cid.toLong +: v }
+  private def flatBookBits(b: Array[Array[Array[Double]]]): Seq[Long] =
+    bookBits(b).flatMap(_.flatten)
+
+  test("trained tables are pinned to raw bits: ivf, pq, ivf-pq, opq") {
+    // digests of the doubleToRawLongBits of every trained value, recorded
+    // from the shuffle-and-hash-aggregate trainers these replaced: a
+    // change of training kernel must not move a single ulp
+    val vecs = sinVecs
+    val ivf = Similarity.trainIvfCentroids(vecs, "vec_id", "embedding", nlist = 8, iters = 3)
+    assert(flatCentroidBits(ivf).take(3) === Seq(0L, 4612637128239425490L, 4613211198376186129L))
+    assert(bitsDigest(flatCentroidBits(ivf)) ===
+      "bee8a47e07285769275ec0fd73ab6a6b180b81f45b47395134e7620f901d222b")
+    val pq = Similarity.trainPqCodebooks(vecs, "vec_id", "embedding", m = 4, ksub = 8, iters = 3)
+    assert(flatBookBits(pq).take(3) ===
+      Seq(4612610890004526173L, 4613255845409646778L, 4610136956825001239L))
+    assert(bitsDigest(flatBookBits(pq)) ===
+      "e9ecb1c1d009d5d0af4466971e862cf28bdd0a1bd33488d98fb5d6f0a3a38b92")
+    val (cents, books) = Similarity.trainIvfPq(vecs, "vec_id", "embedding",
+      nlist = 8, itersIvf = 3, m = 4, ksub = 8, itersPq = 3)
+    assert(bitsDigest(flatCentroidBits(cents) ++ flatBookBits(books)) ===
+      "9b05ff82f840d5f3f26f2a5a9049dfcf08428ef8f38b26bbf6ce7345f068c6f0")
+    val (model, obooks) = Similarity.trainOpq(vecs, "vec_id", "embedding",
+      m = 4, ksub = 8, iters = 3)
+    val raw = (xs: Array[Double]) => xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    assert(bitsDigest(raw(model.means) ++ model.components.toSeq.flatMap(raw) ++
+      raw(model.eigenvalues) ++ flatBookBits(obooks)) ===
+      "c51a5ab33618df8620b3aa911244b0000ad2c1bc63d96e124ee6164ecad854ae")
+  }
+
+  /** Spark jobs `body` runs, counted through a job group. */
+  private def jobsRunBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try body finally sc.clearJobGroup()
+    // the status tracker follows the listener bus, which delivers events
+    // in order: once a later job is visible, every job of the call is too
+    val barrier = group + "-barrier"
+    sc.setJobGroup(barrier, "listener bus barrier")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(barrier).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(barrier).nonEmpty)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("trainers run at most one job per Lloyd round plus one") {
+    // one treeAggregate per round, no shuffle-map + result job pair (the
+    // hash-aggregate rounds ran 6 jobs for pq at iters = 2). The corpus is
+    // a parquet scan, as in the queries: a local relation would fold the
+    // init's sort+limit into the plan, a repartition would add its own jobs
+    val dir = java.nio.file.Files.createTempDirectory("trainer_jobs").toFile
+    try {
+      sinVecs.repartition(3).write.mode("overwrite").parquet(dir.getAbsolutePath)
+      val vecs = spark.read.parquet(dir.getAbsolutePath)
+      val iters = 2
+      val ivf = jobsRunBy(Similarity.trainIvfCentroids(vecs, "vec_id", "embedding", 8, iters))
+      assert(ivf <= 1 + iters, s"trainIvfCentroids ran $ivf jobs")
+      val pq = jobsRunBy(Similarity.trainPqCodebooks(vecs, "vec_id", "embedding", 4, 8, iters))
+      assert(pq <= 1 + iters, s"trainPqCodebooks ran $pq jobs")
+      val ivfPq = jobsRunBy(Similarity.trainIvfPq(vecs, "vec_id", "embedding",
+        nlist = 8, itersIvf = iters, m = 4, ksub = 8, itersPq = iters))
+      assert(ivfPq <= 2 * (1 + iters), s"trainIvfPq ran $ivfPq jobs")
+      // opq adds its dimension probe and the pca fit (its own probe and
+      // one Gram treeAggregate)
+      val pca = jobsRunBy(Similarity.pcaFit(vecs, "embedding", 16))
+      val opq = jobsRunBy(Similarity.trainOpq(vecs, "vec_id", "embedding", 4, 8, iters))
+      assert(opq <= 1 + pca + 1 + iters, s"trainOpq ran $opq jobs (pcaFit alone $pca)")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("trainers reject a non-finite component, naming its dimension") {
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    // the NaN row is not an init row: it reaches only the Lloyd fold,
+    // where floor(NaN) would have quantized to 0 without a word
+    for (bad <- Seq(Float.NaN, Float.PositiveInfinity)) {
+      val vecs = (0 until 40).map(i => (i.toLong, Array.tabulate(16)(j =>
+        if (i == 30 && j == 5) bad else (math.sin(i * 31 + j * 7) * 3).toFloat)))
+        .toDF("vec_id", "embedding")
+      val trainers: Seq[(String, () => Any)] = Seq(
+        "ivf" -> (() => Similarity.trainIvfCentroids(vecs, "vec_id", "embedding", 4, 2)),
+        "pq" -> (() => Similarity.trainPqCodebooks(vecs, "vec_id", "embedding", 4, 4, 2)),
+        "pca" -> (() => Similarity.pcaFit(vecs, "embedding", 2)))
+      for ((name, train) <- trainers) {
+        val e = intercept[Exception](train())
+        assert(msgs(e).exists(_.contains("non-finite embedding component at dim 5")),
+          s"$name on $bad: ${msgs(e).mkString(" | ")}")
+      }
+    }
+  }
+
   test("pq: precoded path is row-identical to derive-on-the-fly") {
     val vecs = (0 until 60).map(i =>
       (i.toLong, Array.tabulate(8)(j => math.sin(i * 7 + j).toFloat)))
