@@ -339,79 +339,6 @@ object ConnectSchemaJson {
     case _ => c
   }
 
-  /** InternalRow-level [[fromWire]] for hand-rolled readers: the DSv2
-    * micro-batch stream parses feed lines off the catalyst JSON parser
-    * and builds rows imperatively, so it needs the same wire→storage
-    * projection as a per-field closure. None when no payload field needs
-    * conversion (the common all-scalar case stays allocation-free).
-    * Inputs are rows of [[wireType]]'s shape; outputs are storage rows.
-    */
-  def wireRowConverter(payload: StructType)
-      : Option[org.apache.spark.sql.catalyst.InternalRow =>
-        org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    if (!payload.fields.exists(f => needsWireProjection(f.dataType, f.metadata))) None
-    else {
-      def fieldConv(dt: DataType, meta: Metadata): (InternalRow, Int) => Any = dt match {
-        case IntegerType if isTime(meta) =>
-          (r, i) => (r.getLong(i) / 1000L).toInt // MicroTime int64 → millis INT
-        case TimestampNTZType =>
-          val mul = if (isMillisPrecision(meta)) 1000L else 1L
-          (r, i) => r.getLong(i) * mul // NTZ stores micros
-        case s: StructType if s == CdcTemporal.ZonedTimestampType =>
-          val mul = if (isMillisPrecision(meta)) 1000L else 1L
-          (r, i) => new GenericInternalRow(
-            Array[Any](r.getLong(i) * mul, UTF8String.fromString("Z")))
-        case s: StructType if s == CdcTemporal.ZonedTimeType =>
-          (r, i) => {
-            val str = r.getUTF8String(i).toString
-            val tz = "([+-]\\d{2}:\\d{2}|Z)$".r.findFirstIn(str).getOrElse("")
-            val body = str.stripSuffix(tz)
-            val neg = body.startsWith("-")
-            val p = body.stripPrefix("-").split("[:.]")
-            val millis = (p(0).toLong * 3600000L + p(1).toLong * 60000L +
-              p(2).toLong * 1000L + (if (p.length > 3) p(3).padTo(3, '0').take(3).toLong else 0L))
-            new GenericInternalRow(Array[Any](
-              (if (neg) -millis else millis).toInt, UTF8String.fromString(tz)))
-          }
-        case TimestampType =>
-          (r, i) => { // ZonedTimestamp ISO-offset string → epoch micros
-            val inst = java.time.OffsetDateTime.parse(r.getUTF8String(i).toString).toInstant
-            inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-          }
-        case st: StructType if needsWireProjection(st, Metadata.empty) =>
-          val inner = rowConv(st)
-          (r, i) => inner(r.getStruct(i, st.length))
-        case a: ArrayType if needsWireProjection(a, Metadata.empty) =>
-          throw new UnsupportedOperationException(
-            "temporal-element arrays/maps are not declarable from DDL payloads; " +
-              "use the Column-based decode (DebeziumJson.decode) for such feeds")
-        case m: MapType if needsWireProjection(m, Metadata.empty) =>
-          throw new UnsupportedOperationException(
-            "temporal-element arrays/maps are not declarable from DDL payloads; " +
-              "use the Column-based decode (DebeziumJson.decode) for such feeds")
-        case other =>
-          val wt = wireType(other, meta)
-          (r, i) => r.get(i, wt)
-      }
-      def rowConv(st: StructType): InternalRow => InternalRow = {
-        val convs = st.fields.map(f => fieldConv(f.dataType, f.metadata))
-        (in: InternalRow) => {
-          val out = new GenericInternalRow(st.length)
-          var i = 0
-          while (i < st.length) {
-            out.update(i, if (in.isNullAt(i)) null else convs(i)(in, i))
-            i += 1
-          }
-          out
-        }
-      }
-      Some(rowConv(payload))
-    }
-  }
-
   /** Inverse of [[wireSide]]. */
   private[cdc] def unwireSide(side: Column, schema: StructType): Column =
     if (!schema.fields.exists(f => needsWireProjection(f.dataType, f.metadata))) side

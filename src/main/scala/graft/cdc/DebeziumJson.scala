@@ -71,9 +71,9 @@ object DebeziumJson {
         .as(Changelog.MetaCol))
   }
 
-  /** The `from_json` parse schema for a consume configuration — shared by
-    * [[decode]] and hand-rolled line readers (the DSv2 micro-batch
-    * stream): wire-typed payload sides under `connectWire`, and a
+  /** The `from_json` parse schema for a consume configuration — the one
+    * [[decode]] parses with (DecodeProfile probes it too): wire-typed
+    * payload sides under `connectWire`, and a
     * `payload` envelope wrapper alongside the flat fields under
     * `schemaEnvelope` (so flat and schema-wrapped records coexist on one
     * topic; each position coalesces).

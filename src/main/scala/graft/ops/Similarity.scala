@@ -128,9 +128,15 @@ object Similarity {
     * the grid error ≤ 2⁻²⁵ per term; the driver-side require guards the
     * 2⁵³ exactness window.
     */
-  def pcaFit(df: DataFrame, vecCol: String, k: Int): PcaModel = {
+  def pcaFit(df: DataFrame, vecCol: String, k: Int): PcaModel = fitPca(df, vecCol, Some(k))
+
+  /** [[pcaFit]] keeping `k` components, or all d of them (full rank) for
+    * None — d comes from the one dimension probe either way.
+    */
+  private def fitPca(df: DataFrame, vecCol: String, rank: Option[Int]): PcaModel = {
     val first = df.select(col(vecCol)).where(col(vecCol).isNotNull).head()
     val d = first.getSeq[Any](0).size
+    val k = rank.getOrElse(d)
     require(k >= 1 && k <= d, s"k=$k out of range for dim $d")
     // acc layout: [count, sum(d), gram upper triangle (d*(d+1)/2)] — all
     // fixed-point Longs on the 2^-24 grid
@@ -965,10 +971,9 @@ object Similarity {
       m: Int = 4, ksub: Int = 16, iters: Int = 3,
       balance: Boolean = true)
       : (PcaModel, Array[Array[Array[Double]]]) = {
-    val d = corpus.select(col(vecCol)).where(col(vecCol).isNotNull)
-      .head().getSeq[Any](0).size
+    val model0 = fitPca(corpus, vecCol, None)
+    val d = model0.means.length
     require(d % m == 0, s"dim $d must divide into m=$m subspaces")
-    val model0 = pcaFit(corpus, vecCol, d)
     // Eigenvalue-BALANCED subspace allocation (the FAISS parametric-OPQ
     // pre-processing, Ge et al. CVPR'13 §4): raw eigenvalue-desc row
     // order CONCENTRATES variance — on a low-rank corpus one subspace

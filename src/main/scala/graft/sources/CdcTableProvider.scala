@@ -2,14 +2,18 @@ package graft.sources
 
 import graft.cdc.{Changelog, DdlParser, WireFormat}
 import graft.model.{CreateTableEvent, TableId}
-import org.apache.spark.sql.SQLContext
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, V1Scan}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, TableScan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
+import org.apache.spark.sql.connector.read.streaming.{Offset => StreamOffset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.streaming.{Offset, Source}
+import org.apache.spark.sql.graft.SparkInternals
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, StreamSourceProvider, TableScan}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL/Table-API entry point (SURVEY §3.3): the Spark analog of the
   * reference's `CREATE TABLE ... WITH ('connector' = 'mysql-cdc')`
@@ -29,14 +33,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * spark.sql("SELECT count(*) FROM users_changelog WHERE __op = '-D'")
   * }}}
   *
-  * The batch scan goes through the `V1Scan` bridge so decoding stays the
-  * same declarative `WireFormat.decode` → `Changelog.explode`
-  * projection every other front end uses (one codegen'd JSON parse per
-  * record — no hand-rolled row reader to drift out of sync), and
-  * Catalyst still prunes/pushes over the resulting plan.
-  * `spark.readStream` works too ([[CdcTableProvider.CdcMicroBatchStream]]:
-  * file-granular offsets, checkpoint resume, latest-offset startup);
-  * pipelines needing wire DDL and schema planes belong to
+  * One plan serves both faces: the batch scan (a DataSourceV2 table read
+  * through the `V1Scan` bridge) and each `spark.readStream` micro-batch
+  * (the provider's V1 `StreamSourceProvider` face, [[CdcTableProvider.CdcSource]]:
+  * file-granular offsets, checkpoint resume, `maxFilesPerTrigger`,
+  * AvailableNow) run [[CdcTableProvider.changelog]] — the same
+  * declarative `WireFormat.decode` → `Changelog.explode` projection
+  * every other front end uses, one codegen'd JSON parse per record — over
+  * all files or over the batch's range of files. So a stream's rows are
+  * the batch relation's rows on every prefix of the feed (Structured
+  * Streaming's prefix consistency), startup filters included, and
+  * Catalyst still prunes/pushes over the resulting plan. Pipelines
+  * needing wire DDL and schema planes belong to
   * [[graft.streaming.StreamingPipeline]], which this provider does not
   * duplicate.
   *
@@ -58,10 +66,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - `scan.startup.mode=timestamp` filters by the envelope's event time
   *    ([[graft.cdc.WireFormat.eventTime]]: debezium `source.ts_ms`, then
   *    `ts_ms`; mongo `clusterTime`; canal has none and is rejected);
-  *  - `initial`/`earliest-offset` read everything; `snapshot`/
-  *    `latest-offset` are stream concepts and rejected here.
+  *  - `initial`/`earliest-offset` read everything; `latest-offset`
+  *    starts the stream past the files present at query start and is
+  *    rejected by the batch relation, as `snapshot` is by both faces.
   */
-final class CdcTableProvider extends TableProvider with DataSourceRegister {
+final class CdcTableProvider extends TableProvider with StreamSourceProvider
+    with DataSourceRegister {
+  import scala.jdk.CollectionConverters._
 
   override def shortName(): String = "graft-cdc"
 
@@ -76,6 +87,27 @@ final class CdcTableProvider extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table =
     new CdcTableProvider.CdcTable(schema,
       new CaseInsensitiveStringMap(properties))
+
+  override def sourceSchema(
+      sqlContext: SQLContext,
+      schema: Option[StructType],
+      providerName: String,
+      parameters: Map[String, String]): (String, StructType) =
+    (shortName(),
+      schema.getOrElse(inferSchema(new CaseInsensitiveStringMap(parameters.asJava))))
+
+  override def createSource(
+      sqlContext: SQLContext,
+      metadataPath: String,
+      schema: Option[StructType],
+      providerName: String,
+      parameters: Map[String, String]): Source = {
+    val options = new CaseInsensitiveStringMap(parameters.asJava)
+    val payload = CdcTableProvider.payloadSchema(options)
+    new CdcTableProvider.CdcSource(sqlContext.sparkSession,
+      CdcTableProvider.feedPath(options), payload,
+      schema.getOrElse(CdcTableProvider.explodedSchema(payload)), options)
+  }
 }
 
 object CdcTableProvider {
@@ -111,28 +143,21 @@ object CdcTableProvider {
     WireFormat.parse(Option(options.get("format")), options.asScala.toMap)
   }
 
-  /** The envelope's event time for `scan.startup.mode=timestamp` — one
-    * definition for the batch relation and the stream.
-    */
-  private def eventTimeOf(format: WireFormat): org.apache.spark.sql.Column =
-    format.eventTime(org.apache.spark.sql.functions.col("value")).getOrElse(
-      throw new IllegalArgumentException(s"${format.name} envelopes carry no event " +
-        "timestamp this codec decodes; use scalar pos startup"))
-
   /** Apply `scan.startup.*` as a predicate over the raw (value, __seq)
     * frame, before any decode — codegen'd `get_json_object` probes, no
     * extra pass. See the provider scaladoc for the mode x coordinate
-    * matrix.
+    * matrix; on the stream, `latest-offset` is the source's initial
+    * offset and filters nothing here.
     */
-  private[sources] def startupFiltered(
-      json: org.apache.spark.sql.DataFrame,
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.DataFrame = {
+  private def startupFiltered(json: DataFrame, options: CaseInsensitiveStringMap,
+      isStreaming: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
     val opts = options.asCaseSensitiveMap().asScala.toMap
     val format = wireFormat(options)
     StartupMode.fromOptions(opts) match {
       case StartupMode.Initial | StartupMode.Earliest => json
+      case StartupMode.Latest if isStreaming => json
       case StartupMode.SpecificOffset(pos) =>
         json.where(col(Changelog.SeqCol) >= pos)
       case StartupMode.AtBinlogOffset(o) => format match {
@@ -148,11 +173,50 @@ object CdcTableProvider {
           s"binlog coordinates are a debezium concept; ${other.name} feeds resume " +
             "by scalar pos (or a mongo resume token via StreamingPipeline)")
       }
-      case StartupMode.AtTimestamp(ts) => json.where(eventTimeOf(format) >= ts)
+      case StartupMode.AtTimestamp(ts) =>
+        json.where(format.eventTime(col("value")).getOrElse(
+          throw new IllegalArgumentException(s"${format.name} envelopes carry no event " +
+            "timestamp this codec decodes; use scalar pos startup")) >= ts)
+      case other if isStreaming => throw new IllegalArgumentException(
+        s"graft-cdc stream does not support scan.startup.mode for $other " +
+          "(a snapshot phase belongs to graft.streaming.StreamingPipeline)")
       case other => throw new IllegalArgumentException(
         s"graft-cdc batch relation does not support scan.startup.mode for $other " +
           "(snapshot/latest-offset are stream concepts)")
     }
+  }
+
+  private def feedPath(options: CaseInsensitiveStringMap): String =
+    Option(options.get("path")).getOrElse(
+      throw new IllegalArgumentException("graft-cdc needs a path option"))
+
+  /** The exploded changelog of the given `(file, fileIdx)` feed files —
+    * the one plan both faces run: the batch relation over every file, a
+    * stream micro-batch (`isStreaming`) over its range of files. Lines
+    * (one partition per file, numbered by [[FeedLines]]) go through
+    * [[startupFiltered]], then the declarative `WireFormat.decode` →
+    * `Changelog.explode` projection every other front end uses; one seq
+    * per line, shared by an update's -U/+U pair (they explode from one
+    * envelope).
+    */
+  private def changelog(session: SparkSession, files: Seq[(String, Int)],
+      payload: StructType, options: CaseInsensitiveStringMap,
+      isStreaming: Boolean): DataFrame = {
+    val lines = session.sparkContext
+      .parallelize(files, math.max(files.size, 1))
+      .flatMap { case (file, fileIdx) =>
+        val ls = new FeedLines(file, fileIdx)
+        org.apache.spark.TaskContext.get()
+          .addTaskCompletionListener[Unit](_ => ls.close())
+        ls.map { case (line, seq) => InternalRow(UTF8String.fromString(line), seq) }
+      }
+    val json = SparkInternals.internalCreateDataFrame(session, lines, StructType(Seq(
+      StructField("value", StringType),
+      StructField(Changelog.SeqCol, LongType, nullable = false))), isStreaming)
+    val paired = wireFormat(options)
+      .decode(startupFiltered(json, options, isStreaming), payload, Some(Changelog.SeqCol))
+      .drop(Changelog.MetaCol)
+    Changelog.explode(paired)
   }
 
   private final class CdcTable(
@@ -162,48 +226,27 @@ object CdcTableProvider {
     override def name(): String =
       s"graft-cdc(${Option(options.get("path")).getOrElse("?")})"
     override def schema(): StructType = tableSchema
+    // no MICRO_BATCH_READ: readStream falls back to the provider's V1
+    // StreamSourceProvider face
     override def capabilities(): java.util.Set[TableCapability] =
-      java.util.EnumSet.of(
-        TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+      java.util.EnumSet.of(TableCapability.BATCH_READ)
 
     override def newScanBuilder(caseInsensitive: CaseInsensitiveStringMap): ScanBuilder = {
-      val path = Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("graft-cdc needs a path option"))
+      val path = feedPath(options)
       val payload = payloadSchema(options)
-      val fullSchema = tableSchema
       new ScanBuilder {
         override def build(): Scan = new V1Scan {
-          override def readSchema(): StructType = fullSchema
-          override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-            new CdcMicroBatchStream(path, payload, options,
-              org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+          override def readSchema(): StructType = tableSchema
           override def toV1TableScan[T <: BaseRelation with TableScan](
               context: SQLContext): T =
             new BaseRelation with TableScan {
               override def sqlContext: SQLContext = context
-              override def schema: StructType = fullSchema
+              override def schema: StructType = tableSchema
               override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-                // one partition per feed file, numbered as the stream
-                // numbers it (see FeedLines)
                 val session = context.sparkSession
                 val files = listFeedFiles(path, session.sessionState.newHadoopConf())
-                val lines = session.sparkContext
-                  .parallelize(files.zipWithIndex, math.max(files.size, 1))
-                  .flatMap { case (file, fileIdx) =>
-                    val ls = new FeedLines(file, fileIdx)
-                    org.apache.spark.TaskContext.get()
-                      .addTaskCompletionListener[Unit](_ => ls.close())
-                    ls.map { case (line, seq) => org.apache.spark.sql.Row(line, seq) }
-                  }
-                val json = session.createDataFrame(lines, StructType(Seq(
-                  StructField("value", StringType),
-                  StructField(Changelog.SeqCol, LongType, nullable = false))))
-                // one deterministic seq per line, shared by an update's
-                // -U/+U pair (they explode from one envelope)
-                val paired = wireFormat(options)
-                  .decode(startupFiltered(json, options), payload, Some(Changelog.SeqCol))
-                  .drop(Changelog.MetaCol)
-                Changelog.explode(paired).rdd
+                changelog(session, files.zipWithIndex, payload, options,
+                  isStreaming = false).rdd
               }
             }.asInstanceOf[T]
         }
@@ -271,129 +314,68 @@ object CdcTableProvider {
     * ChangelogMode.all()). Offsets are file-granular over the name-sorted
     * feed directory (Spark's own FileStreamSource model): an offset is
     * the count of files consumed, so checkpoint resume replays from the
-    * first unconsumed file. `__seq` is the batch relation's
-    * (`FeedLines`).
-    *
-    * Startup modes: `initial`/`earliest-offset` read the whole feed;
-    * `latest-offset` starts past the files present at query start;
-    * `specific-offset.pos` skips rows below the given `__seq`;
-    * `timestamp` skips rows whose event time (the batch relation's
-    * [[WireFormat.eventTime]]) predates the cutoff.
-    * Structured binlog coordinates need the batch relation's raw-JSON
-    * predicates or [[graft.streaming.StreamingPipeline]].
+    * first unconsumed file. Each micro-batch is the batch relation's plan
+    * ([[changelog]]) over its range of files, so the stream's rows are
+    * the batch relation's rows on every prefix of the feed, startup
+    * filters included; `latest-offset` only moves the initial offset past
+    * the files present at query start.
     */
-  private final class CdcMicroBatchStream(
+  private final class CdcSource(
+      session: SparkSession,
       path: String,
       payload: StructType,
-      options: CaseInsensitiveStringMap,
-      hadoopConf: org.apache.hadoop.conf.Configuration)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+      override val schema: StructType,
+      options: CaseInsensitiveStringMap)
+    extends Source with SupportsTriggerAvailableNow {
     import scala.jdk.CollectionConverters._
 
-    // Trigger.AvailableNow pins the end of the feed at query start;
-    // maxFilesPerTrigger paces batches below it (FileStreamSource's knobs)
+    private def feedFiles = listFeedFiles(path, session.sessionState.newHadoopConf())
+
+    // maxFilesPerTrigger paces batches (FileStreamSource's knob)
+    private val maxFiles = Option(options.get("maxFilesPerTrigger")).map(v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"graft-cdc maxFilesPerTrigger must be a positive integer, got: $v")))
+
+    private val initial =
+      if (StartupMode.fromOptions(options.asCaseSensitiveMap().asScala.toMap) ==
+          StartupMode.Latest) feedFiles.size
+      else 0
+
+    // null before the first batch; offsets read back from a checkpoint
+    // arrive as SerializedOffset, so every offset is read from its json
+    private def filesIn(o: StreamOffset): Int =
+      if (o == null) initial
+      else """\d+""".r.findFirstIn(o.json).getOrElse(
+        throw new IllegalArgumentException(s"bad graft-cdc offset: ${o.json}")).toInt
+
+    // Trigger.AvailableNow pins the end of the feed at query start
     @volatile private var availableNowTarget: Option[Int] = None
+    // feed size at the last latestOffset, reported as the latest offset
+    @volatile private var listed = 0
     override def prepareForTriggerAvailableNow(): Unit =
-      availableNowTarget = Some(listFeedFiles(path, hadoopConf).size)
+      availableNowTarget = Some(feedFiles.size)
     override def getDefaultReadLimit: ReadLimit =
-      Option(options.get("maxFilesPerTrigger"))
-        .map(n => ReadLimit.maxFiles(n.toInt)).getOrElse(ReadLimit.allAvailable())
-    override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-      val ceiling = availableNowTarget.fold(listFeedFiles(path, hadoopConf).size)(
-        math.min(listFeedFiles(path, hadoopConf).size, _))
-      limit match {
-        case mf: ReadMaxFiles =>
-          FilesOffset(math.min(ceiling, start.asInstanceOf[FilesOffset].n + mf.maxFiles()))
-        case _ => FilesOffset(ceiling)
+      maxFiles.fold(ReadLimit.allAvailable())(ReadLimit.maxFiles)
+    override def latestOffset(start: StreamOffset, limit: ReadLimit): StreamOffset = {
+      listed = feedFiles.size
+      val from = filesIn(start)
+      val ceiling = availableNowTarget.fold(listed)(math.min(listed, _))
+      val end = limit match {
+        case mf: ReadMaxFiles => math.min(ceiling, from + mf.maxFiles())
+        case _ => ceiling
       }
+      if (end > from) FilesOffset(end) else start // null: no new data
     }
-    override def reportLatestOffset(): Offset = FilesOffset(listFeedFiles(path, hadoopConf).size)
+    override def reportLatestOffset(): StreamOffset =
+      FilesOffset(listed)
+    override def getOffset: Option[Offset] = throw new UnsupportedOperationException(
+      "graft-cdc admits files through latestOffset(start, limit)")
 
-    private val format = wireFormat(options)
-    private val (startLatest, minSeq, minTs) =
-      StartupMode.fromOptions(options.asCaseSensitiveMap().asScala.toMap) match {
-        case StartupMode.Initial | StartupMode.Earliest =>
-          (false, Long.MinValue, Long.MinValue)
-        case StartupMode.Latest => (true, Long.MinValue, Long.MinValue)
-        case StartupMode.SpecificOffset(pos) => (false, pos, Long.MinValue)
-        case StartupMode.AtTimestamp(ts) =>
-          eventTimeOf(format) // rejects formats without an event time
-          (false, Long.MinValue, ts)
-        case other => throw new IllegalArgumentException(
-          s"graft-cdc stream does not support $other — structured binlog " +
-            "resume needs the batch relation's raw-JSON predicates or " +
-            "graft.streaming.StreamingPipeline")
-      }
-
-    override def initialOffset(): Offset =
-      FilesOffset(if (startLatest) listFeedFiles(path, hadoopConf).size else 0)
-    override def latestOffset(): Offset = FilesOffset(listFeedFiles(path, hadoopConf).size)
-    override def deserializeOffset(json: String): Offset =
-      FilesOffset("""\d+""".r.findFirstIn(json).getOrElse(
-        throw new IllegalArgumentException(s"bad graft-cdc offset: $json")).toInt)
-
-    override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-      val s = start.asInstanceOf[FilesOffset].n
-      val e = end.asInstanceOf[FilesOffset].n
-      val fs = listFeedFiles(path, hadoopConf)
-      (s until math.min(e, fs.size))
-        .map(i => CdcFilePartition(fs(i), i, minSeq, minTs): InputPartition).toArray
+    override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+      val from = start.fold(initial)(filesIn)
+      changelog(session, feedFiles.zipWithIndex.slice(from, filesIn(end)),
+        payload, options, isStreaming = true)
     }
-
-    override def createReaderFactory(): PartitionReaderFactory =
-      new CdcReaderFactory(payload, format)
-    override def commit(end: Offset): Unit = ()
     override def stop(): Unit = ()
-  }
-
-  private final case class CdcFilePartition(
-      file: String, fileIdx: Int, minSeq: Long, minTs: Long) extends InputPartition
-
-  /** One reader per feed file: parse each JSON line with the same
-    * catalyst Jackson machinery `from_json` uses, then hand the envelope
-    * to the format's [[WireFormat.RowDecoder]] — the row-level twin of the
-    * batch relation's `decode` → `Changelog.explode` pipeline. Stream ==
-    * batch parity is pinned by CdcTableProviderSpec for every format.
-    */
-  private final class CdcReaderFactory(payload: StructType, format: WireFormat)
-      extends PartitionReaderFactory {
-    override def createReader(p: InputPartition)
-        : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-      import org.apache.spark.sql.catalyst.InternalRow
-      import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-      import org.apache.spark.unsafe.types.UTF8String
-      val fp = p.asInstanceOf[CdcFilePartition]
-      new PartitionReader[InternalRow] {
-        private val decoder = format.rowDecoder(payload)
-        private val parser = new org.apache.spark.sql.graft.JsonLineParser(decoder.schema)
-        private val lines = new FeedLines(fp.file, fp.fileIdx)
-        private val pending = scala.collection.mutable.Queue.empty[InternalRow]
-
-        private val out: (String, InternalRow, Long) => Unit = (tag, image, seq) => {
-          val row = new GenericInternalRow(payload.length + 2)
-          var i = 0
-          while (i < payload.length) {
-            row.update(i,
-              if (image.isNullAt(i)) null else image.get(i, payload(i).dataType))
-            i += 1
-          }
-          row.update(payload.length, UTF8String.fromString(tag))
-          row.update(payload.length + 1, seq)
-          pending += row
-        }
-
-        override def next(): Boolean = {
-          while (pending.isEmpty) {
-            if (!lines.hasNext) return false
-            val (line, seq) = lines.next()
-            if (seq >= fp.minSeq)
-              parser.parse(line).foreach(decoder.emit(_, seq, fp.minTs, out))
-          }
-          true
-        }
-        override def get(): InternalRow = pending.dequeue()
-        override def close(): Unit = lines.close()
-      }
-    }
   }
 }

@@ -1,11 +1,15 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into `private[sql]` Spark surface: Column <-> catalyst
-  * Expression, and the session SQL parser. Lives under
+  * Expression, the session SQL parser, and DataFrames over catalyst rows
+  * (streaming ones included). Lives under
   * `org.apache.spark.sql` solely for access; everything else in this
   * project is under `graft`.
   */
@@ -26,29 +30,13 @@ object SparkInternals {
     */
   def cacheIsEmpty(spark: SparkSession): Boolean =
     spark.sharedState.cacheManager.isEmpty
-}
 
-/** Executor-side JSON-line → InternalRow parser over the SAME machinery
-  * `from_json` uses (catalyst's JacksonParser — `private[sql]`, hence
-  * this bridge). Serializable; the parser itself builds lazily per
-  * executor. Used by the `graft-cdc` micro-batch stream, whose
-  * PartitionReader cannot express decoding as a DataFrame projection.
-  */
-final class JsonLineParser(schema: org.apache.spark.sql.types.StructType)
-    extends Serializable {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
-  import org.apache.spark.unsafe.types.UTF8String
-
-  @transient private lazy val parser =
-    new JacksonParser(schema, new JSONOptions(Map.empty[String, String], "UTC"),
-      allowArrayAsStructs = false)
-
-  /** Rows parsed from one JSON line; empty on malformed input (a CDC
-    * reader skips garbage rather than dying — the PERMISSIVE contract).
+  /** A DataFrame over catalyst rows; `isStreaming` marks it as one
+    * micro-batch of a V1 streaming `Source` (`getBatch` must return a
+    * streaming plan).
     */
-  def parse(line: String): Seq[InternalRow] =
-    try parser.parse(line, CreateJacksonParser.string _,
-      (s: String) => UTF8String.fromString(s)).toSeq
-    catch { case _: Exception => Nil }
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType, isStreaming: Boolean): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming)
 }

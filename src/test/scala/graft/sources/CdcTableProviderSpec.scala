@@ -323,7 +323,7 @@ class CdcTableProviderSpec extends SparkSpec {
   }
 
   test("mid-stream DDL: ALTER envelope vanishes, widened rows decode on the pinned schema") {
-    // the DSv2 stream pins its schema at query start (schema.ddl); an
+    // the stream pins its schema at query start (schema.ddl); an
     // upstream ALTER lands mid-feed as (a) a schema-change envelope with
     // no row images and (b) subsequent events carrying the NEW column.
     // Contract: the DDL envelope emits no changelog row, widened events
@@ -414,7 +414,7 @@ class CdcTableProviderSpec extends SparkSpec {
         "2024-03-01T10:15:30.500Z", "a2", "+U"),
       (2L, "1970-01-03T00:00:00.001", 1, "1970-01-01",
         "1970-01-01T00:00:00Z", "b", "+I")).sorted)
-    // the hand-rolled micro-batch reader converts identically
+    // each stream micro-batch runs the batch plan, so it converts identically
     val q = spark.readStream.format("graft-cdc").options(consumeOpts).load()
       .writeStream.format("memory").queryName("cdc_wire_out")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -427,5 +427,156 @@ class CdcTableProviderSpec extends SparkSpec {
         .option("debezium-json.connect-wire.enabled", "true").load().collect()
     }
     assert(ex.getMessage.contains("debezium-json only"))
+  }
+
+  private val ddl = "CREATE TABLE users (id BIGINT PRIMARY KEY, v VARCHAR(32))"
+
+  /** A `graft-cdc` stream over `opts`, run to the end of the feed under
+    * AvailableNow into a memory table: its rows, or its failure.
+    */
+  private def runStream(opts: Map[String, String], name: String)
+      : Either[Throwable, Seq[String]] = {
+    val q = spark.readStream.format("graft-cdc").options(opts).load()
+      .writeStream.format("memory").queryName(name)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try {
+      q.awaitTermination(60000)
+      Right(spark.table(name).collect().map(_.mkString("|")).toSeq.sorted)
+    } catch { case e: org.apache.spark.sql.streaming.StreamingQueryException => Left(e) }
+    finally q.stop()
+  }
+
+  private def rootMessage(t: Throwable): String =
+    if (t.getCause == null) t.getMessage else rootMessage(t.getCause)
+
+  test("property: stream == batch for every startup mode x format x feed shape") {
+    // six events: (id, before, after, binlog file, binlog pos, event time)
+    val events = Seq(
+      (1, None, Some("a"), "bin.000001", 100, 10),
+      (2, None, Some("b"), "bin.000001", 200, 20),
+      (1, Some("a"), Some("a2"), "bin.000001", 300, 30),
+      (2, Some("b"), None, "bin.000002", 4, 40),
+      (3, None, Some("c"), "bin.000002", 50, 50),
+      (3, Some("c"), Some("c2"), "bin.000002", 90, 60))
+    def img(id: Int, v: Option[String]) = v.fold("null")(x => s"""{"id":$id,"v":"$x"}""")
+    def debezium(e: (Int, Option[String], Option[String], String, Int, Int)) = {
+      val (id, b, a, file, pos, ts) = e
+      val op = if (b.isEmpty) "c" else if (a.isEmpty) "d" else "u"
+      s"""{"before":${img(id, b)},"after":${img(id, a)},"op":"$op","ts_ms":${ts + 1000},""" +
+        s""""source":{"db":"db","table":"users","file":"$file","pos":$pos,"ts_ms":$ts}}"""
+    }
+    def canal(e: (Int, Option[String], Option[String], String, Int, Int)) = {
+      val (id, b, a, _, _, _) = e
+      val (tpe, old, data) =
+        if (b.isEmpty) ("INSERT", "null", s"[${img(id, a)}]")
+        else if (a.isEmpty) ("DELETE", "null", s"[${img(id, b)}]")
+        else ("UPDATE", s"[${img(id, b)}]", s"[${img(id, a)}]")
+      s"""{"old":$old,"data":$data,"type":"$tpe","database":"db","table":"users","pkNames":["id"]}"""
+    }
+    def mongo(e: (Int, Option[String], Option[String], String, Int, Int)) = {
+      val (id, b, a, _, pos, ts) = e
+      val op = if (b.isEmpty) "insert" else if (a.isEmpty) "delete" else "update"
+      s"""{"_id":{"_data":"t$pos"},"operationType":"$op","clusterTime":$ts,""" +
+        s""""fullDocument":${img(id, a)},"documentKey":{"id":$id},"ns":{"db":"db","coll":"users"}}"""
+    }
+    val formats: Seq[(String, Map[String, String], Seq[String])] = Seq(
+      ("debezium", Map.empty, events.map(debezium)),
+      ("debezium-schema-include", Map("debezium-json.schema-include" -> "true"),
+        events.map(e => s"""{"schema":{"type":"struct"},"payload":${debezium(e)}}""")),
+      ("canal", Map("format" -> "canal-json"), events.map(canal)),
+      ("mongo", Map("format" -> "mongo-json"), events.map(mongo)))
+    val modes: Seq[(String, Map[String, String])] = Seq(
+      "initial" -> Map("scan.startup.mode" -> "initial"),
+      "earliest" -> Map("scan.startup.mode" -> "earliest-offset"),
+      "pos" -> Map("scan.startup.mode" -> "specific-offset",
+        "scan.startup.specific-offset.pos" -> "1"),
+      "file+pos" -> Map("scan.startup.mode" -> "specific-offset",
+        "scan.startup.specific-offset.file" -> "bin.000001",
+        "scan.startup.specific-offset.pos" -> "250"),
+      "timestamp" -> Map("scan.startup.mode" -> "timestamp",
+        "scan.startup.timestamp-millis" -> "35"))
+    // one file, or three files of 2, 1 and 3 lines
+    val shapes: Seq[(String, Seq[Int])] = Seq("one-file" -> Seq(6), "three-files" -> Seq(2, 1, 3))
+    var accepted, rejected = 0
+    for ((fmt, fmtOpts, all) <- formats; (mode, modeOpts) <- modes;
+         (shape, sizes) <- shapes) {
+      val dir = java.nio.file.Files.createTempDirectory("cdc_parity").toFile
+      sizes.scanLeft(0)(_ + _).sliding(2).zipWithIndex.foreach { case (Seq(from, to), i) =>
+        java.nio.file.Files.write(new java.io.File(dir, f"part-$i%03d.json").toPath,
+          all.slice(from, to).mkString("\n").getBytes("UTF-8"))
+      }
+      val opts = Map("path" -> dir.getAbsolutePath, "schema.ddl" -> ddl,
+        "maxFilesPerTrigger" -> "1") ++ fmtOpts ++ modeOpts
+      val label = s"$fmt x $mode x $shape"
+      val batch = scala.util.Try(spark.read.format("graft-cdc").options(opts).load()
+        .collect().map(_.mkString("|")).toSeq.sorted).toEither
+      val stream = runStream(opts, s"cdc_parity_${accepted + rejected}")
+      (batch, stream) match {
+        case (Right(b), Right(st)) =>
+          assert(st === b, label)
+          assert(b.nonEmpty, label)
+          accepted += 1
+        case (Left(be), Left(se)) =>
+          assert(rootMessage(se) === rootMessage(be), label)
+          rejected += 1
+        case other => fail(s"$label: the faces disagree: $other")
+      }
+    }
+    // canal has no event time; binlog coordinates are debezium-only
+    assert(rejected === 2 * (1 + 2))
+    assert(accepted === 40 - rejected)
+  }
+
+  test("readStream(graft-cdc): restart on a checkpoint reads only the new file") {
+    val dir = java.nio.file.Files.createTempDirectory("cdc_resume").toFile
+    val out = java.nio.file.Files.createTempDirectory("cdc_resume_out").toFile
+    val ckpt = java.nio.file.Files.createTempDirectory("cdc_resume_ckpt").toFile
+    def write(name: String, lines: Seq[String]): Unit =
+      java.nio.file.Files.write(new java.io.File(dir, name).toPath,
+        lines.mkString("\n").getBytes("UTF-8"))
+    write("f0.json", feed.take(2))
+    write("f1.json", feed.slice(2, 3))
+    def run() = {
+      val q = spark.readStream.format("graft-cdc")
+        .option("path", dir.getAbsolutePath).option("schema.ddl", ddl).load()
+        .writeStream.format("parquet")
+        .option("path", out.getAbsolutePath)
+        .option("checkpointLocation", ckpt.getAbsolutePath)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination(60000)
+      assert(q.exception.isEmpty, q.exception)
+      q
+    }
+    run()
+    assert(spark.read.parquet(out.getAbsolutePath).count() === 4) // +I, -U/+U, +I
+    write("f2.json", feed.drop(3))
+    val second = run()
+    // the restarted query resumes at the checkpointed offset: its only
+    // batch admits f2 alone
+    val admitted = second.recentProgress.filter(_.numInputRows > 0)
+    assert(admitted.map(p => (p.sources.head.startOffset, p.sources.head.endOffset)).toSeq ===
+      Seq(("""{"files":2}""", """{"files":3}""")))
+    val rows = spark.read.parquet(out.getAbsolutePath)
+    val newRows = rows.where(col("__seq") >= (2L << 33))
+      .select(col("id"), col("__op"), col("__seq")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(newRows === Seq((2L, "-D", 2L << 33)))
+    assert(rows.count() === 5)
+  }
+
+  test("readStream(graft-cdc): maxFilesPerTrigger must be a positive integer") {
+    val path = writeFeed(feed)
+    for (bad <- Seq("0", "x")) {
+      val e = intercept[Exception] {
+        val q = spark.readStream.format("graft-cdc")
+          .option("path", path).option("schema.ddl", ddl)
+          .option("maxFilesPerTrigger", bad).load()
+          .writeStream.format("memory").queryName(s"cdc_max_files_$bad")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        try q.awaitTermination(60000) finally q.stop()
+      }
+      assert(rootMessage(e).contains("maxFilesPerTrigger"), rootMessage(e))
+      assert(rootMessage(e).contains(bad), rootMessage(e))
+    }
   }
 }
