@@ -298,7 +298,7 @@ object SparkEntry {
     val paired = graft.cdc.DebeziumJson.decode(json, "value", payloadSchema,
       seqCol = Some("event_id"))
     Changelog.materialize(
-      Changelog.explode(paired.drop("__table")), Seq("user_id"))
+      Changelog.explode(paired), Seq("user_id"))
       .orderBy(col("user_id"))
   }
 
@@ -352,7 +352,7 @@ object SparkEntry {
       encoded, "value", info.schema, seqCol = Some(Changelog.SeqCol),
       connectWire = true, schemaEnvelope = true)
     Changelog.materialize(
-      Changelog.explode(decoded.drop("__table")), Seq("user_id"))
+      Changelog.explode(decoded), Seq("user_id"))
       .select(
         col("user_id"),
         date_format(col("ts3"), "yyyy-MM-dd HH:mm:ss.SSS").as("ts3_repr"),
@@ -782,7 +782,7 @@ object SparkEntry {
     val decoded = graft.cdc.CanalJson.decode(
       encoded, "value", payloadSchema, seqCol = Some(Changelog.SeqCol))
     Changelog.materialize(
-      Changelog.explode(decoded.drop("__table")), Seq("user_id"))
+      Changelog.explode(decoded), Seq("user_id"))
       .orderBy(col("user_id"))
   }
 
@@ -1095,7 +1095,7 @@ object SparkEntry {
     val paired = graft.cdc.DebeziumJson.decode(
       wire(inserts.unionByName(updates)), "value", payloadSchema, seqCol = Some("seq"))
     val mat = Changelog.materialize(
-      Changelog.explode(paired.drop("__table")), Seq("event_id"))
+      Changelog.explode(paired), Seq("event_id"))
     val tm = CdcTemporal.timeFromString(col("t"))
     val z = CdcTemporal.zonedTimestampFromString(col("tsz"))
     mat.select(
@@ -1255,9 +1255,7 @@ object SparkEntry {
       struct(lit("graft").as("db"), lit("events").as("coll")).as("ns")
     )).as("value"))
     val decoded = graft.cdc.MongoChangeStreamJson.decode(json, "value", payloadSchema)
-    Changelog.materialize(
-      Changelog.explode(decoded.drop("__db", "__table", "__resume_token")),
-      Seq("user_id"))
+    Changelog.materialize(Changelog.explode(decoded), Seq("user_id"))
       .orderBy(col("user_id"))
   }
 

@@ -84,7 +84,6 @@ object CanalJson {
       .select(
         col("__env.type").as("__type"),
         col("__env.old").as("__old"),
-        col("__env.table").as("__table"),
         seq.cast(LongType).as("__seq0"),
         posexplode(col("__env.data")).as(Seq("__i", "__row")))
       .select(
@@ -97,7 +96,6 @@ object CanalJson {
             element_at(col("__old"), col("__i") + 1))
           .as(Changelog.BeforeCol),
         when(col("__type") =!= "DELETE", col("__row")).as(Changelog.AfterCol),
-        col("__seq0").as(Changelog.SeqCol),
-        col("__table"))
+        col("__seq0").as(Changelog.SeqCol))
   }
 }

@@ -63,7 +63,6 @@ object DebeziumJson {
       side("before").as(Changelog.BeforeCol),
       side("after").as(Changelog.AfterCol),
       seq.cast(LongType).as(Changelog.SeqCol),
-      top("source").getField("table").as("__table"),
       // source metadata: the envelope's ts_ms surfaces as op_ts (the
       // reference's `metadata.list: op_ts` mechanism)
       when(top("ts_ms").isNotNull,
@@ -88,44 +87,6 @@ object DebeziumJson {
     if (schemaEnvelope) StructType(base.fields :+ StructField("payload", base))
     else base
   }
-
-  /** DDL statement carried by a schema-change envelope, or null for data
-    * rows. Debezium schema-change messages put the statement at `ddl`
-    * (also inside the `historyRecord` document the reference routes,
-    * JdbcSourceEventDispatcher.java:69); canal flags `isDdl` with the
-    * statement at `sql`. One cheap JSON-path probe per record.
-    */
-  def ddlOf(jsonCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    // cheap substring prefilter so the hot data path pays contains()
-    // scans, not three JSON parses, per record. "\"ddl\"" also matches
-    // inside historyRecord. Real canal feeds carry "isDdl":false on EVERY
-    // data record, so the common false spellings are excluded up front;
-    // unusual whitespace only costs the JSON probe (the $.isDdl === true
-    // check keeps correctness), never a missed DDL.
-    when((jsonCol.contains("\"ddl\"") || jsonCol.contains("\"isDdl\"")) &&
-        !jsonCol.contains("\"isDdl\":false") && !jsonCol.contains("\"isDdl\": false"),
-      coalesce(
-        get_json_object(jsonCol, "$.ddl"),
-        get_json_object(jsonCol, "$.historyRecord.ddl"),
-        when(get_json_object(jsonCol, "$.isDdl") === "true",
-          get_json_object(jsonCol, "$.sql"))))
-
-  /** Table named by a schema-change envelope (debezium `source.table`,
-    * canal top-level `table`) — null when absent. Only evaluated on the
-    * rare DDL rows, so plain JSON probes are fine.
-    */
-  def ddlTableOf(jsonCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    coalesce(
-      get_json_object(jsonCol, "$.source.table"),
-      get_json_object(jsonCol, "$.table"))
-
-  /** Table named by a DATA envelope — same coordinates as [[ddlTableOf]]
-    * (debezium `source.table`, canal top-level `table`). The multi-table
-    * front end routes every record through this, so it runs on the hot
-    * path: one JSON probe per record, two when the first is absent.
-    */
-  def dataTableOf(jsonCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    ddlTableOf(jsonCol)
 
   /** Encode a paired changelog frame back into debezium-JSON strings.
     * `passthrough` columns (e.g. `__seq` as the future Kafka offset) ride

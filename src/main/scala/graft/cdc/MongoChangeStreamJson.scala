@@ -65,10 +65,8 @@ object MongoChangeStreamJson {
 
   /** Decode change-stream envelope JSON into the paired changelog frame.
     * `__seq` comes from `seqCol` when the transport supplies an order
-    * (e.g. a Kafka offset), else from `clusterTime`. `__db`/`__table`
-    * carry the namespace for multi-collection routing by FULL id;
-    * `__resume_token` carries `_id._data` for offset tracking
-    * ([[graft.sources.Offsets.ChangeStreamOffset]]).
+    * (e.g. a Kafka offset), else from `clusterTime`. The namespace a
+    * multi-collection feed routes by is read by [[WireFormat.Mongo]].
     */
   def decode(json: DataFrame, jsonCol: String, payload: StructType,
       seqCol: Option[String] = None): DataFrame = {
@@ -94,9 +92,6 @@ object MongoChangeStreamJson {
           .otherwise("R").as(Changelog.OpCol),
         when(op === "delete", col("__env.documentKey")).as(Changelog.BeforeCol),
         when(op =!= "delete", col("__env.fullDocument")).as(Changelog.AfterCol),
-        seq.cast(LongType).as(Changelog.SeqCol),
-        col("__env.ns.db").as("__db"),
-        col("__env.ns.coll").as("__table"),
-        col("__env._id._data").as("__resume_token"))
+        seq.cast(LongType).as(Changelog.SeqCol))
   }
 }

@@ -7,11 +7,12 @@ import org.apache.spark.sql.types._
 /** The CDC envelope a JSON feed carries — the reference Kafka pipeline
   * source's `value.format` (ChangeLogJsonFormatFactory: debezium-json,
   * canal-json) plus MongoDB change-stream documents. One value per feed
-  * answers everything the front ends ask of the envelope: the columnar
-  * decode and the event time `scan.startup.mode=timestamp` filters on
-  * (both faces of `graft-cdc` run the one decode). The codecs
-  * themselves stay in [[DebeziumJson]], [[CanalJson]] and
-  * [[MongoChangeStreamJson]].
+  * is the only code that reads an envelope: the columnar decode, the
+  * table and database a record names (multi-table routing), its DDL
+  * statement (wire schema changes) and the event time
+  * `scan.startup.mode=timestamp` filters on (both faces of `graft-cdc`
+  * run the one decode). The codecs themselves stay in [[DebeziumJson]],
+  * [[CanalJson]] and [[MongoChangeStreamJson]].
   */
 sealed trait WireFormat extends Product with Serializable {
 
@@ -19,10 +20,20 @@ sealed trait WireFormat extends Product with Serializable {
   def name: String
 
   /** Decode a frame whose `value` column holds envelope JSON into the
-    * paired changelog frame, the codec's bookkeeping columns (`__table`;
-    * mongo's `__db` and `__resume_token`) dropped.
+    * paired changelog frame.
     */
   def decode(json: DataFrame, payload: StructType, seqCol: Option[String]): DataFrame
+
+  /** Table named by the envelope in `value`, or null when it names none. */
+  def table(value: Column): Column
+
+  /** Database named by the envelope in `value`, or null when it names none. */
+  def database(value: Column): Column
+
+  /** DDL statement of a schema-change envelope in `value`, null on data
+    * records; None when the format has no DDL channel.
+    */
+  def ddl(value: Column): Option[Column]
 
   /** Event time (epoch millis) of the envelope in `value`, or None when
     * the envelope carries none this codec decodes.
@@ -43,7 +54,7 @@ object WireFormat {
 
     def decode(json: DataFrame, payload: StructType, seqCol: Option[String]): DataFrame =
       DebeziumJson.decode(json, "value", payload, seqCol = seqCol,
-        connectWire = connectWire, schemaEnvelope = schemaInclude).drop("__table")
+        connectWire = connectWire, schemaEnvelope = schemaInclude)
 
     /** An envelope field by JSON path; under `schemaInclude` the Connect
       * `payload` wrapper's copy wins — the per-field coalesce
@@ -54,6 +65,20 @@ object WireFormat {
       if (schemaInclude) coalesce(get_json_object(value, "$.payload." + path), flat)
       else flat
     }
+
+    def table(value: Column): Column = field(value, "source.table")
+
+    def database(value: Column): Column = field(value, "source.db")
+
+    /** Schema-change messages put the statement at `ddl`, also inside the
+      * `historyRecord` document the reference routes
+      * (JdbcSourceEventDispatcher.java:69). A substring prefilter keeps
+      * the JSON probes off data records, which pay one contains() scan;
+      * `"ddl"` also matches inside historyRecord.
+      */
+    def ddl(value: Column): Option[Column] =
+      Some(when(value.contains("\"ddl\""),
+        coalesce(field(value, "ddl"), field(value, "historyRecord.ddl"))))
 
     /** `source.ts_ms` — the binlog event time the reference's timestamp
       * startup compares — then the envelope's own `ts_ms`.
@@ -67,20 +92,40 @@ object WireFormat {
     def name: String = "canal-json"
 
     def decode(json: DataFrame, payload: StructType, seqCol: Option[String]): DataFrame =
-      CanalJson.decode(json, "value", payload, seqCol = seqCol).drop("__table")
+      CanalJson.decode(json, "value", payload, seqCol = seqCol)
+
+    def table(value: Column): Column = get_json_object(value, "$.table")
+
+    def database(value: Column): Column = get_json_object(value, "$.database")
+
+    /** `sql` when `isDdl` is true. Real canal feeds carry `"isDdl":false`
+      * on every data record, so the common false spellings are excluded
+      * by substring before any JSON probe; unusual whitespace only costs
+      * the probe, never a missed DDL.
+      */
+    def ddl(value: Column): Option[Column] =
+      Some(when(value.contains("\"isDdl\"") && !value.contains("\"isDdl\":false") &&
+          !value.contains("\"isDdl\": false") &&
+          get_json_object(value, "$.isDdl") === "true",
+        get_json_object(value, "$.sql")))
 
     def eventTime(value: Column): Option[Column] = None
   }
 
-  /** MongoDB change-stream documents: no before images, `clusterTime` as
-    * event time, no DDL channel.
+  /** MongoDB change-stream documents: no before images, `ns` as the
+    * namespace, `clusterTime` as event time, no DDL channel.
     */
   case object Mongo extends WireFormat {
     def name: String = "mongo-json"
 
     def decode(json: DataFrame, payload: StructType, seqCol: Option[String]): DataFrame =
       MongoChangeStreamJson.decode(json, "value", payload, seqCol = seqCol)
-        .drop("__db", "__table", "__resume_token")
+
+    def table(value: Column): Column = get_json_object(value, "$.ns.coll")
+
+    def database(value: Column): Column = get_json_object(value, "$.ns.db")
+
+    def ddl(value: Column): Option[Column] = None
 
     def eventTime(value: Column): Option[Column] =
       Some(get_json_object(value, "$.clusterTime").cast(LongType))

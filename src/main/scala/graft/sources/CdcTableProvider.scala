@@ -144,8 +144,8 @@ object CdcTableProvider {
   }
 
   /** Apply `scan.startup.*` as a predicate over the raw (value, __seq)
-    * frame, before any decode — codegen'd `get_json_object` probes, no
-    * extra pass. See the provider scaladoc for the mode x coordinate
+    * frame, before any decode — codegen'd JSON-path probes, no extra
+    * pass. See the provider scaladoc for the mode x coordinate
     * matrix; on the stream, `latest-offset` is the source's initial
     * offset and filters nothing here.
     */
@@ -330,6 +330,11 @@ object CdcTableProvider {
     import scala.jdk.CollectionConverters._
 
     private def feedFiles = listFeedFiles(path, session.sessionState.newHadoopConf())
+
+    // an unsupported scan.startup.* combination fails the query at start,
+    // not at the first batch with files: the plan over no files runs the
+    // same startupFiltered match and no Spark job
+    changelog(session, Nil, payload, options, isStreaming = true)
 
     // maxFilesPerTrigger paces batches (FileStreamSource's knob)
     private val maxFiles = Option(options.get("maxFilesPerTrigger")).map(v =>

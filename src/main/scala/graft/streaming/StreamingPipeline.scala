@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.cdc.{Changelog, DdlParser, DebeziumJson, WireFormat}
+import graft.cdc.{Changelog, DdlParser, WireFormat}
 import graft.model.{CreateTableEvent, TableId, TableInfo}
 import graft.pipeline.{PipelineDef, PipelineRunner}
 import graft.sinks.DataSink
@@ -81,11 +81,13 @@ final class StreamingPipeline(
     * schemas must be known (CDC JSON carries no types); each CreateTable
     * event is synthesized on the first batch — unless checkpointed schema
     * state was restored (a re-Create would reset sink-side evolution).
-    * With several tables (or newly-added-table capture) each record routes
-    * by its envelope's table — debezium `source.table`, canal `table`,
-    * mongo `ns.coll` — and every table keeps its own upstream schema plane
-    * and its own DDL segmentation, so an ALTER TABLE on one table never
-    * re-decodes or blocks the others. Mongo feeds have no DDL channel.
+    * `format` alone reads the envelopes: their decode, the table and
+    * database each record names and its DDL statement. With several
+    * tables (or newly-added-table capture) each record routes by
+    * [[WireFormat.table]] and [[WireFormat.database]], and every table
+    * keeps its own upstream schema plane and its own DDL segmentation, so
+    * an ALTER TABLE on one table never re-decodes or blocks the others.
+    * A format without a DDL channel (mongo) runs no DDL probe.
     *
     * `order`: an optional DETERMINISTIC log-order expression over the
     * stream's columns — a pure function of each row's own content that is
@@ -173,7 +175,7 @@ final class StreamingPipeline(
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     runBatches(jsonStream, checkpointLocation, trigger) { (batch, epochId) =>
       import org.apache.spark.sql.functions._
-      val sequenced = StreamingPipeline.withRoutingKey(batch)
+      val sequenced = StreamingPipeline.withRoutingKey(batch, WireFormat.Debezium())
         .withColumn(Changelog.SeqCol, StreamingPipeline.seqColumn(epochId))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // O(#tables observed this batch) driver rows, never O(rows)
@@ -208,10 +210,9 @@ final class StreamingPipeline(
   private def inferAndApply(
       tableId: TableId, primaryKeys: Seq[String], tblSlice: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
-    val payloads = tblSlice.select(
-      coalesce(
-        get_json_object(col("value"), "$.after"),
-        get_json_object(col("value"), "$.before")).as("p"))
+    val dbz = WireFormat.Debezium()
+    val payloads = tblSlice
+      .select(coalesce(dbz.field(col("value"), "after"), dbz.field(col("value"), "before")).as("p"))
       .where(col("p").isNotNull)
     // one inference pass per batch — the same per-record scan the
     // reference's schema-aware JSON source pays, batched
@@ -244,7 +245,7 @@ final class StreamingPipeline(
     }
     upstream.evolvedInfo(tableId).foreach { cur =>
       runner.processBatch(SourceBatch(Nil, Seq(tableId ->
-        WireFormat.Debezium().decode(tblSlice, cur.schema, Some(Changelog.SeqCol)))))
+        dbz.decode(tblSlice, cur.schema, Some(Changelog.SeqCol)))))
     }
   }
 
@@ -336,6 +337,7 @@ final class StreamingPipeline(
     val created = scala.collection.mutable.Set[TableId](
       (tables.map(_._1) ++ dynamicTables.keys)
         .filter(runner.registry.evolvedInfo(_).isDefined): _*)
+    val ddl = format.ddl(org.apache.spark.sql.functions.col("value"))
     (batch, epochId) => {
       import org.apache.spark.sql.functions._
       // Seq-column stability. With a caller-supplied `order` expression
@@ -372,9 +374,9 @@ final class StreamingPipeline(
         .withColumn(Changelog.SeqCol, order
           .map(StreamingPipeline.deterministicSeqColumn(epochId, _))
           .getOrElse(StreamingPipeline.seqColumn(epochId)))
-        .withColumn("__ddl", DebeziumJson.ddlOf(col("value")))
-      val stamped = (if (multi) StreamingPipeline.withRoutingKey(sequencedBase)
-        else sequencedBase)
+      val probed = ddl.fold(sequencedBase)(sequencedBase.withColumn("__ddl", _))
+      val stamped = (if (multi) StreamingPipeline.withRoutingKey(probed, format)
+        else probed)
       // Measured r15 (local[32], 25k-row batches): repartitioning the
       // batch up to defaultParallelism does NOT help — decode+write is
       // bound by fixed per-job/commit overhead at this batch size, and
@@ -393,9 +395,10 @@ final class StreamingPipeline(
       // action — single table, fan-out 1 (see the stability comment
       // above). The probe is the contains()-guarded __ddl scan with an
       // isEmpty early exit, so data batches pay substring scans, never
-      // JSON parses. Any DDL present falls back to the persist-first
-      // path: segmentation runs several isEmpty actions per table over
-      // the same frame, where the cached copy earns its cost.
+      // JSON parses; a format without a DDL channel skips it. Any DDL
+      // present falls back to the persist-first path: segmentation runs
+      // several isEmpty actions per table over the same frame, where the
+      // cached copy earns its cost.
       val oneAction = !multi && tables.size == 1 &&
         runner.routeFanOut(tables.head._1) == 1
       // Each consuming action of the UNPERSISTED frame re-reads the
@@ -415,7 +418,7 @@ final class StreamingPipeline(
           .toSet.iterator.map(runner.routeFanOut).sum
       val fastPath = (oneAction || (order.isDefined &&
           consumingActions <= StreamingPipeline.FastPathMaxActions)) &&
-        timed("ddl-probe")(stamped.where(col("__ddl").isNotNull).isEmpty)
+        (ddl.isEmpty || timed("ddl-probe")(stamped.where(col("__ddl").isNotNull).isEmpty))
       val sequenced =
         if (fastPath) stamped
         else {
@@ -431,19 +434,16 @@ final class StreamingPipeline(
       // point, so an ALTER TABLE mid-batch applies exactly where the
       // log says it does (the micro-batch boundary alone is no longer
       // the only DDL barrier).
-      val allDdl = if (fastPath) Array.empty[org.apache.spark.sql.Row]
+      val allDdl = if (fastPath || ddl.isEmpty) Array.empty[org.apache.spark.sql.Row]
       else timed("cache+ddl") {
         sequenced.where(col("__ddl").isNotNull)
           .select(col(Changelog.SeqCol), col("__ddl"),
-            (if (multi) col(StreamingPipeline.RoutingCol)
-             else DebeziumJson.ddlTableOf(col("value"))).as("__tbl"),
-            coalesce(
-              get_json_object(col("value"), "$.source.db"),
-              get_json_object(col("value"), "$.database")).as("__db"))
+            format.table(col("value")).as("__tbl"),
+            format.database(col("value")).as("__db"))
           .collect()
           .sortBy(_.getLong(0))
       }
-      val data = sequenced.where(col("__ddl").isNull)
+      val data = if (ddl.isEmpty) sequenced else sequenced.where(col("__ddl").isNull)
 
       // Newly-added-table capture: a wire CREATE TABLE naming an
       // undeclared table registers it for this and later batches. The
@@ -572,21 +572,16 @@ object StreamingPipeline {
     */
   val RoutingDbCol = "__rdb"
 
-  /** Materialize the routing key (table + database) once into the batch
-    * frame — one JSON probe pass per record, stored with the persisted
-    * batch.
+  /** Materialize the routing key — the table and database `format`
+    * reads from each envelope ([[WireFormat.table]],
+    * [[WireFormat.database]]) — once into the batch frame: one probe
+    * pass per record, stored with the persisted batch.
     */
-  def withRoutingKey(batch: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def withRoutingKey(batch: DataFrame, format: WireFormat): DataFrame = {
+    import org.apache.spark.sql.functions.col
     batch
-      .withColumn(RoutingCol, coalesce(
-        DebeziumJson.dataTableOf(col("value")),
-        // mongo change-stream namespace (MongoChangeStreamJson envelopes)
-        get_json_object(col("value"), "$.ns.coll")))
-      .withColumn(RoutingDbCol, coalesce(
-        get_json_object(col("value"), "$.source.db"),
-        get_json_object(col("value"), "$.database"),
-        get_json_object(col("value"), "$.ns.db")))
+      .withColumn(RoutingCol, format.table(col("value")))
+      .withColumn(RoutingDbCol, format.database(col("value")))
   }
 
   /** Route a persisted batch to one table's rows by the FULL table id —

@@ -66,7 +66,7 @@ object DecodeProfile {
       encoded, "value", info.schema, seqCol = Some(Changelog.SeqCol),
       connectWire = true, schemaEnvelope = true)
     def full: DataFrame = Changelog.materialize(
-      Changelog.explode(decoded.drop("__table")), Seq("user_id"))
+      Changelog.explode(decoded), Seq("user_id"))
       .orderBy(col("user_id"))
 
     def time(name: String)(df: => DataFrame): Unit = {
@@ -123,7 +123,7 @@ object DecodeProfile {
       seqCol = Some(Changelog.SeqCol),
       connectWire = true, schemaEnvelope = false)
     time("g_full q79 over sliced decode")(Changelog.materialize(
-      Changelog.explode(decodedSliced.drop("__table")), Seq("user_id"))
+      Changelog.explode(decodedSliced), Seq("user_id"))
       .orderBy(col("user_id")))
 
     spark.stop()

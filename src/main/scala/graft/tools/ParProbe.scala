@@ -60,7 +60,7 @@ object ParProbe {
       val paired = graft.cdc.DebeziumJson.decode(json, "value", payloadSchema,
         seqCol = Some("event_id"))
       graft.cdc.Changelog.materialize(
-        graft.cdc.Changelog.explode(paired.drop("__table")), Seq("user_id"))
+        graft.cdc.Changelog.explode(paired), Seq("user_id"))
         .orderBy(col("user_id"))
     }
     time("q18-shape serial")(q18Like(fan = false))

@@ -48,7 +48,7 @@ class CanalJsonSpec extends SparkSpec {
       .withColumn("off", monotonically_increasing_id())
     val decoded = CanalJson.decode(encoded, "value", payload, seqCol = Some("off"))
     val roundTrip = Changelog.materialize(
-      Changelog.explode(decoded.drop("__table")), Seq("id"))
+      Changelog.explode(decoded), Seq("id"))
       .orderBy(col("id")).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(roundTrip === direct)
     assert(roundTrip === Seq((1L, "a2")))

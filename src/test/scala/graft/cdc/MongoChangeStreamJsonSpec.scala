@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
 
 /** MongoDB change-stream envelope codec: op mapping (insert/+I,
   * update+replace/+R with no before image, delete/-D keyed by
-  * documentKey), the delete-raced-update drop rule, namespace routing
-  * columns, and resume-token passthrough.
+  * documentKey), the delete-raced-update drop rule, and a decode that
+  * yields the changelog columns alone (the namespace is read by
+  * [[WireFormat.Mongo]]).
   */
 class MongoChangeStreamJsonSpec extends SparkSpec {
 
@@ -40,7 +41,7 @@ class MongoChangeStreamJsonSpec extends SparkSpec {
     assert(!delete.contains("fullDocument"), "delete has no post-image")
   }
 
-  test("decode: ops map to I/R/D, no before images, resume token rides along") {
+  test("decode: ops map to I/R/D, no before images, changelog columns only") {
     val encoded = MongoChangeStreamJson.encode(
       pairedFixture, "appdb", "users", Seq("id"))
     val decoded = MongoChangeStreamJson.decode(encoded, "value", payload)
@@ -55,9 +56,11 @@ class MongoChangeStreamJsonSpec extends SparkSpec {
     assert(d.getAs[Row](Changelog.AfterCol) === null)
     assert(d.getAs[Row](Changelog.BeforeCol).getLong(0) === 2L)
     assert(d.getAs[Row](Changelog.BeforeCol).isNullAt(1), "documentKey has no v")
-    assert(got.forall(_.getAs[String]("__db") === "appdb"))
-    assert(got.forall(_.getAs[String]("__table") === "users"))
-    assert(got.forall(_.getAs[String]("__resume_token") != null))
+    assert(decoded.columns.toSeq ===
+      Seq(Changelog.OpCol, Changelog.BeforeCol, Changelog.AfterCol, Changelog.SeqCol))
+    val ns = encoded.select(WireFormat.Mongo.database(col("value")),
+      WireFormat.Mongo.table(col("value"))).distinct().collect()
+    assert(ns.map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("appdb", "users")))
     // clusterTime is the default __seq
     assert(got.map(_.getAs[Long](Changelog.SeqCol)).toSeq === Seq(0L, 1L, 2L, 3L))
   }
@@ -92,7 +95,7 @@ class MongoChangeStreamJsonSpec extends SparkSpec {
     val encoded = MongoChangeStreamJson.encode(pairedFixture, "appdb", "users", Seq("id"))
     val decoded = MongoChangeStreamJson.decode(encoded, "value", payload)
     val roundTrip = Changelog.materialize(
-      Changelog.explode(decoded.drop("__db", "__table", "__resume_token")), Seq("id"))
+      Changelog.explode(decoded), Seq("id"))
       .orderBy(col("id")).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(roundTrip === direct)
     assert(roundTrip === Seq((1L, "a2")))

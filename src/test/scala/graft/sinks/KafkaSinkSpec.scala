@@ -50,7 +50,7 @@ class KafkaSinkSpec extends SparkSpec {
       writer.read("users_topic").select(col("value"), col("offset")),
       "value", tinfo.schema, seqCol = Some("offset"))
     val state = Changelog.materialize(
-      Changelog.explode(decoded.drop("__table", Changelog.MetaCol)),
+      Changelog.explode(decoded.drop(Changelog.MetaCol)),
       Seq("id"))
     assert(state.orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
       === Seq((1L, "a2")))
@@ -68,7 +68,7 @@ class KafkaSinkSpec extends SparkSpec {
     assert(decoded.where(col(Changelog.OpCol) === "U").count() === 1)
     assert(decoded.where(col(Changelog.OpCol) === "D").count() === 1)
     val state = Changelog.materialize(
-      Changelog.explode(decoded.drop("__table")), Seq("id"))
+      Changelog.explode(decoded), Seq("id"))
     assert(state.orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
       === Seq((1L, "a2")))
   }

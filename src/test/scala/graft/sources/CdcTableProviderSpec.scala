@@ -527,6 +527,21 @@ class CdcTableProviderSpec extends SparkSpec {
     assert(accepted === 40 - rejected)
   }
 
+  test("readStream(graft-cdc): an unsupported startup mode fails the query on an empty feed") {
+    // no file ever arrives, so no micro-batch runs: the source itself
+    // must reject canal + timestamp, with the batch relation's message
+    val dir = java.nio.file.Files.createTempDirectory("cdc_empty_startup").toFile
+    val opts = Map("path" -> dir.getAbsolutePath, "schema.ddl" -> ddl,
+      "format" -> "canal-json", "scan.startup.mode" -> "timestamp",
+      "scan.startup.timestamp-millis" -> "35")
+    val batch = intercept[Exception](spark.read.format("graft-cdc").options(opts).load().collect())
+    assert(rootMessage(batch).contains("canal-json envelopes carry no event timestamp"))
+    runStream(opts, "cdc_empty_startup") match {
+      case Left(e) => assert(rootMessage(e) === rootMessage(batch))
+      case Right(rows) => fail(s"the stream accepted canal + timestamp: $rows")
+    }
+  }
+
   test("readStream(graft-cdc): restart on a checkpoint reads only the new file") {
     val dir = java.nio.file.Files.createTempDirectory("cdc_resume").toFile
     val out = java.nio.file.Files.createTempDirectory("cdc_resume_out").toFile

@@ -17,6 +17,8 @@ class StreamingSpec extends SparkSpec {
   private val tableInfo = TableInfo(
     StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
     primaryKeys = Seq("id"))
+  // the Connect schema block of a schema-wrapped record ({"schema":..,"payload":..})
+  private val sch = """{"type":"struct","fields":[],"optional":false}"""
 
   test("debezium-json stream drives the pipeline through foreachBatch") {
     val dir = java.nio.file.Files.createTempDirectory("dbz").toFile
@@ -40,7 +42,6 @@ class StreamingSpec extends SparkSpec {
     // a Connect schema-wrapped topic ({"schema":..,"payload":..}) with a
     // flat record mixed in — both shapes decode under schema-include
     val dir = java.nio.file.Files.createTempDirectory("dbz_wrapped").toFile
-    val sch = """{"type":"struct","fields":[],"optional":false}"""
     val lines = Seq(
       s"""{"schema":$sch,"payload":{"before":null,"after":{"id":1,"v":"a"},"op":"c","source":{"db":"db","table":"users"}}}""",
       s"""{"schema":$sch,"payload":{"before":null,"after":{"id":2,"v":"b"},"op":"c","source":{"db":"db","table":"users"}}}""",
@@ -56,6 +57,25 @@ class StreamingSpec extends SparkSpec {
       schemaInclude = true)
     q.awaitTermination(60000)
     assert(sink.results(tid) === Seq("db.users:1;a2"))
+
+    // a wrapped two-table topic routes by the table inside the payload
+    val multiDir = java.nio.file.Files.createTempDirectory("dbz_wrapped_multi").toFile
+    val tidB = TableId.parse("db.orders")
+    val infoB = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("amt", LongType))),
+      primaryKeys = Seq("id"))
+    java.nio.file.Files.write(new java.io.File(multiDir, "feed.json").toPath, Seq(
+      s"""{"schema":$sch,"payload":{"before":null,"after":{"id":1,"v":"a"},"op":"c","source":{"db":"db","table":"users"}}}""",
+      s"""{"schema":$sch,"payload":{"before":null,"after":{"id":10,"amt":5},"op":"c","source":{"db":"db","table":"orders"}}}""",
+      s"""{"schema":$sch,"payload":{"before":{"id":1,"v":"a"},"after":{"id":1,"v":"a2"},"op":"u","source":{"db":"db","table":"users"}}}""")
+      .mkString("\n").getBytes("UTF-8"))
+    val multiSink = new ValuesDatabase
+    val mq = new StreamingPipeline(spark, pd, multiSink).start(
+      StreamingPipeline.fileJsonStream(spark, multiDir.getAbsolutePath),
+      WireFormat.Debezium(schemaInclude = true), Seq(tid -> tableInfo, tidB -> infoB))
+    mq.awaitTermination(60000)
+    assert(multiSink.results(tid) === Seq("db.users:1;a2"))
+    assert(multiSink.results(tidB) === Seq("db.orders:10;5"))
   }
 
   test("incremental dedup over micro-batches keeps the growing corpus near-dup-free") {
@@ -145,7 +165,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("mid-stream ALTER TABLE from the wire: schema widens at the DDL's log position") {
-    val dir = java.nio.file.Files.createTempDirectory("dbz_ddl").toFile
     // ONE batch: inserts, then ALTER TABLE ADD COLUMN mid-file, then rows
     // carrying the new column — the segment before the DDL must decode
     // without `age`, the segment after with it
@@ -158,23 +177,29 @@ class StreamingSpec extends SparkSpec {
       """{"source":{"db":"db","table":"users"},"ddl":"ALTER TABLE `db`.`users` ADD COLUMN `age` INT","tableChanges":[]}""",
       """{"before":null,"after":{"id":3,"v":"c","age":30},"op":"c","ts_ms":3,"source":{"db":"db","table":"users"}}""",
       """{"before":{"id":1,"v":"a","age":null},"after":{"id":1,"v":"a2","age":11},"op":"u","ts_ms":4,"source":{"db":"db","table":"users"}}""")
-    java.nio.file.Files.write(new java.io.File(dir, "feed.json").toPath,
-      lines.mkString("\n").getBytes("UTF-8"))
+    // the same feed flat, and Connect schema-wrapped under schema-include
+    for ((feed, wrapped) <- Seq(lines -> false,
+        lines.map(l => s"""{"schema":$sch,"payload":$l}""") -> true)) {
+      val dir = java.nio.file.Files.createTempDirectory("dbz_ddl").toFile
+      java.nio.file.Files.write(new java.io.File(dir, "feed.json").toPath,
+        feed.mkString("\n").getBytes("UTF-8"))
 
-    val sink = new ValuesDatabase
-    val sp = new StreamingPipeline(spark, pd, sink)
-    val q = sp.startFromDebeziumJson(
-      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), tid, tableInfo)
-    q.awaitTermination(60000)
-    // the wire DDL evolved both planes and reached the sink; the other
-    // table's DDL left no trace
-    assert(sp.runner.registry.originalInfo(tid).get.fieldNames === Seq("id", "v", "age"))
-    assert(sink.info(tid).get.fieldNames === Seq("id", "v", "age"))
-    assert(!sp.upstream.evolvedInfo(tid).get.fieldNames.contains("zzz"))
-    // oracle materialization: id1 updated post-DDL with age, id2 pre-DDL
-    // (age null-fills), id3 inserted with age
-    assert(sink.results(tid).toSet === Set(
-      "db.users:1;a2;11", "db.users:2;b;null", "db.users:3;c;30"))
+      val sink = new ValuesDatabase
+      val sp = new StreamingPipeline(spark, pd, sink)
+      val q = sp.startFromDebeziumJson(
+        StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), tid, tableInfo,
+        schemaInclude = wrapped)
+      q.awaitTermination(60000)
+      // the wire DDL evolved both planes and reached the sink; the other
+      // table's DDL left no trace
+      assert(sp.runner.registry.originalInfo(tid).get.fieldNames === Seq("id", "v", "age"))
+      assert(sink.info(tid).get.fieldNames === Seq("id", "v", "age"))
+      assert(!sp.upstream.evolvedInfo(tid).get.fieldNames.contains("zzz"))
+      // oracle materialization: id1 updated post-DDL with age, id2 pre-DDL
+      // (age null-fills), id3 inserted with age
+      assert(sink.results(tid).toSet === Set(
+        "db.users:1;a2;11", "db.users:2;b;null", "db.users:3;c;30"))
+    }
   }
 
   test("wire ALTER through an explicit transform projection: sink schema stays pinned") {
@@ -470,7 +495,7 @@ class StreamingSpec extends SparkSpec {
       """{"after":{"id":2},"op":"c","source":{"db":"db","table":"orders"}}""")
       .mkString("\n").getBytes("UTF-8"))
     val batch = spark.read.text(dir.getAbsolutePath).toDF("value")
-    val keyed = StreamingPipeline.withRoutingKey(batch)
+    val keyed = StreamingPipeline.withRoutingKey(batch, WireFormat.Debezium())
     // one probe in the keyed frame itself (the single pass)...
     assert(keyed.queryExecution.optimizedPlan.toString.contains("get_json_object"))
     val routed = StreamingPipeline.routeByTableId(
@@ -922,6 +947,37 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination(60000)
     assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
     assert(sink.results(tid).toSet === Set("db.users:1;a2;11"))
+  }
+
+  test("mongo feed: no DDL channel, so a micro-batch runs no DDL probe job") {
+    val dir = java.nio.file.Files.createTempDirectory("mongo_jobs").toFile
+    java.nio.file.Files.write(new java.io.File(dir, "feed.json").toPath, Seq(
+      """{"_id":{"_data":"8201"},"operationType":"insert","clusterTime":1,"fullDocument":{"id":1,"v":"a"},"ns":{"db":"db","coll":"users"}}""",
+      """{"_id":{"_data":"8202"},"operationType":"insert","clusterTime":2,"fullDocument":{"id":2,"v":"b"},"ns":{"db":"db","coll":"users"}}""")
+      .mkString("\n").getBytes("UTF-8"))
+    // Spark jobs per (query id, micro-batch id)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val key = (p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId"))
+          if (key._1 != null && key._2 != null) jobs.merge(key, 1, (a, b) => a + b)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val sink = new ValuesDatabase
+    val q = try {
+      val q = new StreamingPipeline(spark, pd, sink).start(
+        StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Mongo,
+        Seq(tid -> tableInfo))
+      q.awaitTermination(60000)
+      org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(sink.results(tid).toSet === Set("db.users:1;a", "db.users:2;b"))
+    import scala.jdk.CollectionConverters._
+    val perBatch = jobs.asScala.collect { case ((qid, _), n) if qid == q.id.toString => n.intValue }
+    assert(perBatch.toSeq === Seq(3))
   }
 
   test("multi-table canal topic: routing + per-table DDL, multi-row messages intact") {
