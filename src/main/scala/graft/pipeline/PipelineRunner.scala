@@ -114,12 +114,14 @@ final class PipelineRunner(
     * makes the unpersisted __seq self-consistent unconditionally).
     */
   def routeFanOut(tableId: TableId): Int = router.route(tableId).size
-  // UPSTREAM schema per source table (what the database sends), distinct
-  // from the registry's SINK plane: projected-table DDL derivation diffs
-  // the projection's output under the old vs new upstream schema
-  // LinkedHashMap: batch mode emits the merged CreateTables in
-  // first-create order, so the plane must remember script order
-  private val upstreamPlane = scala.collection.mutable.LinkedHashMap[TableId, TableInfo]()
+  /** The source-table schema plane: each upstream table as the database
+    * sends it now (every schema event applies here faithfully, Evolve),
+    * beside the registry's SINK plane. Streaming decodes with it,
+    * projected and many-to-one DDL derive from it, and batch mode emits
+    * creates in its creation order. The pair is the reference's
+    * SchemaManager (SchemaManager.java:56); streaming checkpoints both.
+    */
+  val sourcePlane = new SchemaRegistry(graft.schema.SchemaChangeBehavior.Evolve)
   // batch mode (BatchSchemaOperator.java:108-139): creates buffer until
   // the first data event, then every sink's schema derives in one shot
   private var batchCreatesEmitted = false
@@ -154,16 +156,20 @@ final class PipelineRunner(
       // events are legal in a bounded run — creates buffer (no emission
       // until the first data event), anything else is a hard error
       e match {
-        case CreateTableEvent(t, info) => upstreamPlane(t) = info
+        case c: CreateTableEvent => sourcePlane.apply(c)
         case other =>
           throw new RuntimeException(s"Unknown event type in Batch record: $other")
       }
       return
     }
     val routed = router.route(e.tableId)
+    val prevUp = sourcePlane.evolvedInfo(e.tableId)
+    // upstreams BEFORE the event, so a DropTable of the last depending
+    // upstream still forwards
+    val upstreams = sourcePlane.tables
+    sourcePlane.apply(e)
     e match {
       case CreateTableEvent(_, info) =>
-        upstreamPlane(e.tableId) = info
         val transformed = transformedInfo(e.tableId, info)
         routed.foreach { sinkId =>
           registry.evolvedInfo(sinkId) match {
@@ -179,18 +185,6 @@ final class PipelineRunner(
           }
         }
       case other =>
-        val prevUp = upstreamPlane.get(e.tableId)
-        // dependency count per sink BEFORE applying the event, so a
-        // DropTable of the last depending upstream still forwards
-        val depCount: TableId => Int = {
-          val keys = upstreamPlane.keys.toSeq
-          sinkId => keys.count(u => router.route(u).contains(sinkId))
-        }
-        other match {
-          case DropTableEvent(_) => upstreamPlane.remove(e.tableId)
-          case _ =>
-            prevUp.foreach(i => upstreamPlane(e.tableId) = i.applySchemaChange(other))
-        }
         // A rule WITH a projection decouples the sink schema from the
         // upstream one: re-derive the projected schema under the updated
         // upstream plane and emit the DIFF (the reference's
@@ -204,7 +198,7 @@ final class PipelineRunner(
           if (projecting && prevUp.isDefined) {
             try {
               val oldT = transformedInfo(e.tableId, prevUp.get)
-              val newT = upstreamPlane.get(e.tableId)
+              val newT = sourcePlane.evolvedInfo(e.tableId)
                 .map(transformedInfo(e.tableId, _)).getOrElse(oldT)
               sinkId => deriveProjected(sinkId, oldT.schema, newT.schema, other)
             } catch {
@@ -224,7 +218,7 @@ final class PipelineRunner(
           // folds least-common over every depending upstream schema and
           // emits the DIFF (rename => add, drop => no-op)
           val events =
-            if (depCount(sinkId) > 1) mergedDiff(sinkId)
+            if (upstreams.count(router.route(_).contains(sinkId)) > 1) mergedDiff(sinkId)
             else derived(sinkId)
           events.foreach(applyToSink)
         }
@@ -240,9 +234,8 @@ final class PipelineRunner(
   private def mergedDiff(sinkId: TableId): Seq[SchemaChangeEvent] =
     registry.evolvedInfo(sinkId) match {
       case Some(cur) =>
-        val deps = upstreamPlane.toSeq
-          .filter { case (u, _) => router.route(u).contains(sinkId) }
-          .map { case (u, i) => transformedInfo(u, i) }
+        val deps = sourcePlane.tables.filter(router.route(_).contains(sinkId))
+          .flatMap(u => sourcePlane.evolvedInfo(u).map(transformedInfo(u, _)))
         val merged = deps.foldLeft(cur)((acc, d) =>
           SchemaMerging.leastCommonTableInfo(Seq(acc, d)))
         schemaDiff(sinkId, cur.schema, merged.schema)
@@ -257,8 +250,8 @@ final class PipelineRunner(
     * Emission order is first-create order of the resolved sink ids.
     */
   private def emitMergedBatchCreates(): Unit = {
-    val tables = upstreamPlane.keys.toSeq
-    val tinfos = tables.map(t => t -> transformedInfo(t, upstreamPlane(t))).toMap
+    val tables = sourcePlane.tables
+    val tinfos = tables.map(t => t -> transformedInfo(t, sourcePlane.evolvedInfo(t).get)).toMap
     val groups = router.groupByRule(tables.toSet)
     val sinkSchemas = scala.collection.mutable.LinkedHashMap[TableId, TableInfo]()
     val routedTables = scala.collection.mutable.Set[TableId]()

@@ -78,8 +78,9 @@ final class SchemaRegistry(
     includeKinds: Option[Set[String]] = None,
     excludeKinds: Set[String] = Set.empty) {
 
-  private val original = mutable.Map.empty[TableId, TableInfo]
-  private val evolved = mutable.Map.empty[TableId, TableInfo]
+  // in creation order, which snapshots keep
+  private val original = mutable.LinkedHashMap.empty[TableId, TableInfo]
+  private val evolved = mutable.LinkedHashMap.empty[TableId, TableInfo]
   // versioned store (SchemaManager keeps a sorted version map per table;
   // SchemaManager.java:56): every applied change appends a version, and
   // only the newest VERSIONS_TO_KEEP survive (SchemaManager.java:58,
@@ -104,7 +105,8 @@ final class SchemaRegistry(
 
   def originalInfo(t: TableId): Option[TableInfo] = original.get(t)
   def evolvedInfo(t: TableId): Option[TableInfo] = evolved.get(t)
-  def tables: Set[TableId] = original.keySet.toSet
+  /** The tracked tables, in creation order. */
+  def tables: Seq[TableId] = original.keys.toSeq
 
   /** The RETAINED evolved-plane versions of a table, oldest first (at
     * most the newest [[VersionsToKeep]]; absolute numbering starts at
@@ -236,7 +238,7 @@ final class SchemaRegistry(
       "partitionKeys" -> i.partitionKeys.asJava,
       "options" -> i.options.asJava,
       "comment" -> i.comment.orNull).asJava
-    val tables = original.keySet.toSeq.sortBy(_.identifier).map { t =>
+    val tables = original.keys.toSeq.map { t =>
       Map[String, Object](
         "id" -> t.identifier,
         "original" -> infoMap(original(t)),

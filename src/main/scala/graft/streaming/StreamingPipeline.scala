@@ -5,6 +5,7 @@ import graft.model.{CreateTableEvent, TableId, TableInfo}
 import graft.pipeline.{PipelineDef, PipelineRunner}
 import graft.sinks.DataSink
 import graft.sources.SourceBatch
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -22,6 +23,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * because each batch is keyed by `__seq`, replayed batches overwrite
   * idempotently in PK-keyed sinks (at-least-once delivery, exactly-once
   * table state).
+  *
+  * The [[PipelineRunner]] owns all schema state: its `registry` (sink
+  * plane) and `sourcePlane` (each source table as the database sends
+  * it). This class decodes with the source plane, sends every schema
+  * event through `runner.processBatch`, creates a declared table when the
+  * source plane lacks it, and captures the source plane's undeclared
+  * tables. With a checkpoint, a batch that changes a plane writes it to
+  * `graft-schema-state-<batch>.yaml` (sink) or
+  * `graft-upstream-schema-<batch>.yaml` (source) in the checkpoint
+  * directory; a restart restores the newest files tagged before its first
+  * batch, so a replayed batch starts from the state it first saw.
   */
 final class StreamingPipeline(
     spark: SparkSession,
@@ -29,15 +41,6 @@ final class StreamingPipeline(
     sink: DataSink) {
 
   private[graft] val runner = new PipelineRunner(spark, pipeline, null, sink)
-
-  /** Upstream (pre-transform, pre-route) schema plane. The runner's
-    * registry tracks SINK tables with transformed schemas; decoding the
-    * wire needs the schema of what the DATABASE is sending, so wire DDL
-    * evolves this registry too (faithfully — Evolve behavior) and its
-    * state checkpoints alongside the sink-plane state.
-    */
-  private[graft] val upstream =
-    new graft.schema.SchemaRegistry(graft.schema.SchemaChangeBehavior.Evolve)
 
   /** DDL type names resolve through the SOURCE database's dialect map
     * (`source.dialect` option, e.g. "postgres" — a postgres feed's
@@ -59,12 +62,6 @@ final class StreamingPipeline(
   private val newlyAddedCapture: Boolean =
     pipeline.source.options.get("scan.newly-added-table.enabled").exists(_.toBoolean)
 
-  /** Tables discovered from wire CREATEs (undeclared at start). Restored
-    * from the upstream schema plane on checkpoint restart.
-    */
-  private[graft] val dynamicTables =
-    scala.collection.mutable.LinkedHashMap.empty[TableId, TableInfo]
-
   /** Micro-batches that took the persist-first (slow) path — driver-side
     * counter, observability for specs pinning the fast-path gate.
     */
@@ -79,13 +76,14 @@ final class StreamingPipeline(
     * (one or many — the reference's Kafka pipeline source and the MySQL
     * source multiplex every captured table onto one feed). The tables'
     * schemas must be known (CDC JSON carries no types); each CreateTable
-    * event is synthesized on the first batch — unless checkpointed schema
-    * state was restored (a re-Create would reset sink-side evolution).
+    * event is synthesized on the first batch that finds the table missing
+    * from the source plane — never after a restore that holds it (a
+    * re-Create would reset the table's evolution).
     * `format` alone reads the envelopes: their decode, the table and
     * database each record names and its DDL statement. With several
     * tables (or newly-added-table capture) each record routes by
     * [[WireFormat.table]] and [[WireFormat.database]], and every table
-    * keeps its own upstream schema plane and its own DDL segmentation, so
+    * keeps its own source-plane schema and its own DDL segmentation, so
     * an ALTER TABLE on one table never re-decodes or blocks the others.
     * A format without a DDL channel (mongo) runs no DDL probe.
     *
@@ -135,7 +133,7 @@ final class StreamingPipeline(
     * reference's Kafka pipeline source in JSON mode infers schemas
     * continuously from records). Each micro-batch infers the payload
     * schema from its `after`/`before` documents, widens the current
-    * upstream schema through the merging lattice, and emits the
+    * source-plane schema through the merging lattice, and emits the
     * difference as AddColumn / AlterColumnType events before decoding —
     * so a field that appears (or widens) mid-stream evolves the sink
     * exactly like wire DDL would. First batch synthesizes CreateTable
@@ -203,7 +201,7 @@ final class StreamingPipeline(
     }
 
   /** One table's slice of a schema-less batch: infer the payload schema,
-    * widen the upstream plane through the merging lattice (CreateTable on
+    * widen the source plane through the merging lattice (CreateTable on
     * first sight, AddColumn / AlterColumnType after), then decode and run
     * the slice with the post-evolution schema.
     */
@@ -219,12 +217,11 @@ final class StreamingPipeline(
     val session = tblSlice.sparkSession
     import session.implicits._
     val inferred = session.read.json(payloads.as[String]).schema
-    upstream.evolvedInfo(tableId) match {
+    runner.sourcePlane.evolvedInfo(tableId) match {
       case None if inferred.isEmpty => // empty first batch: wait for data
       case None =>
-        val info = TableInfo(inferred, primaryKeys)
-        upstream.apply(CreateTableEvent(tableId, info))
-        runner.processBatch(SourceBatch(Seq(CreateTableEvent(tableId, info)), Nil))
+        runner.processBatch(SourceBatch(
+          Seq(CreateTableEvent(tableId, TableInfo(inferred, primaryKeys))), Nil))
       case Some(cur) if !inferred.isEmpty =>
         val merged = graft.schema.SchemaMerging.leastCommonSchema(cur.schema, inferred)
         val curTypes = cur.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -237,51 +234,48 @@ final class StreamingPipeline(
           (if (adds.nonEmpty)
             Seq(graft.model.AddColumnEvent(tableId, adds.toIndexedSeq)) else Nil) ++
             (if (widens.nonEmpty) Seq(graft.model.AlterColumnTypeEvent(tableId, widens)) else Nil)
-        if (events.nonEmpty) {
-          events.foreach(upstream.apply)
-          runner.processBatch(SourceBatch(events, Nil))
-        }
+        if (events.nonEmpty) runner.processBatch(SourceBatch(events, Nil))
       case _ => ()
     }
-    upstream.evolvedInfo(tableId).foreach { cur =>
+    runner.sourcePlane.evolvedInfo(tableId).foreach { cur =>
       runner.processBatch(SourceBatch(Nil, Seq(tableId ->
         dbz.decode(tblSlice, cur.schema, Some(Changelog.SeqCol)))))
     }
   }
 
-  /** Restore both schema planes (sink-side registry + upstream decode
-    * plane) from their checkpoint state files, if present. No-op without
-    * a checkpoint location or on a fresh checkpoint.
+  /** The runner's two schema planes, each with its state file name. */
+  private def planes: Seq[(String, graft.schema.SchemaRegistry)] = Seq(
+    StreamingPipeline.SchemaStateFile -> runner.registry,
+    StreamingPipeline.UpstreamStateFile -> runner.sourcePlane)
+
+  /** Restore both planes for a run whose first micro-batch is
+    * `firstBatch`: each takes its newest state file tagged with an earlier
+    * batch, so a replayed batch starts from the state before it. Files
+    * tagged `firstBatch` or later (never committed) and the ones the
+    * restored file supersedes are deleted.
     */
-  private def restoreSchemaPlanes(checkpointLocation: Option[String]): Unit = {
-    def restore(name: String, apply: String => Unit): Unit =
-      checkpointLocation.map(cp => new java.io.File(cp, name))
-        .filter(_.exists)
-        .foreach(f => apply(
-          new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
-    restore(StreamingPipeline.SchemaStateFile, runner.registry.restoreState)
-    restore(StreamingPipeline.UpstreamStateFile, upstream.restoreState)
+  private def restoreSchemaPlanes(fs: FileSystem, dir: Path, firstBatch: Long): Unit = {
+    val names = if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath.getName).toSeq else Nil
+    planes.foreach { case (file, plane) =>
+      val (before, stale) = names
+        .flatMap(n => StreamingPipeline.stateTag(file, n).map(_ -> new Path(dir, n)))
+        .sortBy(_._1).partition(_._1 < firstBatch)
+      before.lastOption.foreach { case (_, f) =>
+        val in = fs.open(f)
+        try plane.restoreState(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+      }
+      (before.dropRight(1) ++ stale).foreach(f => fs.delete(f._2, false))
+    }
   }
 
-  /** Persist both schema planes next to the checkpoint (the reference
-    * checkpoints SchemaManager state; SchemaManager.java:56) so a restart
-    * resumes with evolved sink schemas AND the upstream decode schema,
-    * not the originals. Writes are atomic (tmp + ATOMIC_MOVE) so a crash
-    * mid-write never leaves a torn state file.
+  /** Write one state file through a temporary file and a rename, so a
+    * crash mid-write never leaves a torn state file.
     */
-  private def persistSchemaPlanes(checkpointLocation: Option[String]): Unit = {
-    def persist(name: String, state: String): Unit =
-      checkpointLocation.foreach { cp =>
-        val f = new java.io.File(cp, name)
-        f.getParentFile.mkdirs()
-        val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
-        java.nio.file.Files.write(tmp.toPath, state.getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp.toPath, f.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    persist(StreamingPipeline.SchemaStateFile, runner.registry.snapshotState)
-    persist(StreamingPipeline.UpstreamStateFile, upstream.snapshotState)
+  private def writeState(fs: FileSystem, dst: Path, state: String): Unit = {
+    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(state.getBytes("UTF-8")) finally out.close()
+    require(fs.rename(tmp, dst), s"could not move $tmp to $dst")
   }
 
   /** Per-phase wall clock inside the micro-batch, printed when
@@ -298,20 +292,31 @@ final class StreamingPipeline(
       r
     }
 
-  /** Every entry point's query: restore both schema planes, build the
-    * per-batch body (after the restore — it may read restored state), run
-    * it on each micro-batch and checkpoint both planes after it.
+  /** Every entry point's query: run `body` on each micro-batch. With a
+    * checkpoint, the first batch restores both schema planes, and a batch
+    * that changes a plane writes it tagged with its batch id, on the
+    * checkpoint's own Hadoop filesystem.
     */
   private def runBatches(jsonStream: DataFrame, checkpointLocation: Option[String],
-      trigger: Trigger)(perBatch: => (DataFrame, Long) => Unit): StreamingQuery = {
-    restoreSchemaPlanes(checkpointLocation)
-    val body = perBatch
+      trigger: Trigger)(body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val dir = checkpointLocation.map(new Path(_))
+    lazy val fs = dir.get.getFileSystem(spark.sessionState.newHadoopConf())
+    // what each plane's newest state file holds; None until the restore
+    var written: Option[Seq[String]] = None
     val writer = jsonStream.writeStream
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+        dir.filter(_ => written.isEmpty).foreach { d =>
+          restoreSchemaPlanes(fs, d, epochId)
+          written = Some(planes.map(_._2.snapshotState))
+        }
         body(batch.toDF(), epochId)
-        timed("schema-persist") { persistSchemaPlanes(checkpointLocation) }
-        ()
+        dir.foreach(d => timed("schema-persist") {
+          val now = planes.map(_._2.snapshotState)
+          for ((((file, _), state), prev) <- planes.zip(now).zip(written.get) if state != prev)
+            writeState(fs, new Path(d, StreamingPipeline.stateFile(file, epochId)), state)
+          written = Some(now)
+        })
       }
     checkpointLocation.fold(writer)(cp => writer.option("checkpointLocation", cp)).start()
   }
@@ -328,15 +333,8 @@ final class StreamingPipeline(
     // table with newly-added capture on still needs routing (undeclared
     // tables' rows must not decode as the declared table's)
     val multi = tables.size > 1 || newlyAddedCapture
-    if (multi && newlyAddedCapture)
-      // restart: tables captured in a previous run live in the restored
-      // upstream plane — resume capturing them without a fresh CREATE
-      upstream.tables.filterNot(tables.map(_._1).toSet).foreach { t =>
-        upstream.evolvedInfo(t).foreach(i => dynamicTables(t) = i)
-      }
-    val created = scala.collection.mutable.Set[TableId](
-      (tables.map(_._1) ++ dynamicTables.keys)
-        .filter(runner.registry.evolvedInfo(_).isDefined): _*)
+    val declared = tables.map(_._1).toSet
+    val plane = runner.sourcePlane
     val ddl = format.ddl(org.apache.spark.sql.functions.col("value"))
     (batch, epochId) => {
       import org.apache.spark.sql.functions._
@@ -399,23 +397,14 @@ final class StreamingPipeline(
       // present falls back to the persist-first path: segmentation runs
       // several isEmpty actions per table over the same frame, where the
       // cached copy earns its cost.
-      val oneAction = !multi && tables.size == 1 &&
-        runner.routeFanOut(tables.head._1) == 1
-      // Each consuming action of the UNPERSISTED frame re-reads the
-      // source and re-runs the decode (and, multi-table, the routing
-      // JSON probe): R routed actions cost R decode passes where the
-      // persist path costs 1 decode + cache build + R cached filters.
-      // Measured at 4 tables the unpersisted passes still win (88-99k
-      // vs ~66k ev/s), but the trade inverts with table count — a
-      // 200-table whole-database topic would pay 200 probe passes per
-      // batch — so the deterministic-order fast path is capped at a
-      // bounded action fan-out and persists beyond it.
-      // wire-captured tables (dynamicTables) consume actions too — a
-      // whole-database topic that grew 200 captured tables must fall
-      // back to persist even though only 1 table was declared
-      val consumingActions =
-        (tables.iterator.map(_._1) ++ dynamicTables.keysIterator)
-          .toSet.iterator.map(runner.routeFanOut).sum
+      //
+      // The deterministic-order fast path serves at most
+      // FastPathMaxActions consuming actions (see there). Tables captured
+      // in earlier batches (the source plane's undeclared tables) count
+      // too: a topic that grew 200 captured tables must persist.
+      val captured = if (newlyAddedCapture) plane.tables.filterNot(declared) else Nil
+      val consumingActions = (declared.toSeq ++ captured).map(runner.routeFanOut).sum
+      val oneAction = !multi && consumingActions == 1
       val fastPath = (oneAction || (order.isDefined &&
           consumingActions <= StreamingPipeline.FastPathMaxActions)) &&
         (ddl.isEmpty || timed("ddl-probe")(stamped.where(col("__ddl").isNotNull).isEmpty))
@@ -446,34 +435,31 @@ final class StreamingPipeline(
       val data = if (ddl.isEmpty) sequenced else sequenced.where(col("__ddl").isNull)
 
       // Newly-added-table capture: a wire CREATE TABLE naming an
-      // undeclared table registers it for this and later batches. The
-      // CREATE itself applies at its log position through the per-table
-      // DDL loop below (it is THE creation event — no synthesis).
-      if (multi && newlyAddedCapture) {
-        val knownIds = tables.map(_._1) ++ dynamicTables.keys
-        allDdl.iterator
-          .filter(r => !r.isNullAt(2) && !knownIds.exists(k =>
-            StreamingPipeline.idMatches(k, r.getString(2),
-              Option(r.getString(3)))))
-          .foreach { r =>
-            val tid = Option(r.getString(3))
-              .map(db => TableId.schemaTable(db, r.getString(2)))
-              .getOrElse(TableId.tableOnly(r.getString(2)))
-            try DdlParser.parse(r.getString(1), tid, ddlTypes) match {
-              case Seq(CreateTableEvent(_, info)) =>
-                dynamicTables(tid) = info
-                created += tid // the wire CREATE creates it, below
-              case _ => () // ALTER etc. for a never-created table: skip
-            } catch {
-              case e: Exception =>
-                skippedDdlStatements += 1
-                System.err.println(s"[graft] skipping unparseable DDL for " +
-                  s"undeclared table ${r.getString(2)}: ${e.getMessage}")
-            }
+      // undeclared table registers it. The CREATE itself applies at its
+      // log position through the per-table DDL loop below (it is THE
+      // creation event — no synthesis); from the next batch on the table
+      // is in the source plane, so it is captured.
+      val fresh = if (!newlyAddedCapture) Nil else allDdl.toSeq
+        .filter(r => !r.isNullAt(2) && !(declared.iterator ++ captured).exists(k =>
+          StreamingPipeline.idMatches(k, r.getString(2), Option(r.getString(3)))))
+        .flatMap { r =>
+          val tid = Option(r.getString(3))
+            .map(db => TableId.schemaTable(db, r.getString(2)))
+            .getOrElse(TableId.tableOnly(r.getString(2)))
+          try DdlParser.parse(r.getString(1), tid, ddlTypes) match {
+            case Seq(CreateTableEvent(_, info)) => Some(tid -> info)
+            case _ => None // ALTER etc. for a never-created table: skip
+          } catch {
+            case e: Exception =>
+              skippedDdlStatements += 1
+              System.err.println(s"[graft] skipping unparseable DDL for " +
+                s"undeclared table ${r.getString(2)}: ${e.getMessage}")
+              None
           }
-      }
+        }.distinctBy(_._1)
 
-      val activeTables = tables ++ dynamicTables.toSeq
+      val activeTables = tables ++
+        captured.flatMap(t => plane.evolvedInfo(t).map(t -> _)) ++ fresh
 
       // One flush scope per micro-batch: routed writes are held across
       // tables and segments and reach the sink at the next schema change
@@ -494,18 +480,16 @@ final class StreamingPipeline(
           if (multi) matches else r.isNullAt(2) || matches
         }
 
-        if (!created.contains(tableId)) {
-          created += tableId
-          upstream.apply(CreateTableEvent(tableId, info))
+        // a declared table is created once the source plane holds it
+        if (declared(tableId) && plane.evolvedInfo(tableId).isEmpty)
           runner.processBatch(SourceBatch(Seq(CreateTableEvent(tableId, info)), Nil))
-        }
 
         def emit(segment: DataFrame): Unit = {
-          // decode with the CURRENT upstream schema (what the database is
-          // sending now — NOT the runner's transformed sink plane): columns
-          // added/renamed by earlier DDL in this very batch parse from this
-          // row on
-          val cur = upstream.evolvedInfo(tableId).getOrElse(info)
+          // decode with the CURRENT source-plane schema (what the database
+          // is sending now — NOT the runner's transformed sink plane):
+          // columns added/renamed by earlier DDL in this very batch parse
+          // from this row on
+          val cur = plane.evolvedInfo(tableId).getOrElse(info)
           runner.processBatch(
             SourceBatch(Nil, Seq(tableId ->
               format.decode(segment, cur.schema, Some(Changelog.SeqCol)))))
@@ -530,7 +514,6 @@ final class StreamingPipeline(
                   s"${r.getString(1).take(200)} (${e.getMessage})")
                 Nil
               }
-            events.foreach(upstream.apply)
             runner.processBatch(SourceBatch(events, Nil))
             lower = at
           }
@@ -545,11 +528,24 @@ final class StreamingPipeline(
 
 object StreamingPipeline {
 
-  /** Schema-registry state file inside the checkpoint directory. */
+  /** Sink-plane state file in the checkpoint, tagged by [[stateFile]]. */
   val SchemaStateFile = "graft-schema-state.yaml"
 
-  /** Upstream (wire-decode) schema state file inside the checkpoint. */
+  /** Source-plane state file inside the checkpoint, tagged the same way. */
   val UpstreamStateFile = "graft-upstream-schema.yaml"
+
+  /** `file` tagged with the batch it follows: `graft-schema-state-7.yaml`. */
+  private def stateFile(file: String, batchId: Long): String =
+    s"${file.stripSuffix(".yaml")}-$batchId.yaml"
+
+  /** The batch id the checkpoint entry `name` is tagged with as a state
+    * file of `file`, if it is one. The untagged name, which checkpoints of
+    * earlier versions hold, counts as written before every batch.
+    */
+  private def stateTag(file: String, name: String): Option[Long] =
+    if (name == file) Some(-1L)
+    else (java.util.regex.Pattern.quote(file.stripSuffix(".yaml")) + "-(\\d{1,18})\\.yaml").r
+      .unapplySeq(name).map(_.head.toLong)
 
   /** Column holding the envelope's table name on multi-table topics. */
   val RoutingCol = "__tbl"

@@ -194,7 +194,7 @@ class StreamingSpec extends SparkSpec {
       // table's DDL left no trace
       assert(sp.runner.registry.originalInfo(tid).get.fieldNames === Seq("id", "v", "age"))
       assert(sink.info(tid).get.fieldNames === Seq("id", "v", "age"))
-      assert(!sp.upstream.evolvedInfo(tid).get.fieldNames.contains("zzz"))
+      assert(!sp.runner.sourcePlane.evolvedInfo(tid).get.fieldNames.contains("zzz"))
       // oracle materialization: id1 updated post-DDL with age, id2 pre-DDL
       // (age null-fills), id3 inserted with age
       assert(sink.results(tid).toSet === Set(
@@ -229,7 +229,7 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), tid, tableInfo)
     q.awaitTermination(60000)
     // upstream plane evolved; the projected sink schema did not
-    assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
     assert(sink.info(tid).get.fieldNames === Seq("id", "vu"))
     assert(sink.results(tid).toSet === Set("db.users:1;A", "db.users:2;B"))
   }
@@ -413,7 +413,7 @@ class StreamingSpec extends SparkSpec {
       Seq(tid -> tableInfo))
     q.awaitTermination(60000)
     val pid = TableId.parse("db.products")
-    assert(sp.dynamicTables.keySet === Set(pid))
+    assert(sp.runner.sourcePlane.tables.toSet - tid === Set(pid))
     assert(sp.runner.registry.evolvedInfo(pid).get.fieldNames === Seq("id", "name"))
     assert(sp.runner.registry.evolvedInfo(pid).get.primaryKeys === Seq("id"))
     assert(sink.results(pid) === Seq("db.products:100;gadget"))
@@ -455,7 +455,7 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo), checkpointLocation = Some(cp))
     q2.awaitTermination(60000)
-    assert(sp2.dynamicTables.keySet === Set(pid))
+    assert(sp2.runner.sourcePlane.tables.toSet - tid === Set(pid))
     assert(sink2.results(pid) === Seq("db.products:100;gadget"))
   }
 
@@ -478,7 +478,7 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Debezium(),
       Seq(tid -> tableInfo, tidB -> infoB))
     q.awaitTermination(60000)
-    assert(sp.dynamicTables.isEmpty)
+    assert((sp.runner.sourcePlane.tables.toSet -- Set(tid, tidB)).isEmpty)
     assert(sp.runner.registry.evolvedInfo(TableId.parse("db.products")).isEmpty)
     assert(sink.results(tid) === Seq("db.users:1;a"))
     assert(sink.results(tidB) === Seq("db.orders:10;5"))
@@ -801,7 +801,7 @@ class StreamingSpec extends SparkSpec {
       """{"before":null,"after":{"id":2,"v":"b"},"op":"c","ts_ms":2,"source":{"db":"db","table":"users"}}""")
     q.processAllAvailable()
     // first batch synthesized CreateTable from its own inference
-    assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v"))
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("id", "v"))
     assert(sink.info(tid).get.primaryKeys === Seq("id"))
     // a field appears mid-stream: AddColumn flows through to the sink and
     // earlier rows null-fill
@@ -809,7 +809,7 @@ class StreamingSpec extends SparkSpec {
       """{"before":null,"after":{"id":3,"v":"c","age":30},"op":"c","ts_ms":3,"source":{"db":"db","table":"users"}}""")
     q.processAllAvailable()
     q.stop()
-    assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
     assert(sink.info(tid).get.fieldNames === Seq("id", "v", "age"))
     assert(sink.results(tid).toSet === Set(
       "db.users:1;a;null", "db.users:2;b;null", "db.users:3;c;30"))
@@ -827,7 +827,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(
       """{"before":null,"after":{"id":1,"n":5},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""")
     q.processAllAvailable()
-    assert(sp.upstream.evolvedInfo(tid).get.schema("n").dataType ===
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.schema("n").dataType ===
       org.apache.spark.sql.types.LongType)
     // the same field arrives as a string: widen long -> string through the
     // merging lattice, decode THIS batch with the widened schema
@@ -835,7 +835,7 @@ class StreamingSpec extends SparkSpec {
       """{"before":null,"after":{"id":2,"n":"x"},"op":"c","ts_ms":2,"source":{"db":"db","table":"users"}}""")
     q.processAllAvailable()
     q.stop()
-    assert(sp.upstream.evolvedInfo(tid).get.schema("n").dataType === StringType)
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.schema("n").dataType === StringType)
     assert(sink.info(tid).get.schema("n").dataType === StringType)
     assert(sink.results(tid).toSet === Set("db.users:1;5", "db.users:2;x"))
   }
@@ -852,13 +852,13 @@ class StreamingSpec extends SparkSpec {
     // heartbeat-style envelope with no before/after: nothing to infer from
     mem.addData("""{"op":"h","ts_ms":0,"source":{"db":"db","table":"users"}}""")
     q.processAllAvailable()
-    assert(sp.upstream.evolvedInfo(tid).isEmpty)
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).isEmpty)
     assert(sink.info(tid).isEmpty)
     mem.addData(
       """{"before":null,"after":{"id":1,"v":"a"},"op":"c","ts_ms":1,"source":{"db":"db","table":"users"}}""")
     q.processAllAvailable()
     q.stop()
-    assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v"))
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("id", "v"))
     assert(sink.results(tid) === Seq("db.users:1;a"))
   }
 
@@ -878,16 +878,16 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     val uid = TableId.schemaTable("db", "users")
     val oid = TableId.schemaTable("db", "orders")
-    assert(sp.upstream.evolvedInfo(uid).get.fieldNames === Seq("id", "v"))
-    assert(sp.upstream.evolvedInfo(oid).get.fieldNames === Seq("amt", "id"))
+    assert(sp.runner.sourcePlane.evolvedInfo(uid).get.fieldNames === Seq("id", "v"))
+    assert(sp.runner.sourcePlane.evolvedInfo(oid).get.fieldNames === Seq("amt", "id"))
     // a field appears on ONE table: only that table's schema widens
     mem.addData(
       """{"before":null,"after":{"id":2,"v":"b","vip":true},"op":"c","ts_ms":3,"source":{"db":"db","table":"users"}}""",
       """{"before":{"id":10,"amt":100},"after":{"id":10,"amt":150},"op":"u","ts_ms":4,"source":{"db":"db","table":"orders"}}""")
     q.processAllAvailable()
     q.stop()
-    assert(sp.upstream.evolvedInfo(uid).get.fieldNames === Seq("id", "v", "vip"))
-    assert(sp.upstream.evolvedInfo(oid).get.fieldNames === Seq("amt", "id"))
+    assert(sp.runner.sourcePlane.evolvedInfo(uid).get.fieldNames === Seq("id", "v", "vip"))
+    assert(sp.runner.sourcePlane.evolvedInfo(oid).get.fieldNames === Seq("amt", "id"))
     assert(sink.results(uid).toSet === Set("db.users:1;a;null", "db.users:2;b;true"))
     assert(sink.results(oid).toSet === Set("db.orders:150;10"))
   }
@@ -909,7 +909,7 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath),
       tid, primaryKeys = Seq("id"), checkpointLocation = Some(cp))
     q1.awaitTermination(60000)
-    assert(sp1.upstream.evolvedInfo(tid).get.fieldNames === Seq("age", "id", "v"))
+    assert(sp1.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("age", "id", "v"))
     assert(sink1.results(tid) === Seq("db.users:10;1;a"))
 
     // run 2 (fresh pipeline, same checkpoint): a narrower row must decode
@@ -923,7 +923,7 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fileJsonStream(spark, feed.getAbsolutePath),
       tid, primaryKeys = Seq("id"), checkpointLocation = Some(cp))
     q2.awaitTermination(60000)
-    assert(sp2.upstream.evolvedInfo(tid).get.fieldNames === Seq("age", "id", "v"))
+    assert(sp2.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("age", "id", "v"))
     assert(sp2.runner.registry.evolvedInfo(tid).get.fieldNames === Seq("age", "id", "v"))
     assert(sink2.results(tid) === Seq("db.users:null;9;z"))
   }
@@ -945,7 +945,7 @@ class StreamingSpec extends SparkSpec {
       StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Canal,
       Seq(tid -> tableInfo))
     q.awaitTermination(60000)
-    assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
     assert(sink.results(tid).toSet === Set("db.users:1;a2;11"))
   }
 
@@ -1001,8 +1001,8 @@ class StreamingSpec extends SparkSpec {
       Seq(tid -> tableInfo, tidB -> infoB))
     q.awaitTermination(60000)
     // users evolved by its DDL; orders untouched
-    assert(sp.upstream.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
-    assert(sp.upstream.evolvedInfo(tidB).get.fieldNames === Seq("id", "amt"))
+    assert(sp.runner.sourcePlane.evolvedInfo(tid).get.fieldNames === Seq("id", "v", "age"))
+    assert(sp.runner.sourcePlane.evolvedInfo(tidB).get.fieldNames === Seq("id", "amt"))
     assert(sink.results(tid).toSet === Set(
       "db.users:1;a2;11", "db.users:2;b;null"))
     assert(sink.results(tidB).toSet === Set("db.orders:10;150"))
