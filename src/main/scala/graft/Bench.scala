@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, struct, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -10,17 +11,6 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def consume(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Unit = {
-      // consume the FULL output (hash-agg over every column): .count() lets
-      // Catalyst prune all columns, so projection-heavy queries would
-      // measure little more than the scan
-      val df = fn(spark, dir)
-      import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
-      // bit_xor, not sum: summing random 64-bit hashes overflows ANSI longs
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)))).collect()
-      ()
-    }
     // JMH-style warmup: one full pass of the suite (and the stream phase)
     // at the smallest SF, so the measured pass reports warm steady-state —
     // first-run codegen/JIT compilation otherwise dominates (probe: q1_agg
@@ -39,7 +29,7 @@ object Bench {
     val mfMem = machineFactorMemory()
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
     SparkEntry.queries.foreach { case (name, fn) =>
-      try consume(fn, warmDir)
+      try consume(fn(spark, warmDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
     }
@@ -64,7 +54,7 @@ object Bench {
     // a regression is only real if it shows in both runs
     def measuredPass(): Pass =
       timedPass(SparkEntry.queries.keys.toSeq)(name =>
-        consume(SparkEntry.queries(name), sfDir))
+        consume(SparkEntry.queries(name)(spark, sfDir)))
     val pass1 = measuredPass()
     logCodeCache("after-pass1")
     val pass2 = measuredPass()
@@ -132,11 +122,32 @@ object Bench {
       s""""machine_factor_mt":[${f"$mfMt%.2f"},${f"$mfMtEnd%.2f"}],""" +
       s""""machine_factor_mt_threads":$mtThreads,""" +
       s""""machine_factor_mem":[${f"$mfMem%.2f"},${f"$mfMemEnd%.2f"}],""" +
+      s""""parallelism":${spark.sparkContext.defaultParallelism},""" +
+      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""warm_sf":"$warmDir",""" +
       s""""note":"q keys=qNN ids (names in SparkEntry.queries); value=sum of per-query min of 2 passes; total_min_run=best single pass; stream/ingest=best of 2; protocol in NOTES.md",""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** The full-output digest of `df` as one aggregate (one job): its row
+    * count and the bit_xor of every row's xxhash64. Hashing every column
+    * keeps Catalyst from pruning any (a bare `.count()` would let
+    * projection-heavy queries measure little more than the scan); bit_xor,
+    * not sum, because summing random 64-bit hashes overflows ANSI longs.
+    */
+  private[graft] def digest(df: DataFrame): DataFrame =
+    df.agg(count(lit(1)), bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))))
+
+  /** Collect a [[digest]]: (rows, hash), the hash 0 for an empty frame. */
+  private[graft] def rowsAndHash(digest: DataFrame): (Long, Long) = {
+    val r = digest.collect()(0)
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** Consume all of `df`: (rows, hash) of its [[digest]]. */
+  private[graft] def consume(df: DataFrame): (Long, Long) = rowsAndHash(digest(df))
 
   /** One measured pass: wall seconds of each query that ran, in name
     * order, and the names of those that threw.
@@ -309,7 +320,7 @@ object Bench {
     * micro-batch loop without the stream plumbing, so the number is the
     * OPERATOR's rate). Returns docs/s over the whole run.
     */
-  private[graft] def ingestThroughput(spark: SparkSession, sfDir: String): Long = {
+  private def ingestThroughput(spark: SparkSession, sfDir: String): Long = {
     import org.apache.spark.sql.functions.col
     try {
       val docs = Tables.load(spark, sfDir, "documents")
@@ -360,7 +371,7 @@ object Bench {
     * deployment has. Per-batch rates come from the query's progress log;
     * the spread ((max-min)/median) is reported alongside.
     */
-  private[graft] def streamThroughput(spark: SparkSession, sfDir: String): StreamResult =
+  private def streamThroughput(spark: SparkSession, sfDir: String): StreamResult =
     streamThroughput(spark, sfDir, tableCount = 1)
 
   /** `tableCount > 1` measures the MULTIPLEXED-topic shape (the
@@ -371,7 +382,7 @@ object Bench {
     * unique `ts_ms`), so DDL-free multi-table batches skip the per-batch
     * persist. `tableCount = 1` is byte-identical to the r6–r15 protocol.
     */
-  private[graft] def streamThroughput(
+  private def streamThroughput(
       spark: SparkSession, sfDir: String, tableCount: Int): StreamResult = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._

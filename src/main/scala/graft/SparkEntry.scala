@@ -1292,7 +1292,7 @@ object SparkEntry {
     // is the distinct-orderkey count over the pairs. Before r18:
     // lineitem was scanned + distinct-aggregated three times. r18
     // additionally PERSISTED this frame; the r19 interleaved A/B
-    // (Q62Probe, 5 reps) showed the persist IS the regression the r18
+    // (5 reps) showed the persist IS the regression the r18
     // driver artifact caught (old 3-scan 1.15 s median / persist 1.72 /
     // no-persist 1.07). Note the initial plan dump still shows the
     // distinct subtree duplicated per consumer (whether AQE stage/

@@ -70,14 +70,13 @@ object DebeziumJson {
         .as(Changelog.MetaCol))
   }
 
-  /** The `from_json` parse schema for a consume configuration — the one
-    * [[decode]] parses with (DecodeProfile probes it too): wire-typed
+  /** The `from_json` parse schema [[decode]] parses with: wire-typed
     * payload sides under `connectWire`, and a
     * `payload` envelope wrapper alongside the flat fields under
     * `schemaEnvelope` (so flat and schema-wrapped records coexist on one
     * topic; each position coalesces).
     */
-  def parseSchema(payload: StructType, connectWire: Boolean,
+  private def parseSchema(payload: StructType, connectWire: Boolean,
       schemaEnvelope: Boolean): StructType = {
     val parsePayload =
       if (connectWire)

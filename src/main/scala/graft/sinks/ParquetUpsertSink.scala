@@ -72,6 +72,10 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
     mergeOnRead: Boolean = false, autoCompactDeltas: Int = 0,
     autoCompactReadAmp: Double = 0.0) extends DataSink {
 
+  // a table's bucket count is pinned in its `_meta` marker at first write,
+  // so a bad count must fail here, before any table is written
+  require(numBuckets >= 1, s"numBuckets must be at least 1: $numBuckets")
+
   private val BucketCol = "__bucket"
   private val SwapMarker = "_SWAP"
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Bench.consume
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,10 +34,6 @@ object AnnWall {
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.Similarity
 
-    def consume(df: DataFrame): Unit = {
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))))
-        .collect(); ()
-    }
     def timeIt[T](f: => T): (Double, T) = {
       val t0 = System.nanoTime(); val r = f
       ((System.nanoTime() - t0) / 1e9, r)

@@ -159,9 +159,14 @@ object Cli {
       case "parquet" =>
         val path = pd.sink.options.getOrElse("path",
           throw new IllegalArgumentException("sink.path is required for parquet"))
+        def opt[T](key: String, expected: String)(parse: String => Option[T]): Option[T] =
+          pd.sink.options.get(key).map(v => parse(v.trim).getOrElse(
+            throw new IllegalArgumentException(s"sink.$key must be $expected: $v")))
         val p = new ParquetUpsertSink(spark, path,
-          numBuckets = pd.sink.options.get("buckets").map(_.toInt).getOrElse(16),
-          mergeOnRead = pd.sink.options.get("merge-on-read").exists(_.toBoolean))
+          numBuckets = opt("buckets", "an integer of at least 1")(
+            _.toIntOption.filter(_ >= 1)).getOrElse(16),
+          mergeOnRead = opt("merge-on-read", "true or false")(
+            _.toBooleanOption).getOrElse(false))
         (p, () => Seq(s"parquet tables under $path"))
       case "kafka" =>
         val path = pd.sink.options.getOrElse("path",

@@ -85,9 +85,7 @@ object MorBench {
         peak = math.max(peak, pending)
         if ((i + 1) % readEvery == 0) {
           val t1 = System.nanoTime()
-          val df = sink.read(tid)
-          df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))))
-            .collect()
+          graft.Bench.consume(sink.read(tid))
           reads += (System.nanoTime() - t1) / 1e9
         }
       }

@@ -117,7 +117,7 @@ object SkewCurve {
       if (cold) spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val df = ops(name)(spark, dir)
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)))).collect()
+      graft.Bench.consume(df)
       (System.nanoTime() - t0) / 1e9
     }
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Bench.consume
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,11 +49,6 @@ object SpanDeltaBench {
 
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def consume(df: DataFrame): Unit = {
-    df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))))
-      .collect(); ()
   }
 
   private def run(spark: SparkSession, sfDir: String,

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -7,9 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
-/** Minimal bridge into `private[sql]` Spark surface: Column <-> catalyst
-  * Expression, the session SQL parser, and DataFrames over catalyst rows
-  * (streaming ones included). Lives under
+/** Minimal bridge into `private[sql]` and `private[spark]` Spark surface:
+  * Column <-> catalyst Expression, the session SQL parser, DataFrames over
+  * catalyst rows (streaming ones included) and the listener bus's drain
+  * barrier. Lives under
   * `org.apache.spark.sql` solely for access; everything else in this
   * project is under `graft`.
   */
@@ -39,4 +41,9 @@ object SparkInternals {
       schema: StructType, isStreaming: Boolean): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema, isStreaming)
+
+  /** Block until every event posted so far reached its listeners, so a
+    * counter read after an action includes that action's events.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -597,6 +597,32 @@ class PipelineSpec extends SparkSpec {
     assert(ex.getMessage.contains("apply to format debezium-json only, not canal-json"))
   }
 
+  test("CLI names the parquet sink option whose value is malformed") {
+    val dir = java.nio.file.Files.createTempDirectory("cli_sink_opts").toFile
+    def run(sinkOpts: String): String = {
+      val yaml =
+        s"""source:
+           |  type: debezium-file
+           |  path: ${dir.getAbsolutePath}
+           |  table: db.t
+           |  schema.ddl: "CREATE TABLE t (id BIGINT PRIMARY KEY, v INT)"
+           |sink:
+           |  type: parquet
+           |  path: ${dir.getAbsolutePath}/out
+           |  $sinkOpts
+           |pipeline:
+           |  name: cli_sink_opts
+           |""".stripMargin
+      intercept[IllegalArgumentException](graft.tools.Cli.run(spark, yaml)).getMessage
+    }
+    assert(run("buckets: x") === "sink.buckets must be an integer of at least 1: x")
+    assert(run("buckets: 0") === "sink.buckets must be an integer of at least 1: 0")
+    // quoted: a bare YAML 1.1 `yes` already reads as the boolean true
+    assert(run("merge-on-read: \"yes\"") === "sink.merge-on-read must be true or false: yes")
+    // nothing reached the sink directory
+    assert(!new java.io.File(dir, "out").exists())
+  }
+
   test("CLI mongo-file source: change-stream envelopes route per collection") {
     val dir = java.nio.file.Files.createTempDirectory("cli_mongo").toFile
     val feed = new java.io.File(dir, "feed"); feed.mkdirs()

@@ -35,6 +35,27 @@ class ParquetUpsertSpec extends SparkSpec {
       === Seq((1L, "a2"), (3L, "c")))
   }
 
+  test("a bucket count below 1 is rejected at construction, before any marker is written") {
+    val dir = java.nio.file.Files.createTempDirectory("pqsink_buckets").toFile
+    for (n <- Seq(0, -3)) {
+      val ex = intercept[IllegalArgumentException](new ParquetUpsertSink(
+        spark, dir.getAbsolutePath, numBuckets = n, mergeOnRead = true))
+      assert(ex.getMessage.contains(s"numBuckets must be at least 1: $n"))
+    }
+    assert(dir.list().isEmpty)
+    // one bucket is a valid (unbucketed) layout
+    val sink = new ParquetUpsertSink(spark, dir.getAbsolutePath, numBuckets = 1,
+      mergeOnRead = true)
+    val tid = TableId.parse("db.t")
+    val info = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
+      primaryKeys = Seq("id"))
+    sink.write(tid, Seq((1L, "a", "+I", 1L), (2L, "b", "+I", 2L))
+      .toDF("id", "v", Changelog.OpCol, Changelog.SeqCol), info)
+    sink.compact(tid, info)
+    assert(sink.read(tid).orderBy("id").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
+  }
+
   test("replayed batch is idempotent (at-least-once delivery, exactly-once state)") {
     val dir = java.nio.file.Files.createTempDirectory("pqsink_replay").toFile
     val sink = new ParquetUpsertSink(spark, dir.getAbsolutePath)

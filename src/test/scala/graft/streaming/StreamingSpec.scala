@@ -971,7 +971,7 @@ class StreamingSpec extends SparkSpec {
         StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), WireFormat.Mongo,
         Seq(tid -> tableInfo))
       q.awaitTermination(60000)
-      org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.graft.SparkInternals.drainListenerBus(spark.sparkContext)
       q
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(sink.results(tid).toSet === Set("db.users:1;a", "db.users:2;b"))
