@@ -863,18 +863,24 @@ object SparkEntry {
 
   /** Near-dup cluster resolution (Dedup.nearDupClusters): the exact-
     * verified MinHash pair set (q22's operator) resolves to connected
-    * components by min-label propagation; every document reports its
-    * cluster representative (itself when canonical/singleton) — the
-    * "keep one per cluster" decision a dedup pipeline actually applies.
+    * components (union-find over one bounded collect of the pairs at
+    * these sizes); every document reports its cluster representative
+    * (itself when canonical/singleton) — the "keep one per cluster"
+    * decision a dedup pipeline actually applies. The pairs' signature
+    * frame is released once the clusters are resolved, so the query
+    * leaves nothing in the storage pool. No `fanOut`: at sf0.01 and
+    * sf0.1 the repartition cost two build jobs and was slower warm.
     * Oracle: DuckDB recursive transitive closure over the same exact-
     * Jaccard pair set.
     */
   private def q45DedupResolve(s: SparkSession, dir: String): DataFrame = {
-    val docs = fanOut(t(s, dir, "documents"))
-    val pairs = graft.ops.Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.6)
-    graft.ops.Dedup.nearDupClusters(docs.select(col("doc_id")), "doc_id", pairs)
+    val docs = t(s, dir, "documents")
+    val (pairs, sigs) = graft.ops.Dedup.minhashLshPairsTracked(
+      docs, "doc_id", "text", threshold = 0.6)
+    try graft.ops.Dedup.nearDupClusters(docs.select(col("doc_id")), "doc_id", pairs)
       .select(col("id").as("doc_id"), col("rep").as("cluster_rep"))
       .orderBy(col("doc_id"))
+    finally { sigs.unpersist(false); () }
   }
 
   /** PII detection + redaction (ops.Pii): per-kind match counts and the

@@ -18,7 +18,10 @@ import org.apache.spark.sql.functions._
   * queries: run one action, then `spark.catalog.clearCache()` (or hold
   * and `unpersist()` the returned frame's caches). Per-micro-batch loops
   * must use [[Dedup.incrementalKeep]], which materializes eagerly and
-  * releases its own caches every batch.
+  * releases its own caches every batch. [[Dedup.nearDupClusters]]
+  * consumes its pair plan inside the call, so a caller holding the
+  * plan's signature frame ([[Dedup.minhashLshPairsTracked]]) unpersists
+  * it as soon as the clusters are returned; q45 does.
   */
 object Dedup {
 
@@ -71,9 +74,6 @@ object Dedup {
     minhashLshPairsTracked(df, idCol, textCol, threshold, bands, rowsPerBand,
       shingleSize)._1
 
-  /** [[minhashLshPairs]] plus the handle of the persisted signature frame,
-    * so per-batch callers can unpersist after materializing.
-    */
   /** The signature-estimated Jaccard prefilter shared by every LSH pair
     * generator: matching-minhash fraction concentrates around the true J
     * (std ~ sqrt(J(1−J)/numHashes)), so a generous margin kills low-J
@@ -90,10 +90,13 @@ object Dedup {
     .where(col("est") >= threshold * 0.6)
     .select("id_a", "id_b")
 
+  /** [[minhashLshPairs]] plus the handle of the persisted signature frame,
+    * so a caller that materializes the pairs can unpersist it afterwards.
+    */
   private[graft] def minhashLshPairsTracked(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, bands: Int, rowsPerBand: Int,
-      shingleSize: Int): (DataFrame, DataFrame) = {
+      threshold: Double = 0.6, bands: Int = 24, rowsPerBand: Int = 3,
+      shingleSize: Int = 3): (DataFrame, DataFrame) = {
     val numHashes = bands * rowsPerBand
 
     // The whole MinHash front end (shingle -> signature -> band hashes) is
@@ -716,20 +719,30 @@ object Dedup {
     * Returns (id, rep); a document is the cluster's canonical keeper iff
     * id == rep.
     *
-    * Two paths behind one contract: when the materialized edge list is
-    * driver-sized (<= `driverResolveMaxEdges`, default 4M ≈ 64 MB — the
-    * common case, since verified near-dup edges are a sliver of any
-    * corpus) a single collect + union-find resolves components in one
-    * pass. Past the bound, iterative min-label propagation: each round
-    * one join + one min-aggregate over edge-touched vertices; rounds =
-    * component diameter (the Pregel shape GraphFrames uses); convergence
-    * via the strictly-decreasing label sum; each round localCheckpoints
-    * so plan lineage stays flat.
+    * Two paths behind one contract, chosen by ONE bounded collect of the
+    * pair plan: at most `driverResolveMaxEdges` + 1 pair rows (default
+    * 4M ≈ 64 MB) come back to the driver. When the pair set fits — the
+    * common case, since verified near-dup pairs are a sliver of any
+    * corpus — those rows feed a union-find that resolves components in
+    * one pass, with no persist and no count. Past the bound, iterative
+    * min-label propagation: each round one join + one min-aggregate over
+    * edge-touched vertices; rounds = component diameter (the Pregel
+    * shape GraphFrames uses); convergence via the strictly-decreasing
+    * label sum; each round localCheckpoints so plan lineage stays flat.
+    * That path pays one extra pass over the pair plan: the bounded
+    * collect ran it once, and its partitioned edge persist runs it again.
     *
     * The iteration runs over edge-TOUCHED vertices only: duplicates are
     * a small fraction of any corpus, so the per-round shuffle is
     * O(edges), never O(corpus) — untouched ids join back as their own
     * representative in one final left join.
+    *
+    * Cache contract: the returned frame reads neither `pairs` nor any
+    * cache of this call. The driver path registers none; the propagation
+    * path unpersists its edge list before returning and keeps only
+    * label snapshots. A caller may release the caches its pair plan
+    * reads (the signature frame of [[minhashLshPairsTracked]]) as soon
+    * as this returns.
     *
     * Durability: `localCheckpoint` stores label snapshots in
     * NON-replicated executor storage — fast, but on a large cluster an
@@ -741,6 +754,10 @@ object Dedup {
     * most k-1 rounds of O(edges) work from the last durable snapshot.
     * 0 (the default) keeps the all-local behavior for single-node /
     * short-job use.
+    *
+    * @param driverResolveMaxEdges the most pair rows resolved on the
+    *        driver, in [0, Int.MaxValue) because a Spark limit is an Int;
+    *        0 sends every non-empty pair set down the propagation path
     */
   def nearDupClusters(ids: DataFrame, idCol: String, pairs: DataFrame,
       idA: String = "id_a", idB: String = "id_b", maxIters: Int = 50,
@@ -749,6 +766,63 @@ object Dedup {
     if (reliableCheckpointEvery > 0)
       require(ids.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "reliableCheckpointEvery needs sparkContext.setCheckpointDir(...)")
+    require(driverResolveMaxEdges >= 0 && driverResolveMaxEdges < Int.MaxValue,
+      s"driverResolveMaxEdges must be in [0, ${Int.MaxValue}), got $driverResolveMaxEdges")
+    // verified near-dup pairs are a tiny fraction of any real corpus: one
+    // limit(bound + 1) collect both decides the path and hands a
+    // driver-sized pair set to union-find, which resolves components in
+    // ONE pass instead of O(diameter) join rounds — at q45/q67 sizes every
+    // extra Spark job is pure launch overhead. The bound counts pair rows,
+    // duplicates and self-loops included; past it, the O(edges)-per-round
+    // propagation takes over (the scale path; OpsSpec pins both paths
+    // identical).
+    val bounded = pairs.select(col(idA).cast("long"), col(idB).cast("long"))
+      .limit(driverResolveMaxEdges.toInt + 1).collect()
+    val labels: DataFrame =
+      if (bounded.length <= driverResolveMaxEdges) {
+        val parent = new java.util.HashMap[Long, Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.get(r) != r) r = parent.get(r)
+          var c = x
+          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+          r
+        }
+        // a null side or a self-loop joins no two ids, on either path;
+        // union is symmetric, so a reversed or repeated pair is one edge
+        bounded.foreach { row =>
+          if (!row.isNullAt(0) && !row.isNullAt(1) && row.getLong(0) != row.getLong(1)) {
+            val (a, b) = (row.getLong(0), row.getLong(1))
+            parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+            val (ra, rb) = (find(a), find(b))
+            // smaller root wins, so every root IS its component minimum
+            if (ra < rb) parent.put(rb, ra)
+            else if (rb < ra) parent.put(ra, rb)
+          }
+        }
+        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+        parent.keySet().forEach { v =>
+          rows.add(org.apache.spark.sql.Row(v, find(v))); ()
+        }
+        ids.sparkSession.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("rep",
+            org.apache.spark.sql.types.LongType))))
+      } else propagatedLabels(pairs, idA, idB, maxIters, reliableCheckpointEvery)
+    // untouched ids (no near-dup pair) are their own representative
+    ids.select(col(idCol).as("id"))
+      .join(labels.withColumnRenamed("id", "__lid"),
+        col("id") === col("__lid"), "left")
+      .select(col("id"), coalesce(col("rep"), col("id").cast("long")).as("rep"))
+  }
+
+  /** [[nearDupClusters]]' scale path: min-label propagation over the
+    * edge-touched vertices, label snapshots per round. Returns (id, rep)
+    * for every vertex on an edge.
+    */
+  private def propagatedLabels(pairs: DataFrame, idA: String, idB: String,
+      maxIters: Int, reliableCheckpointEvery: Int): DataFrame = {
     // round 0 (the seed labels) always snapshots durably when reliable
     // checkpointing is on, so there is always a durable base to replay from
     def snapshot(df: DataFrame, round: Int): DataFrame =
@@ -769,80 +843,34 @@ object Dedup {
       .repartition(col("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // verified near-dup edges are a tiny fraction of any real corpus:
-      // when the (already materialized) edge list is driver-sized,
-      // union-find resolves components in ONE pass instead of
-      // O(diameter) join rounds — q45/q67 measure the rounds as pure
-      // job-launch overhead. Components span the collected edges only,
-      // so the 4M-edge default bound (~64 MB) caps driver memory; past
-      // it, the O(edges)-per-round propagation below takes over
-      // unchanged (the scale path; OpsSpec pins both paths identical).
-      val edgeCount = edges.count() / 2
-      val labels: DataFrame =
-        if (edgeCount <= driverResolveMaxEdges) {
-          val spark = ids.sparkSession
-          val parent = new java.util.HashMap[Long, Long]()
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.get(r) != r) r = parent.get(r)
-            var c = x
-            while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-            r
-          }
-          edges.where(col("u") < col("v"))
-            .select(col("u").cast("long"), col("v").cast("long"))
-            .collect().foreach { row =>
-              val (a, b) = (row.getLong(0), row.getLong(1))
-              parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-              val (ra, rb) = (find(a), find(b))
-              // smaller root wins, so every root IS its component minimum
-              if (ra < rb) parent.put(rb, ra)
-              else if (rb < ra) parent.put(ra, rb)
-            }
-          val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-          parent.keySet().forEach { v =>
-            rows.add(org.apache.spark.sql.Row(v, find(v))); ()
-          }
-          spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("rep",
-              org.apache.spark.sql.types.LongType))))
-        } else {
-          var labs = snapshot(
-            edges.select(col("u").as("id")).distinct()
-              .select(col("id"), col("id").cast("long").as("rep")), 0)
-          // sum over an EMPTY label set (no pairs at all) is null -> 0
-          def labelSum(df: DataFrame): Long = {
-            val v = df.agg(sum(col("rep"))).head()
-            if (v.isNullAt(0)) 0L else v.getLong(0)
-          }
-          var prevSum = labelSum(labs)
-          var iter = 0
-          var converged = false
-          while (!converged && iter < maxIters) {
-            val nmin = edges
-              .join(labs.select(col("id").as("__v"), col("rep").as("__vrep")),
-                col("v") === col("__v"))
-              .groupBy(col("u")).agg(min(col("__vrep")).as("__nrep"))
-            val next = snapshot(labs
-              .join(nmin, labs("id") === nmin("u"), "left")
-              .select(labs("id"),
-                least(labs("rep"), coalesce(col("__nrep"), labs("rep"))).as("rep")),
-              iter + 1)
-            val s = labelSum(next)
-            converged = s == prevSum
-            prevSum = s
-            labs = next
-            iter += 1
-          }
-          labs
-        }
-      // untouched ids (no near-dup pair) are their own representative
-      ids.select(col(idCol).as("id"))
-        .join(labels.withColumnRenamed("id", "__lid"),
-          col("id") === col("__lid"), "left")
-        .select(col("id"), coalesce(col("rep"), col("id").cast("long")).as("rep"))
+      var labs = snapshot(
+        edges.select(col("u").as("id")).distinct()
+          .select(col("id"), col("id").cast("long").as("rep")), 0)
+      // sum over an EMPTY label set (no pairs at all) is null -> 0
+      def labelSum(df: DataFrame): Long = {
+        val v = df.agg(sum(col("rep"))).head()
+        if (v.isNullAt(0)) 0L else v.getLong(0)
+      }
+      var prevSum = labelSum(labs)
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIters) {
+        val nmin = edges
+          .join(labs.select(col("id").as("__v"), col("rep").as("__vrep")),
+            col("v") === col("__v"))
+          .groupBy(col("u")).agg(min(col("__vrep")).as("__nrep"))
+        val next = snapshot(labs
+          .join(nmin, labs("id") === nmin("u"), "left")
+          .select(labs("id"),
+            least(labs("rep"), coalesce(col("__nrep"), labs("rep"))).as("rep")),
+          iter + 1)
+        val s = labelSum(next)
+        converged = s == prevSum
+        prevSum = s
+        labs = next
+        iter += 1
+      }
+      labs
     } finally { edges.unpersist(false); () }
   }
 

@@ -587,6 +587,71 @@ class OpsSpec extends SparkSpec {
     assert(out === Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
+  test("cluster resolution: the driver path caches nothing and runs the pair plan once") {
+    // a parquet pair plan with an exchange, like the LSH pairs; the udf
+    // counts the pair rows the plan produces
+    val dir = java.nio.file.Files.createTempDirectory("pair_plan").toFile
+    try {
+      Seq((2L, 3L), (3L, 4L), (1L, 2L), (7L, 9L), (9L, 7L)).toDF("id_a", "id_b")
+        .repartition(2).write.mode("overwrite").parquet(dir.getAbsolutePath)
+      val produced = spark.sparkContext.longAccumulator("pair rows produced")
+      val seen = udf { (a: Long) => produced.add(1); a }.asNondeterministic()
+      val pairs = spark.read.parquet(dir.getAbsolutePath).distinct()
+        .select(seen(col("id_a")).as("id_a"), col("id_b"))
+      val ids = Seq(1L, 2L, 3L, 4L, 5L, 7L, 8L, 9L).toDF("id")
+      spark.catalog.clearCache()
+      assume(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark))
+      val stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      var out: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsRunBy { out = Dedup.nearDupClusters(ids, "id", pairs) }
+      // the distinct's shuffle-map job and the bounded collect: no persist,
+      // no count, no second read of the pair plan
+      assert(jobs === 2)
+      assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
+        "nearDupClusters left a CacheManager entry behind")
+      assert(spark.sparkContext.getRDDStorageInfo.map(_.id).toSet.subsetOf(stored))
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === Map(
+        1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        5L -> 5L, 7L -> 7L, 8L -> 8L, 9L -> 7L))
+      // each pair row came out of the plan once, and the result never
+      // reads the pair plan again
+      assert(produced.value === 5L)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
+
+  test("cluster resolution: the driver bound counts pair rows, at n and n - 1") {
+    // n = 6 pair rows: a reversed pair, a duplicate row and a self-loop
+    // count toward the bound like any other row
+    val pairs = Seq((1L, 2L), (2L, 1L), (3L, 4L), (3L, 4L), (5L, 5L), (6L, 4L))
+      .toDF("id_a", "id_b")
+    val ids = (1L to 7L).toDF("id")
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L,
+      6L -> 3L, 7L -> 7L)
+    def resolve(bound: Long): (Map[Long, Long], Int) = {
+      var out: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsRunBy {
+        out = Dedup.nearDupClusters(ids, "id", pairs, driverResolveMaxEdges = bound)
+      }
+      (out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, jobs)
+    }
+    val (driver, driverJobs) = resolve(6)
+    val (propagated, propagatedJobs) = resolve(5)
+    assert(driver === expected)
+    assert(propagated === expected)
+    // the bound picks the path: only propagation snapshots labels eagerly
+    assert(driverJobs < propagatedJobs, s"$driverJobs vs $propagatedJobs")
+    val bad = intercept[IllegalArgumentException] {
+      Dedup.nearDupClusters(ids, "id", pairs, driverResolveMaxEdges = -1)
+    }
+    assert(bad.getMessage.contains("driverResolveMaxEdges"))
+    spark.catalog.clearCache()
+  }
+
   test("corpus line dedup: first occurrence survives, order kept, uniques untouched") {
     val docs = Seq(
       (1L, Seq("intro one", "COOKIE BANNER", "body a")),
@@ -1468,15 +1533,8 @@ class OpsSpec extends SparkSpec {
     val group = s"jobs-${System.nanoTime()}"
     sc.setJobGroup(group, "count the jobs of one call")
     try body finally sc.clearJobGroup()
-    // the status tracker follows the listener bus, which delivers events
-    // in order: once a later job is visible, every job of the call is too
-    val barrier = group + "-barrier"
-    sc.setJobGroup(barrier, "listener bus barrier")
-    try spark.range(1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(barrier).isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(barrier).nonEmpty)
+    // the status tracker is fed by the listener bus: drain it first
+    org.apache.spark.sql.graft.SparkInternals.drainListenerBus(sc)
     sc.statusTracker.getJobIdsForGroup(group).length
   }
 

@@ -16,18 +16,20 @@ class ProfileSpec extends SparkSpec {
   test("per-query phases, job counts and digests over the benchmark corpus") {
     val planDir = java.nio.file.Files.createTempDirectory("profile_plans").toFile
     val records = scala.collection.mutable.ArrayBuffer[Profile.Record]()
-    val failed = Profile.run(spark, dataDir, Seq("q89", "nope", "q18"), reps = 1,
+    val failed = Profile.run(spark, dataDir, Seq("q89", "nope", "q18", "q45"), reps = 1,
       planDir = Some(planDir))(records += _)
     // the unknown name is listed; the queries around it still ran
     assert(failed === Seq("nope"))
     val byQuery = records.map(r => r.query -> r).toMap
-    assert(byQuery.keySet === Set("q18_debezium_roundtrip", "q89_pq_adc"))
+    assert(byQuery.keySet === Set("q18_debezium_roundtrip", "q45_dedup_resolve", "q89_pq_adc"))
 
     val ref = reference
     byQuery.values.foreach { r =>
       assert((r.rows, r.hash) === ref(r.query), r.query)
       assert(r.rep === 1)
-      assert(Seq(r.buildMs, r.planMs, r.execMs, r.cachedMbLeft).forall(_ >= 0.0), r.json)
+      assert(Seq(r.buildMs, r.planMs, r.execMs).forall(_ >= 0.0), r.json)
+      // no query leaves data in the storage pool
+      assert(r.cachedMbLeft === 0.0, r.json)
       // the consuming aggregate is one job; stages and tasks cover the query
       assert(r.jobsExec >= 1 && r.stages >= r.jobsBuild + r.jobsExec && r.tasks >= r.stages,
         r.json)
@@ -36,9 +38,11 @@ class ProfileSpec extends SparkSpec {
       assert(plan.contains("Physical Plan"), r.query)
     }
     // the eager jobs at build: the parquet footer read that infers each
-    // input table's schema, and q89's product-quantizer training rounds
+    // input table's schema, q89's product-quantizer training rounds, and
+    // q45's near-dup pair plan run once for the bounded collect
     assert(byQuery("q18_debezium_roundtrip").jobsBuild === 1)
     assert(byQuery("q89_pq_adc").jobsBuild === 4)
+    assert(byQuery("q45_dedup_resolve").jobsBuild === 8)
     assert(byQuery("q18_debezium_roundtrip").json.contains(
       s""""rows":120,"hash":"${ref("q18_debezium_roundtrip")._2}"}"""))
   }
